@@ -23,7 +23,7 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
-WORKLOADS = ("olap_pgwire", "ingest_mixed", "corpus_pipeline")
+WORKLOADS = ("olap_pgwire", "ingest_mixed")
 
 
 def pin_env(root: str) -> None:
@@ -39,6 +39,9 @@ def pin_env(root: str) -> None:
         "SPARK_LOCAL_DIRS": os.path.join(root, "spark-local"),
         "SPARK_DRIVER_MEM": "2g",
         "YUPANA_ARTIFACTS_DIR": os.path.join(root, "artifacts"),
+        # Python workers import the engine's UDFs from the checkout
+        "PYTHONPATH": os.pathsep.join(
+            [REPO] + [p for p in [os.environ.get("PYTHONPATH")] if p]),
         "PYSPARK_SUBMIT_ARGS": (
             f"--driver-java-options '-Djava.io.tmpdir={tmp} "
             f"-XX:-UsePerfData' "
@@ -77,6 +80,16 @@ def _descendants(pid: int) -> list:
             out.append(c)
             todo.append(c)
     return out
+
+
+def cpu_ticks() -> tuple:
+    """(all, steal) CPU ticks of the host so far, from /proc/stat."""
+    try:
+        with open("/proc/stat") as f:
+            v = [int(x) for x in f.readline().split()[1:]]
+        return sum(v), v[7]
+    except (OSError, IndexError, ValueError):
+        return 0, 0
 
 
 def peak_rss_mb() -> float:
@@ -132,9 +145,11 @@ def tail(xs):
 
 
 def end_to_end(res) -> dict:
-    main = [o.latency_s for o in res.ops if o.kind == res.main_kind and o.ok]
+    main = [o.latency_s for o in res.ops
+            if o.kind == res.main_kind and o.ok and o.client >= 0]
     return {
-        "setup_s": (statistics.median(res.setup_s), "s"),
+        # the warm restarts; the cold set-up is the per-layer setup.cold_s
+        "setup_s": (statistics.median(res.setup_s[1:]), "s"),
         "latency_p50_s": (statistics.median(main) if main else 0.0, "s"),
         "throughput_per_s": (throughput(res.ops), "1/s"),
     }
@@ -146,7 +161,7 @@ def throughput(ops) -> float:
     clients."""
     work, spent = {}, {}
     for o in ops:
-        if o.ok and o.client >= 0 and o.kind != "pass":
+        if o.ok and o.client >= 0:
             work[o.client] = work.get(o.client, 0.0) + o.work
             spent[o.client] = spent.get(o.client, 0.0) + o.latency_s
     return sum(w / spent[c] for c, w in work.items() if spent[c])
@@ -161,8 +176,7 @@ def per_layer(res, tracer, spark, rss: float) -> dict:
     from perfbench import trace
 
     timed = [o for o in res.ops if o.client >= 0]
-    traced = [o for o in timed if o.traced and o.rid is not None]
-    reqs = [o for o in traced if o.kind != "pass"]
+    reqs = [o for o in timed if o.traced and o.rid is not None]
     rids = {o.rid for o in reqs}
     n = max(len(reqs), 1)
     selves = tracer.self_times(rids)
@@ -193,6 +207,8 @@ def per_layer(res, tracer, spark, rss: float) -> dict:
         "client.tail_s": (tail_v, "s"),
         "client.lock_wait_s": (mean([o.lock_wait_s for o in timed]), "s"),
         "client.upsert_p50_s": (median_of(timed, "upsert"), "s"),
+        # warm-up statements that asked a phrase for the first time
+        "index.phrase_miss_s": (median_of(res.ops, "phrase_miss"), "s"),
     }
     u, t = out["trace.p50_untraced_s"][0], out["trace.p50_traced_s"][0]
     out["trace.overhead_ratio"] = (t / u if u else 0.0, "ratio")
@@ -217,14 +233,10 @@ def per_layer(res, tracer, spark, rss: float) -> dict:
 
     sc = spark.sparkContext
     ex = {}
-    job_ids = set()
     for rid in rids:
-        groups = tracer.groups.get(rid, [])
-        for k, v in trace.exec_stats(sc, groups).items():
+        for k, v in trace.exec_stats(sc, tracer.groups.get(rid, [])).items():
             ex[k] = max(ex.get(k, 0.0), v) if k == "peak_mem_bytes" \
                 else ex.get(k, 0.0) + v
-        for g in groups:
-            job_ids.update(sc.statusTracker().getJobIdsForGroup(g))
     cores = sc.defaultParallelism
     for k, unit in (("jobs", "count"), ("stages", "count"),
                     ("tasks", "count"), ("stage_gap_s", "s"), ("run_s", "s"),
@@ -264,20 +276,34 @@ def per_layer(res, tracer, spark, rss: float) -> dict:
     out["rollup.buckets"] = (sum(tracer.counts.get(o.rid, {}).get(
         "rollup.buckets", 0) for o in recs) / nr, "count")
 
-    if res.main_kind == "pass":
-        # layers only the corpus workload reaches
-        from perfbench.workloads import CORPUS_BUNDLES
-
-        out["exec.python_bytes"] = (
-            trace.python_bytes(spark, job_ids) / n, "B")
-        for b in CORPUS_BUNDLES:
-            out[f"datapipe.{b}_s"] = (
-                mean([o.latency_s for o in reqs if o.kind == b]), "s")
-        out["artifacts.loads"] = (tracer.total("artifacts.loads"), "count")
-        out["artifacts.fits"] = (tracer.total("artifacts.fits"), "count")
     for k, v in trace.storage_info(sc).items():
         out[f"storage.{k}"] = (v, "count" if k == "cached_rdds" else "B")
     return out
+
+
+def leg_layers(leg, tracer, spark) -> dict:
+    """Per-layer metrics of the datapipe leg (zero for a workload without
+    one): the median warm pass, the artifact fits over the whole leg, and
+    the bytes that crossed the Python boundary per warm pass."""
+    from perfbench import trace
+    from perfbench.workloads import PIPE_BUNDLE
+
+    warm = [o for o in leg if o.kind == "pipe" and o.ok]
+    sc = spark.sparkContext
+    job_ids = set()
+    for o in warm:
+        for g in tracer.groups.get(o.rid, []):
+            job_ids.update(sc.statusTracker().getJobIdsForGroup(g))
+
+    return {
+        f"datapipe.{PIPE_BUNDLE}_s": (
+            statistics.median([o.latency_s for o in warm]) if warm else 0.0,
+            "s"),
+        "artifacts.fits": (float(sum(tracer.counts.get(o.rid, {}).get(
+            "artifacts.fits", 0.0) for o in leg)), "count"),
+        "exec.python_bytes": (trace.python_bytes(spark, job_ids)
+                              / max(len(warm), 1), "B"),
+    }
 
 
 def main(argv=None) -> int:
@@ -297,6 +323,7 @@ def main(argv=None) -> int:
                   f"from a checkout of the engine", file=sys.stderr)
             return 2
 
+    ticks0 = cpu_ticks()
     root = os.path.join(REPO, ".perfbench_tmp",
                         f"{args.workload}-{os.getpid()}")
     pin_env(root)
@@ -311,17 +338,23 @@ def main(argv=None) -> int:
     res = None
     try:
         res = workloads.WORKLOADS[args.workload](run)
+        spark = res.engine.spark
+        rss = peak_rss_mb()
+        if tracer:
+            metrics = per_layer(res, tracer, spark, rss)
+            leg = res.leg() if res.leg is not None else []
+            res.ops += leg
+            metrics.update(leg_layers(leg, tracer, spark))
+        else:
+            metrics = end_to_end(res)
         failures = []
         for o in res.ops:
             err = o.error if not o.ok else (o.check() if o.check else None)
             if err:
                 failures.append(f"{o.kind}: {err}")
+        run.mark("checks")
         for f in failures[:5]:
             print(f"perfbench: failed {f}", file=sys.stderr)
-        spark = res.engine.spark
-        rss = peak_rss_mb()
-        metrics = (per_layer(res, tracer, spark, rss) if tracer
-                   else end_to_end(res))
         if tracer:
             spans = args.spans or os.path.join(
                 REPO, ".perfbench_tmp", "spans",
@@ -337,9 +370,14 @@ def main(argv=None) -> int:
             "metrics": {k: {"value": v, "unit": u}
                         for k, (v, u) in metrics.items()},
         }
+        # the share of the host's CPU time a hypervisor gave to other
+        # guests during the run, a source of run-to-run spread on shared hosts
+        ticks1 = cpu_ticks()
+        steal = (ticks1[1] - ticks0[1]) / max(ticks1[0] - ticks0[0], 1)
         print(f"perfbench: {args.workload} seed={args.seed} ops={attempted} "
               f"setups={[round(x, 2) for x in res.setup_s]} "
-              f"failed_frac={len(failures) / attempted:.4f}")
+              f"failed_frac={len(failures) / attempted:.4f} "
+              f"steal={steal:.3f} phases_end_s={run.marks}")
     finally:
         if res is not None and res.engine is not None:
             res.engine.stop()

@@ -114,9 +114,6 @@ class Tracer:
                 out[s.name] += s.end - s.start
         return out
 
-    def total(self, key: str) -> float:
-        return sum(c.get(key, 0.0) for c in self.counts.values())
-
     def dump(self, path: str) -> None:
         with open(path, "w") as f:
             for s in self.spans:
@@ -142,16 +139,50 @@ def _wrap(tracer: Tracer, owner, attr: str, name: str, after=None) -> None:
     setattr(owner, attr, wrapper)
 
 
-def _dir_stats(path: str):
-    """(bytes, parquet files, partition dirs) under a table directory."""
-    nbytes, files, parts = 0, 0, set()
+def _files(path: str) -> Dict[int, int]:
+    """inode -> size of every file under a table directory."""
+    out = {}
     for root, _, names in os.walk(path):
         for n in names:
-            nbytes += os.path.getsize(os.path.join(root, n))
-            if n.endswith(".parquet"):
-                files += 1
-                parts.add(root)
-    return nbytes, files, max(len(parts), 1)
+            try:
+                st = os.stat(os.path.join(root, n))
+            except OSError:
+                continue
+            out[st.st_ino] = st.st_size
+    return out
+
+
+def _wrap_table_write(tracer: Tracer, owner, attr: str) -> None:
+    """Wrap a method ``(self, table, ...)`` that rewrites a warehouse
+    table: count the bytes of the files the call created (inodes that
+    were not under the table before it), and the table's parquet files
+    and partition directories after it."""
+    orig = getattr(owner, attr)
+
+    @functools.wraps(orig)
+    def wrapper(wh, table, *args, **kwargs):
+        idx = tracer.begin("writes.write")
+        if idx is None:
+            return orig(wh, table, *args, **kwargs)
+        before = _files(wh.path(table))
+        try:
+            out = orig(wh, table, *args, **kwargs)
+        finally:
+            tracer.end(idx)
+        after = _files(wh.path(table))
+        tracer.count("writes.bytes_written", sum(
+            size for ino, size in after.items() if ino not in before))
+        files, parts = 0, set()
+        for root, _, names in os.walk(wh.path(table)):
+            for n in names:
+                if n.endswith(".parquet"):
+                    files += 1
+                    parts.add(root)
+        tracer.count("writes.files", files)
+        tracer.count("writes.partitions", max(len(parts), 1))
+        return out
+
+    setattr(owner, attr, wrapper)
 
 
 def install(tracer: Tracer) -> None:
@@ -179,21 +210,12 @@ def install(tracer: Tracer) -> None:
     _wrap(tracer, Warehouse, "upsert", "writes.upsert")
     _wrap(tracer, rollup, "recalculate", "rollup.recalc")
 
-    def on_write(tr, _out, wh, table, *a, **k):
-        nbytes, files, parts = _dir_stats(wh.path(table))
-        tr.count("writes.bytes_written", nbytes)
-        tr.count("writes.files", files)
-        tr.count("writes.partitions", parts)
-        tr.count("writes.writes")
-
-    _wrap(tracer, Warehouse, "_write", "writes.write", after=on_write)
+    _wrap_table_write(tracer, Warehouse, "_write")
     _wrap(tracer, rollup, "run_rollup", "rollup.bucket",
           after=lambda tr, *a, **k: tr.count("rollup.buckets"))
 
     for attr in ("load_arrays", "load_json", "load_df"):
-        _wrap(tracer, ArtifactStore, attr, "artifacts.load",
-              after=lambda tr, out, *a, **k: tr.count(
-                  "artifacts.loads", out is not None))
+        _wrap(tracer, ArtifactStore, attr, "artifacts.load")
     for attr in ("save_arrays", "save_json", "save_df"):
         _wrap(tracer, ArtifactStore, attr, "artifacts.save",
               after=lambda tr, *a, **k: tr.count("artifacts.fits"))

@@ -1,14 +1,17 @@
-"""The three workloads: set-up, closed-loop timed phase, untimed checks.
+"""The workloads: set-up, closed-loop timed phase, untimed checks.
 
 Each workload function takes a ``Run`` (paths, seed, duration, tracer) and
 returns a ``Result``: per-operation records plus the set-up times.  The
-timed phase drives the engine the way its users do: pgwire clients for
-analysts and writers, in-process bundle calls for corpus pipelines.
+timed phase drives the engine the way its users do, through pgwire
+clients.  Traced ``olap_pgwire`` runs end with a datapipe leg: in-process
+bundle calls, as a corpus pipeline makes them.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import gc
+import itertools
 import os
 import threading
 import time
@@ -20,14 +23,15 @@ import numpy as np
 from . import datagen, templates
 from .pgclient import PgClient
 
-SETUPS = 3               # set-ups per run; setup_s is their median
+_BEGIN = time.perf_counter()
+SETUPS = 3               # one cold set-up, then warm restarts
 BATCH_ROWS = 200         # rows per UPSERT batch
 OVERWRITE_SHARE = 0.2    # share of a batch that rewrites existing keys
-RECALC_EVERY = 1         # batches between incremental rollup recalcs
-INGEST_SF = 0.1
-PHRASE_POOL = 2          # inverted-index phrases per olap client
-CORPUS_DOCS = 1000
-CORPUS_BUNDLES = ("dp_neardup_scale",)
+INGEST_SF = 0.02
+PHRASE_POOL = 2          # inverted-index phrases a run draws from
+PIPE_DOCS = 300          # documents in the datapipe leg's corpus
+PIPE_BUNDLE = "dp_neardup_scale"
+PIPE_PASSES = 3          # warm passes after the first call
 
 
 @dataclass
@@ -56,59 +60,60 @@ class Run:
     seconds: float
     tracer: object = None        # trace.Tracer when traced
     t0: float = field(default_factory=time.perf_counter)
+    marks: Dict[str, float] = field(default_factory=dict)
 
-    def traced_now(self, start: float, now: float) -> bool:
-        """Traced runs alternate untraced and traced quarters of the timed
-        phase, so the tracing overhead is measured in the same run."""
-        if self.tracer is None:
-            return False
-        return int((now - start) / (self.seconds / 4)) % 2 == 1
+    def mark(self, phase: str) -> None:
+        """Record when a phase ended, in seconds since this module was
+        imported (reported on the summary line, to show where a run's time
+        goes)."""
+        self.marks[phase] = round(time.perf_counter() - _BEGIN, 1)
 
 
 @dataclass
 class Result:
     ops: List[Op]
-    setup_s: List[float]
+    setup_s: List[float]         # the cold set-up, then the warm restarts
     main_kind: str
     engine: object = None
+    leg: Optional[Callable[[], List[Op]]] = None   # traced runs only
 
 
 # -- engine lifecycle --------------------------------------------------------
 class Engine:
-    """A Spark session, a Tsdb over the generated tables and, for the wire
-    workloads, a pgwire server on an ephemeral port."""
+    """A Spark session, a Tsdb over the generated tables and a pgwire
+    server on an ephemeral port."""
 
-    def __init__(self, data_dir: str, warehouse_root: Optional[str] = None,
-                 serve: bool = True):
+    def __init__(self, data_dir: str, warehouse_root: Optional[str] = None):
         from yupana_spark import Tsdb, default_schema
+        from yupana_spark.server.pgwire import PgWireServer
         from yupana_spark.session import get_spark
 
         self.spark = get_spark("yupana-perfbench")
         self.spark.sparkContext.setLogLevel("ERROR")
         self.tsdb = Tsdb(self.spark, default_schema(), data_dir,
                          warehouse_root=warehouse_root)
-        self.server, self.port = None, None
-        if serve:
-            from yupana_spark.server.pgwire import PgWireServer
-
-            self.server = PgWireServer(self.tsdb, port=0)
-            self.port = self.server.start()
+        self.server = PgWireServer(self.tsdb, port=0)
+        self.port = self.server.start()
 
     def stop(self) -> None:
-        if self.server is not None:
-            self.server.stop()
+        self.server.stop()
         self.spark.stop()
 
 
 def _setups(run: Run, start: Callable[[int], Engine]) -> tuple:
     """SETUPS set-ups, each from a stopped Spark context to the first
-    request answered; the first also pays the JVM launch and imports and
-    is timed from the run's start.  Returns (engine, times)."""
+    request answered.  The first is cold: it also pays the imports and the
+    JVM launch, and is timed from the run's start.  The others restart the
+    engine in the running JVM; stopping the previous engine and collecting
+    garbage happen before their clock starts.  Returns (engine, times)."""
     times, eng = [], None
     for i in range(SETUPS):
-        t = run.t0 if i == 0 else time.perf_counter()
         if eng is not None:
+            jvm = eng.spark._jvm
             eng.stop()
+            gc.collect()
+            jvm.System.gc()
+        t = run.t0 if i == 0 else time.perf_counter()
         if run.tracer is not None:
             run.tracer.bind(run.tracer.new_request())
         try:
@@ -117,6 +122,7 @@ def _setups(run: Run, start: Callable[[int], Engine]) -> tuple:
             if run.tracer is not None:
                 run.tracer.bind(None)
         times.append(time.perf_counter() - t)
+        run.mark(f"setup{i}")
     return eng, times
 
 
@@ -131,8 +137,7 @@ def _closed_loop(run: Run, clients: List[Callable[[bool], List[Op]]],
     clock = {}
 
     def begin():
-        clock["start"] = time.perf_counter()
-        clock["deadline"] = clock["start"] + run.seconds
+        clock["deadline"] = time.perf_counter() + run.seconds
 
     barrier = threading.Barrier(len(clients), action=begin)
     errors: List[BaseException] = []
@@ -144,12 +149,15 @@ def _closed_loop(run: Run, clients: List[Callable[[bool], List[Op]]],
                 with lock:
                     ops.extend(done)
             barrier.wait()
-            start = clock["start"]
-            while True:
-                now = time.perf_counter()
-                if now >= clock["deadline"]:
+            if i == 0:
+                run.mark("warmup")
+            # traced runs trace every second step of each client, from
+            # the first, so the tracing overhead is measured in the same
+            # run and a client with a single step is still traced
+            for n in itertools.count():
+                if time.perf_counter() >= clock["deadline"]:
                     return
-                done = step(run.traced_now(start, now))
+                done = step(run.tracer is not None and n % 2 == 0)
                 for op in done:
                     op.client = i
                 with lock:
@@ -166,6 +174,7 @@ def _closed_loop(run: Run, clients: List[Callable[[bool], List[Op]]],
         t.join()
     if errors:
         raise errors[0]
+    run.mark("timed")
     return ops
 
 
@@ -310,22 +319,30 @@ def olap_pgwire(run: Run) -> Result:
     eng, setup = _setups(run, start)
     con = _duck(data)
 
+    # A seeded popularity order of the phrases.  The PHRASE_POOL most
+    # popular are asked during warm-up (phrase-memo misses, untimed and
+    # reported per layer), and timed statements draw with Zipf weights
+    # over them, so every timed inverted-index statement is a memo hit:
+    # a miss costs about five plain statements, and a run's one or two
+    # inverted-index draws would set its throughput by how many missed.
+    popular = [templates.PHRASES[i] for i in
+               rng.permutation(len(templates.PHRASES))][:PHRASE_POOL]
+
     def client(k):
-        # each client's phrase pool is asked once in warm-up, so timed
-        # inverted-index statements hit the phrase memo and a run's cost
-        # does not hinge on how many new phrases its draws happened to hit
-        pool = templates.PHRASES[k:2 * PHRASE_POOL:2]
         cmix = templates.Mix(np.random.default_rng([run.seed, k]),
-                             phrases=pool)
-        # warm-up: the clients split one pass over the templates
-        warm = [("inverted_index", p) for p in pool] + [
+                             phrases=popular)
+        # warm-up: the clients split one pass over the templates, and the
+        # popular phrases
+        warm = [("inverted_index", p) for p in popular[k::2]] + [
             (t, None) for t in sorted(templates.TEMPLATES)[k::2]
             if t != "inverted_index"]
         c = PgClient(eng.port)
 
         def step(traced):
-            name, yql, duck = cmix.draw(*(warm.pop() if warm else ()))
-            op, r = _wire_op(c, "select", yql, traced, run)
+            name, phrase = warm.pop() if warm else (None, None)
+            name, yql, duck = cmix.draw(name, phrase)
+            op, r = _wire_op(c, "phrase_miss" if phrase else "select", yql,
+                             traced, run)
             if op.ok:
                 op.check = _duck_check(con, duck, r.rows)
             return [op]
@@ -338,7 +355,10 @@ def olap_pgwire(run: Run) -> Result:
     finally:
         for c, _, _ in conns:
             c.close()
-    return Result(ops, setup, "select", engine=eng)
+    res = Result(ops, setup, "select", engine=eng)
+    if run.tracer is not None:
+        res.leg = lambda: pipeline_leg(run, eng.spark)
+    return res
 
 
 # -- ingest_mixed --------------------------------------------------------------
@@ -416,11 +436,16 @@ class _Writer:
                "value) VALUES " + ", ".join(vals))
         return day, sql
 
-    def readback(self, day: dt.date):
+    @staticmethod
+    def day_sql(day: dt.date) -> str:
         a = dt.datetime.combine(day, dt.time())
         b = a + dt.timedelta(days=1)
-        sql = (f"SELECT event_id, user_id, event_type, value FROM events "
-               f"WHERE time >= TIMESTAMP '{a}' AND time < TIMESTAMP '{b}'")
+        return (f"SELECT event_id, user_id, event_type, value FROM events "
+                f"WHERE time >= TIMESTAMP '{a}' AND time < TIMESTAMP '{b}'")
+
+    def readback(self, day: dt.date):
+        """(SELECT of one day, its rows under the model)."""
+        sql = self.day_sql(day)
         want = [(str(eid), str(u), et, repr(float(v)))
                 for (ts, u, et), (eid, v) in self.days[day].items()]
         return sql, want
@@ -439,33 +464,32 @@ def ingest_mixed(run: Run) -> Result:
     writer = _Writer(data, run.seed)
 
     def start(i):
-        """The first set-up primes a fresh warehouse with one UPSERT and
-        builds the rollup; the restarts reopen that warehouse, as a
-        redeployed server would, and answer a read-back."""
+        """Each set-up opens the warehouse and answers a read-back."""
         eng = Engine(data, warehouse_root=wh)
         c = PgClient(eng.port)
-        if i == 0:
-            day, sql = writer.batch()
-            state["day"] = day
-            r = c.query(sql)
-            if r.error:
-                raise RuntimeError(f"priming UPSERT failed: {r.error}")
-        r = c.query(writer.readback(state["day"])[0])
+        r = c.query(writer.day_sql(dt.date(2024, 1, 1 + i)))
         c.close()
         if r.error:
             raise RuntimeError(f"set-up read-back failed: {r.error}")
-        if i == 0:
-            recalculate(eng.tsdb.warehouse, rollup)
-            state["recalc_at"] = dt.datetime.utcnow()
         return eng
 
     eng, setup = _setups(run, start)
     wc, rc = PgClient(eng.port), PgClient(eng.port)
-    # An UPSERT swaps the table directory, and a SELECT planned before the
-    # swap fails on the files it listed (Warehouse._swap_and_invalidate:
-    # callers that need isolation serialize writes with reads).  The
-    # reader therefore never runs a statement while an UPSERT is in
-    # flight; the time each side waits is reported as lock_wait_s.
+    # Priming, untimed: one UPSERT into the fresh warehouse, its checked
+    # read-back, and the full rollup build.  It is also the writer's
+    # warm-up: the first UPSERT of a process pays most of the write
+    # path's one-time costs.
+    day, sql = writer.batch()
+    prime = _wire_op(wc, "upsert", sql, False, run)[0]
+    prime.work = 0.0
+    rsql, want = writer.readback(day)
+    rop, r = _wire_op(wc, "readback", rsql, False, run)
+    rop.work = 0.0
+    if rop.ok:
+        rop.check = lambda rows=r.rows: same_rows(rows, want)
+    recalculate(eng.tsdb.warehouse, rollup)
+    state["recalc_at"] = dt.datetime.utcnow()
+    run.mark("prime")
     swap_lock = _TurnLock()
     rmix = templates.Mix(np.random.default_rng([run.seed, 7]),
                          templates.EVENT_TEMPLATES)
@@ -484,20 +508,19 @@ def ingest_mixed(run: Run) -> Result:
         rop.work = 0.0
         if rop.ok:
             rop.check = lambda rows=r.rows, want=want: same_rows(rows, want)
-        out = [op, rop]
-        if writer.batches % RECALC_EVERY == 0:
-            since, state["recalc_at"] = state["recalc_at"], \
-                dt.datetime.utcnow()
-            with _InProcess(run, eng.spark, traced) as call:
-                t = time.perf_counter()
-                try:
-                    recalculate(eng.tsdb.warehouse, rollup, since=since)
-                    err = None
-                except Exception as exc:  # noqa: BLE001 - a failed op
-                    err = repr(exc)
-            out.append(Op("recalc", time.perf_counter() - t, ok=err is None,
-                          traced=traced, error=err, rid=call.rid, work=0.0))
-        return out
+        # an incremental recalc after every batch, so every step does the
+        # same work and the rollup is current when the timed phase ends
+        since, state["recalc_at"] = state["recalc_at"], dt.datetime.utcnow()
+        with _InProcess(run, eng.spark, traced) as call:
+            t = time.perf_counter()
+            try:
+                recalculate(eng.tsdb.warehouse, rollup, since=since)
+                err = None
+            except Exception as exc:  # noqa: BLE001 - a failed op
+                err = repr(exc)
+        return [op, rop, Op("recalc", time.perf_counter() - t,
+                            ok=err is None, traced=traced, error=err,
+                            rid=call.rid, work=0.0)]
 
     def read_step(traced):
         _, yql, _ = rmix.draw()
@@ -509,14 +532,13 @@ def ingest_mixed(run: Run) -> Result:
         return [op]
 
     try:
-        ops = _closed_loop(run, [write_step, read_step],
-                           [2, len(templates.EVENT_TEMPLATES)])
+        ops = _closed_loop(run, [write_step, read_step], [0, 1])
     finally:
         wc.close()
         rc.close()
-    # rollup totals after a final incremental recalc must equal a direct
+    # rollup totals after the last incremental recalc must equal a direct
     # aggregate over the live table
-    recalculate(eng.tsdb.warehouse, rollup, since=state["recalc_at"])
+    ops += [prime, rop]
     ops.append(Op("rollup_check", 0.0, work=0.0,
                   check=lambda: _rollup_check(eng, rollup)))
     return Result(ops, setup, "select", engine=eng)
@@ -543,45 +565,33 @@ def _rollup_check(eng: Engine, rollup) -> Optional[str]:
                      [tuple(map(str, r)) for r in want])
 
 
-# -- corpus_pipeline -----------------------------------------------------------
-def corpus_pipeline(run: Run) -> Result:
-    data = os.path.join(run.root, "data")
-    datagen.generate(data, run.seed, sf=0.01, n_docs=CORPUS_DOCS)
-    run.t0 = time.perf_counter()
+# -- datapipe leg -----------------------------------------------------------
+def pipeline_leg(run: Run, spark) -> List[Op]:
+    """A corpus pipeline's calls, after the timed phase of a traced run:
+    ``PIPE_BUNDLE`` from ``__spark_entry__.queries()`` over a generated
+    corpus into a noop sink, first with a fresh artifact store (the call
+    fits the artifacts), then ``PIPE_PASSES`` warm passes.  Every output
+    is checked against the bundle's DuckDB ``oracle_sql()`` entry."""
     import __spark_entry__ as ent
 
-    qs = ent.queries()
-    state = {}
-
-    def one_pass(spark, traced):
-        ops = []
-        for name in CORPUS_BUNDLES:
-            with _InProcess(run, spark, traced) as call:
-                t = time.perf_counter()
-                df = qs[name](spark, data)
-                df.write.format("noop").mode("overwrite").save()
-                dur = time.perf_counter() - t
-            pdf = df.toPandas()
-            op = Op(name, dur, traced=traced, rows=len(pdf),
-                    work=1.0 / len(CORPUS_BUNDLES), rid=call.rid)
-            op.check = lambda pdf=pdf, name=name: _oracle_check(
-                state, data, name, pdf)
-            ops.append(op)
-        total = sum(o.latency_s for o in ops)
-        return [Op("pass", total, traced=traced, work=0.0)] + ops
-
-    def start(i):
-        eng = Engine(data, serve=False)
-        state["first"] = one_pass(eng.spark, False)
-        for op in state["first"]:      # checked, but timed as set-up
-            op.kind, op.work = "setup:" + op.kind, 0.0
-        return eng
-
-    eng, setup = _setups(run, start)
-    ops = _closed_loop(
-        run, [lambda traced: one_pass(eng.spark, traced)], [1])
-    ops += state["first"]
-    return Result(ops, setup, "pass", engine=eng)
+    data = os.path.join(run.root, "corpus")
+    datagen.generate(data, run.seed, sf=0.01, n_docs=PIPE_DOCS)
+    bundle = ent.queries()[PIPE_BUNDLE]
+    state, ops = {}, []
+    for i in range(1 + PIPE_PASSES):
+        with _InProcess(run, spark, True) as call:
+            t = time.perf_counter()
+            df = bundle(spark, data)
+            df.write.format("noop").mode("overwrite").save()
+            dur = time.perf_counter() - t
+        pdf = df.toPandas()
+        op = Op("pipe_first" if i == 0 else "pipe", dur, traced=True,
+                rows=len(pdf), rid=call.rid, work=0.0)
+        op.check = lambda pdf=pdf: _oracle_check(state, data, PIPE_BUNDLE,
+                                                 pdf)
+        ops.append(op)
+    run.mark("leg")
+    return ops
 
 
 def _oracle_check(state: dict, data: str, name: str, pdf) -> Optional[str]:
@@ -606,5 +616,4 @@ def _oracle_check(state: dict, data: str, name: str, pdf) -> Optional[str]:
     return None if got == state[key] else f"{name}: hash {got} != oracle"
 
 
-WORKLOADS = {"olap_pgwire": olap_pgwire, "ingest_mixed": ingest_mixed,
-             "corpus_pipeline": corpus_pipeline}
+WORKLOADS = {"olap_pgwire": olap_pgwire, "ingest_mixed": ingest_mixed}
