@@ -157,7 +157,7 @@ def end_to_end(res) -> dict:
 
 def throughput(ops) -> float:
     """Per client, the work its timed requests completed divided by the
-    time spent in them (client-side lock waits excluded); summed over
+    time spent in them (waits for the other client excluded); summed over
     clients."""
     work, spent = {}, {}
     for o in ops:
@@ -205,7 +205,6 @@ def per_layer(res, tracer, spark, rss: float) -> dict:
         "client.samples": (float(len(all_main)), "count"),
         "client.tail_pct": (q, "%"),
         "client.tail_s": (tail_v, "s"),
-        "client.lock_wait_s": (mean([o.lock_wait_s for o in timed]), "s"),
         "client.upsert_p50_s": (median_of(timed, "upsert"), "s"),
         # warm-up statements that asked a phrase for the first time
         "index.phrase_miss_s": (median_of(res.ops, "phrase_miss"), "s"),

@@ -1,4 +1,4 @@
-"""The workloads: set-up, closed-loop timed phase, untimed checks.
+"""The workloads: set-up, a timed phase in rounds, untimed checks.
 
 Each workload function takes a ``Run`` (paths, seed, duration, tracer) and
 returns a ``Result``: per-operation records plus the set-up times.  The
@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import datetime as dt
 import gc
-import itertools
 import os
 import threading
 import time
@@ -28,6 +27,7 @@ SETUPS = 3               # one cold set-up, then warm restarts
 BATCH_ROWS = 200         # rows per UPSERT batch
 OVERWRITE_SHARE = 0.2    # share of a batch that rewrites existing keys
 INGEST_SF = 0.02
+READS_PER_TURN = 6       # the ingest reader's SELECTs per round
 PHRASE_POOL = 2          # inverted-index phrases a run draws from
 PIPE_DOCS = 300          # documents in the datapipe leg's corpus
 PIPE_BUNDLE = "dp_neardup_scale"
@@ -47,9 +47,8 @@ class Op:
     nbytes: int = 0
     work: float = 1.0            # throughput units this op completed
     rid: Optional[int] = None    # trace request id, when traced
-    client: int = -1             # index of the closed-loop client
+    client: int = -1             # index of the client; -1 when untimed
     user_bytes: int = 0          # statement bytes a write carried
-    lock_wait_s: float = 0.0     # client-side wait before sending
     check: Optional[Callable[[], Optional[str]]] = None
 
 
@@ -60,6 +59,7 @@ class Run:
     seconds: float
     tracer: object = None        # trace.Tracer when traced
     t0: float = field(default_factory=time.perf_counter)
+    deadline: float = float("inf")   # end of the timed phase, once begun
     marks: Dict[str, float] = field(default_factory=dict)
 
     def mark(self, phase: str) -> None:
@@ -126,48 +126,62 @@ def _setups(run: Run, start: Callable[[int], Engine]) -> tuple:
     return eng, times
 
 
-def _closed_loop(run: Run, clients: List[Callable[[bool], List[Op]]],
-                 warmup: List[int]):
-    """Each client first runs its warm-up steps (untimed; their ops are
-    still checked), then all clients repeat their step until the timed
-    phase ends.  A step sees whether it is traced and returns the ops it
-    completed.  Returns the ops."""
+def _rounds(run: Run, steps: List[Callable[[], List[Op]]],
+            warmups: Optional[List[Callable[[], List[Op]]]] = None,
+            serial: bool = False) -> List[Op]:
+    """The timed phase, in rounds.  In each round every client runs its
+    step once: side by side, each on its own thread, or with ``serial``
+    one after another, in order, on this thread.  A round begins only
+    before the deadline and, once begun, completes, so every run times
+    whole rounds.  Before the first round each client runs its warm-up
+    (untimed; its ops are still checked).  Returns the ops; timed ops
+    carry their client's index."""
     ops: List[Op] = []
     lock = threading.Lock()
-    clock = {}
+    go = {}
 
-    def begin():
-        clock["deadline"] = time.perf_counter() + run.seconds
+    def between_rounds():
+        now = time.perf_counter()
+        if run.deadline == float("inf"):
+            run.deadline = now + run.seconds
+            run.mark("warmup")
+        go["next"] = now < run.deadline
 
-    barrier = threading.Barrier(len(clients), action=begin)
+    def add(done, i=-1):
+        for op in done:
+            op.client = i
+        with lock:
+            ops.extend(done)
+
+    if serial:
+        for w in warmups or []:
+            add(w())
+        between_rounds()
+        while go["next"]:
+            for i, step in enumerate(steps):
+                add(step(), i)
+            between_rounds()
+        run.mark("timed")
+        return ops
+
+    barrier = threading.Barrier(len(steps), action=between_rounds)
     errors: List[BaseException] = []
 
     def loop(i, step):
         try:
-            for _ in range(warmup[i]):
-                done = step(False)
-                with lock:
-                    ops.extend(done)
-            barrier.wait()
-            if i == 0:
-                run.mark("warmup")
-            # traced runs trace every second step of each client, from
-            # the first, so the tracing overhead is measured in the same
-            # run and a client with a single step is still traced
-            for n in itertools.count():
-                if time.perf_counter() >= clock["deadline"]:
+            if warmups:
+                add(warmups[i]())
+            while True:
+                barrier.wait()
+                if not go["next"]:
                     return
-                done = step(run.tracer is not None and n % 2 == 0)
-                for op in done:
-                    op.client = i
-                with lock:
-                    ops.extend(done)
+                add(step(), i)
         except BaseException as exc:  # noqa: BLE001 - reported after join
             errors.append(exc)
             barrier.abort()
 
-    threads = [threading.Thread(target=loop, args=(i, c), daemon=True)
-               for i, c in enumerate(clients)]
+    threads = [threading.Thread(target=loop, args=(i, s), daemon=True)
+               for i, s in enumerate(steps)]
     for t in threads:
         t.start()
     for t in threads:
@@ -208,26 +222,6 @@ class _InProcess:
         if self.traced:
             self.run.tracer.bind(None)
             self.spark.sparkContext.setJobGroup("perfbench-untraced", "")
-        return False
-
-
-class _TurnLock:
-    """A mutex granted in arrival order, so neither client can starve the
-    other by re-acquiring it first."""
-
-    def __init__(self):
-        self._cv = threading.Condition()
-        self._next = self._serving = 0
-
-    def __enter__(self):
-        with self._cv:
-            ticket, self._next = self._next, self._next + 1
-            self._cv.wait_for(lambda: self._serving == ticket)
-
-    def __exit__(self, *exc):
-        with self._cv:
-            self._serving += 1
-            self._cv.notify_all()
         return False
 
 
@@ -327,6 +321,7 @@ def olap_pgwire(run: Run) -> Result:
     # inverted-index draws would set its throughput by how many missed.
     popular = [templates.PHRASES[i] for i in
                rng.permutation(len(templates.PHRASES))][:PHRASE_POOL]
+    traced = run.tracer is not None
 
     def client(k):
         cmix = templates.Mix(np.random.default_rng([run.seed, k]),
@@ -338,20 +333,29 @@ def olap_pgwire(run: Run) -> Result:
             if t != "inverted_index"]
         c = PgClient(eng.port)
 
-        def step(traced):
-            name, phrase = warm.pop() if warm else (None, None)
+        def statement(name, phrase, traced):
             name, yql, duck = cmix.draw(name, phrase)
             op, r = _wire_op(c, "phrase_miss" if phrase else "select", yql,
                              traced, run)
             if op.ok:
                 op.check = _duck_check(con, duck, r.rows)
-            return [op]
-        return c, step, len(warm)
+            return op
+
+        def warmup():
+            return [statement(name, phrase, False) for name, phrase in warm]
+
+        def cycle():
+            """One whole cycle over the templates, so every run times each
+            template equally often; traced runs trace every second
+            statement."""
+            return [statement(None, None, traced and j % 2 == 0)
+                    for j in range(len(templates.TEMPLATES))]
+        return c, cycle, warmup
 
     conns = [client(k) for k in range(2)]
     try:
-        ops = _closed_loop(run, [s for _, s, _ in conns],
-                           [n for _, _, n in conns])
+        ops = _rounds(run, [cy for _, cy, _ in conns],
+                      [w for _, _, w in conns])
     finally:
         for c, _, _ in conns:
             c.close()
@@ -490,16 +494,23 @@ def ingest_mixed(run: Run) -> Result:
     recalculate(eng.tsdb.warehouse, rollup)
     state["recalc_at"] = dt.datetime.utcnow()
     run.mark("prime")
-    swap_lock = _TurnLock()
     rmix = templates.Mix(np.random.default_rng([run.seed, 7]),
                          templates.EVENT_TEMPLATES)
+    traced = run.tracer is not None
 
-    def write_step(traced):
+    def reads(n, trace):
+        """``n`` reader SELECTs; traced runs trace every second one."""
+        ops = []
+        for j in range(n):
+            op, _ = _wire_op(rc, "select", rmix.draw()[1],
+                             trace and j % 2 == 0, run)
+            op.work = 0.0
+            ops.append(op)
+        return ops
+
+    def write():
         day, sql = writer.batch()
-        t = time.perf_counter()
-        with swap_lock:
-            op, _ = _wire_op(wc, "upsert", sql, traced, run)
-        op.lock_wait_s = time.perf_counter() - t - op.latency_s
+        op, _ = _wire_op(wc, "upsert", sql, traced, run)
         op.work, op.user_bytes = BATCH_ROWS, len(sql.encode())
         if not op.ok:
             return [op]
@@ -522,17 +533,14 @@ def ingest_mixed(run: Run) -> Result:
                             ok=err is None, traced=traced, error=err,
                             rid=call.rid, work=0.0)]
 
-    def read_step(traced):
-        _, yql, _ = rmix.draw()
-        t = time.perf_counter()
-        with swap_lock:
-            op, _ = _wire_op(rc, "select", yql, traced, run)
-        op.lock_wait_s = time.perf_counter() - t - op.latency_s
-        op.work = 0.0
-        return [op]
-
+    # The reader and the writer take turns, the reader first: a SELECT
+    # racing an UPSERT's directory swap fails, and one overlapping the
+    # writer's read-back or recalc would time their contention for the
+    # cores.  The reader warms up with two turns' worth of SELECTs.
     try:
-        ops = _closed_loop(run, [write_step, read_step], [0, 1])
+        ops = _rounds(run, [lambda: reads(READS_PER_TURN, traced), write],
+                      [lambda: reads(2 * READS_PER_TURN, False)],
+                      serial=True)
     finally:
         wc.close()
         rc.close()
