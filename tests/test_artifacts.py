@@ -3,8 +3,9 @@
 The contract under test: fit -> save -> (fresh session) -> load gives
 IDENTICAL scores/codes with ZERO fit jobs, and a corpus WRITE invalidates
 the artifact (token mismatch -> refit).  A "fresh session" is simulated by
-clearing the in-process memo dicts — their keys include applicationId, so
-a genuinely new session starts exactly this way: memory cold, store warm.
+invalidating the fits' in-process memo entries — a new Spark application
+starts with an empty memo, so a genuinely new session starts exactly this
+way: memory cold, store warm.
 """
 
 import os
@@ -21,18 +22,12 @@ SF = "/root/testdata/sf0.001"
 
 def _fresh_memo():
     """Cold in-process memos = what a restarted deployment starts with."""
-    from yupana_spark.datapipe import bpe, dsir, sample, simsearch, text
+    from yupana_spark import memo
 
-    from yupana_spark.datapipe import ppx
-
-    text._LM_CACHE.clear()
-    simsearch._CENTERS_CACHE.clear()
-    bpe._BPE_CACHE.clear()
-    dsir._RATIO_CACHE.clear()
-    dsir._WARR_CACHE.clear()
-    dsir._BUCKETS_CACHE.clear()
-    ppx._PPX_CACHE.clear()
-    sample._MIX_CACHE.clear()
+    for kind in ("unigram_lm", "kmeans", "pq", "ivfadc", "bpe",
+                 "bpe_stored", "dsir_ratio", "dsir_warr", "dsir_buckets",
+                 "ppx_uni", "ppx_big", "mix_counts"):
+        memo.invalidate(kind)
 
 
 def _jobs_in_group(spark, group, fn):

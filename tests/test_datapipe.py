@@ -491,14 +491,18 @@ def test_minhash_gate_small_precomputed(docs_with_dups):
         probe = as_set(minhash_dedup_pairs(docs_with_dups, threshold=0.7,
                                            artifacts=arts, banded=banded))
         sc = docs_with_dups.sparkSession.sparkContext
-        n_jobs = sc.statusTracker().getJobIdsForGroup(None)
-        small = minhash_dedup_pairs(docs_with_dups, threshold=0.7,
-                                    artifacts=arts, banded=banded,
-                                    gate_small=True)
+        sc.setJobGroup("gate-small-build", "gate-small-build")
+        try:
+            small = minhash_dedup_pairs(docs_with_dups, threshold=0.7,
+                                        artifacts=arts, banded=banded,
+                                        gate_small=True)
+        finally:
+            sc.setJobGroup(None, None)
         # construction was pure plan-building: no driver-blocking
-        # count/avg job ahead of the caller's action
-        assert len(sc.statusTracker().getJobIdsForGroup(None)) \
-            == len(n_jobs)
+        # count/avg job ahead of the caller's action (its own job group,
+        # so jobs from other threads cannot blur the count)
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "gate-small-build")) == []
         large = minhash_dedup_pairs(docs_with_dups, threshold=0.7,
                                     artifacts=arts, banded=banded,
                                     gate_small=False)
@@ -1289,7 +1293,7 @@ def test_prepared_plan_cache_semantics(spark):
     qs = ent.queries()
     assert qs["q_having"](spark, SF) is qs["q_having"](spark, SF)
     # dp_neardup_scale moved INTO the cache (its eager index builds are
-    # memoized in _NEARDUP_ARTS, so the returned 4-arm union is a pure
+    # memoized per corpus (_nd_arts), so the returned 4-arm union is a pure
     # lazy plan); dp_ann_approx keeps eager per-call search work and must
     # rebuild every call
     assert qs["dp_neardup_scale"](spark, SF) is \
@@ -2463,8 +2467,8 @@ def test_quality_lr_classifier(spark):
     from pyspark.sql import functions as F
 
     from yupana_spark.datapipe.artifacts import ArtifactStore, corpus_token
-    from yupana_spark.datapipe.classify import (_LR_CACHE,
-                                                quality_lr_features,
+    from yupana_spark import memo
+    from yupana_spark.datapipe.classify import (quality_lr_features,
                                                 quality_lr_fit,
                                                 quality_lr_holdout_accuracy,
                                                 quality_lr_score)
@@ -2489,7 +2493,7 @@ def test_quality_lr_classifier(spark):
     tok = corpus_token("/root/testdata/sf0.001/documents.parquet")
     art2 = quality_lr_fit(docs, label=lab, label_key="sw>=0.03",
                           cache_key="t", store=st, store_token=tok)
-    _LR_CACHE.clear()
+    memo.invalidate("quality_lr")
     sc = spark.sparkContext
     sc.setJobGroup("qlr-load", "qlr-load")
     art3 = quality_lr_fit(docs, label=lab, label_key="sw>=0.03",
@@ -2511,7 +2515,7 @@ def test_quality_lr_classifier(spark):
     sn = docs.select(quality_lr_score(F.col("text"), artn).alias("p")) \
         .agg(F.min("p").alias("lo"), F.max("p").alias("hi")).collect()[0]
     assert 0.0 <= sn["lo"] <= sn["hi"] <= 1.0
-    _LR_CACHE.clear()
+    memo.invalidate("quality_lr")
     artn2 = quality_lr_fit(docs, label=lab, label_key="sw>=0.03",
                            ngram_buckets=128, cache_key="tn",
                            store=st, store_token=tok)
@@ -2570,8 +2574,8 @@ def test_quality_lr_label_identity_and_nulls(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from yupana_spark.datapipe.classify import (_LR_CACHE,
-                                                quality_lr_features,
+    from yupana_spark import memo
+    from yupana_spark.datapipe.classify import (quality_lr_features,
                                                 quality_lr_fit)
 
     docs = spark.createDataFrame(
@@ -2584,7 +2588,7 @@ def test_quality_lr_label_identity_and_nulls(spark):
     with pytest.raises(ValueError, match="label_key"):
         quality_lr_fit(docs, label=feats["stopword_ratio"] >= 0.1,
                        cache_key="x")
-    _LR_CACHE.clear()
+    memo.invalidate("quality_lr")
     a1 = quality_lr_fit(docs, label=feats["stopword_ratio"] >= 0.1,
                         label_key="sw", cache_key="x")
     a2 = quality_lr_fit(docs, label=feats["alpha_ratio"] >= 0.99,
@@ -2795,9 +2799,9 @@ def test_dsir_buckets_artifact_matches_live(spark, tmp_path):
         assert via[i][1] == base[i][1]
         assert via[i][0] == pytest.approx(base[i][0], abs=1e-9)
     # a fresh session (cold memo) loads the artifact with zero fit jobs
-    from yupana_spark.datapipe import dsir as _dsir
+    from yupana_spark import memo
 
-    _dsir._BUCKETS_CACHE.clear()
+    memo.invalidate("dsir_buckets")
     sc = spark.sparkContext
     sc.setJobGroup("gb-load", "gb-load")
     try:

@@ -101,7 +101,7 @@ def test_in_pushdown_gate(tsdb, monkeypatch):
     In PUSHED TO THE PARQUET SCAN (≙ DimIdIn row-key pruning); forcing the
     gate to 0 falls back to the broadcast semi-join — both shapes return
     identical rows."""
-    from yupana_spark import compiler as C
+    from yupana_spark import compiler as C, memo
 
     sql = (f"SELECT count(l_orderkey) c FROM lineitem WHERE {TB} "
            "AND ItemsInvertedIndex_phrase = 'widget'")
@@ -109,17 +109,17 @@ def test_in_pushdown_gate(tsdb, monkeypatch):
     def plan_of(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    C.Tsdb._PHRASE_CACHE.clear()
+    memo.invalidate("phrase")
     pushed = tsdb.sql(sql)
     assert "In(l_partkey" in plan_of(pushed)
     assert "LeftSemi" not in plan_of(pushed)
 
-    C.Tsdb._PHRASE_CACHE.clear()
+    memo.invalidate("phrase")
     monkeypatch.setattr(C, "_IN_PUSHDOWN_GATE", 0)
     joined = tsdb.sql(sql)
     assert "LeftSemi" in plan_of(joined)
     assert joined.collect() == pushed.collect()
-    C.Tsdb._PHRASE_CACHE.clear()
+    memo.invalidate("phrase")
 
 
 def test_in_pushdown_member_pred_null_semantics(spark):

@@ -507,8 +507,8 @@ def test_cancel_request_kills_running_job(server, tsdb):
 def test_concurrent_readers_with_writer(tsdb, tmp_path):
     """Thread-safety under load: six reader connections hammer aggregates
     while a writer UPSERTs through the same server (each write purges the
-    volume-stat cache the readers populate — the race the _BYTES_CACHE
-    lock guards).  Every query must succeed and the final count must see
+    volume-stat memo entries the readers populate — the race memo.invalidate
+    guards).  Every query must succeed and the final count must see
     all writes."""
     import threading
 

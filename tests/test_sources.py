@@ -75,8 +75,14 @@ def test_parallel_read_splits_single_row_group(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from yupana_spark.schema import (_SPLIT_CACHE, cached_parquet,
-                                     invalidate_parquet_cache)
+    import os
+
+    from yupana_spark import memo
+    from yupana_spark.schema import cached_parquet, invalidate_parquet_cache
+
+    def read_dirs(df):
+        return {os.path.dirname(f.replace("file://", ""))
+                for f in df.inputFiles()}
 
     n = 60_000
     src = str(tmp_path / "fact.parquet")
@@ -87,10 +93,8 @@ def test_parallel_read_splits_single_row_group(spark, tmp_path):
     assert pq.ParquetFile(src).num_row_groups == 1
 
     df = cached_parquet(spark, src, time_col="ts")
-    app = spark.sparkContext.applicationId
-    out_dir = _SPLIT_CACHE.get((app, src))
-    assert out_dir is not None, "fact-sized file must be re-ingested"
-    import os
+    (out_dir,) = read_dirs(df)
+    assert out_dir != str(tmp_path), "fact-sized file must be re-ingested"
     parts = sorted(f for f in os.listdir(out_dir) if f.endswith(".parquet"))
     assert len(parts) >= 4  # split into multiple files
     # every file's min >= previous file's max: globally time-sorted layout
@@ -109,12 +113,13 @@ def test_parallel_read_splits_single_row_group(spark, tmp_path):
     # small file: untouched (no rewrite entry)
     small = str(tmp_path / "dim.parquet")
     pq.write_table(pa.table({"k": pa.array(range(10))}), small)
-    cached_parquet(spark, small)
-    assert (app, small) not in _SPLIT_CACHE
+    assert read_dirs(cached_parquet(spark, small)) == {str(tmp_path)}
 
-    # invalidation drops both the plan memo and the rewrite memo
+    # invalidation drops the memoized read and with it the rewrite: the
+    # next read re-ingests into a fresh directory
     invalidate_parquet_cache(src)
-    assert (app, src) not in _SPLIT_CACHE
+    assert memo.peek("parquet", (src,)) is None
+    assert read_dirs(cached_parquet(spark, src, time_col="ts")) != {out_dir}
 
 
 def test_ingest_gzip_jsonl(spark, wh, tmp_path):

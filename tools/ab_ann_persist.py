@@ -6,8 +6,8 @@ subtree per action.
 dp_ann_approx is NOT plan-cached (eager index builds are its timed work),
 so the bench-faithful unit here is construct+noop per pass — both forms
 rebuilt every pass via the raw entry, alternating, with _persist_narrow
-toggled to identity for the old form.  Artifacts (_ANN_INDEX, fits) are
-session-memoized and shared by both forms.
+toggled to identity for the old form.  Artifacts (the index frames and
+fits) are memoized per application and shared by both forms.
 
 Usage: python tools/ab_ann_persist.py [pairs] [sf_dir]
 """
@@ -38,7 +38,7 @@ def main() -> None:
     orig = ent._persist_narrow
 
     def run(new: bool) -> float:
-        ent._persist_narrow = orig if new else (lambda df: df)
+        ent._persist_narrow = orig if new else (lambda slot, df: df)
         try:
             t0 = time.time()
             _noop(ent.dp_ann_approx(spark, SF_DIR))

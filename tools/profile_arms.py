@@ -15,6 +15,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from yupana_spark import memo  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PASSES = int(os.environ.get("PROFILE_PASSES", "3"))
 
@@ -44,22 +46,22 @@ def profile_neardup(spark):
                                              simhash_near_pairs)
 
     print("== dp_neardup_scale arms ==")
-    # populate the artifact memo exactly as the bench does
+    # populate the artifact memo exactly as the bench does; the reads
+    # below are memo hits on the same frames the bundle uses
     _noop(ent.queries()["dp_neardup_scale"](spark, SF_DIR))
-    akey = (spark.sparkContext.applicationId, SF_DIR)
-    arts, sigs, cells, banded, ex_mh, ex_sh, ex_el = ent._NEARDUP_ARTS[akey]
+    arts, sigs, cells, banded, ex_mh, ex_sh, ex_el = ent._nd_arts(spark,
+                                                                  SF_DIR)
     docs = ent._docs(spark, SF_DIR)
     emb = ent._emb(spark, SF_DIR)
     n_emb = ent._fixture_count(spark, SF_DIR, "embeddings", emb)
 
     # mirror the bundle's r18 shape: the ingest-time gate decision is in
-    # the session memo (populated by the warm-up call above), so the arm
-    # profile attributes the same per-pass work the bench sees
-    gate_mh = ent._NEARDUP_GATE[akey]
-    mh = lambda: minhash_dedup_pairs(docs, threshold=0.5, artifacts=arts,
-                                     banded=banded,
-                                     gate_small=gate_mh).select("id_a",
-                                                                "id_b")
+    # the memo (populated by the warm-up call above), so the arm profile
+    # attributes the same per-pass work the bench sees
+    gate_mh = ent._minhash_gate(SF_DIR, arts, banded, **ent._ND_GATE)
+    mh = lambda: minhash_dedup_pairs(docs, artifacts=arts, banded=banded,
+                                     gate_small=gate_mh,
+                                     **ent._ND_GATE).select("id_a", "id_b")
     sh = lambda: simhash_near_pairs(docs, max_hamming=3,
                                     sigs=sigs).select("id_a", "id_b")
     el = lambda: embedding_neardup_pairs_ivf(
@@ -127,8 +129,7 @@ def profile_langid(spark):
                       .join(bpe(), "doc_id", "left")
                       .join(bx(), "doc_id", "left"))
     timeit("4-frame join", joined)
-    ckey = (spark.sparkContext.applicationId, SF_DIR)
-    cuts = ent._PPX_CUTS[ckey]
+    cuts = memo.peek("ppx_cutoffs", (SF_DIR,))
     timeit("FULL (join+buckets)",
            lambda: ppx_buckets(joined(), "big_xent", ("lang_pred",),
                                cuts=cuts).withColumnRenamed("bucket",
@@ -159,8 +160,7 @@ def profile_textstats(spark):
     docs = ent._docs(spark, SF_DIR, fan_out=True)
     did = F.col("doc_id")
     staged = docs.withColumn("__bw", _words_safe(F.col("text")))
-    esk = (spark.sparkContext.applicationId, SF_DIR)
-    esi = ent._ES_INDEX[esk]
+    esi = ent._es_index(spark, SF_DIR, staged)
     ess = lambda: cut_starts_fused(staged, staged.filter(did % 97 == 0),
                                    n=8, dup_index=esi, words_col="__bw")
     lined = docs.select(

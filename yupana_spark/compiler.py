@@ -27,13 +27,14 @@ import os
 import threading
 from dataclasses import dataclass, field
 from decimal import Decimal
-from typing import Any, Dict, List, Optional, Sequence, Tuple
+from typing import Any, Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import expressions as E
+from . import memo
 from . import types as yt
 from .expressions import Expr, InvalidQueryError
 from .query import Query, validate
@@ -520,44 +521,29 @@ class Tsdb:
                                 time_bounds=time_bounds)
 
     # -- static small-input tuning -------------------------------------------
-    _BYTES_CACHE: Dict[tuple, int] = {}
-    # pgwire serves queries from concurrent threads while a write thread
-    # purges stale entries: every read/insert/purge holds this lock (dict
-    # mutation during the purge's iteration would otherwise RuntimeError).
-    # The epoch closes the TOCTOU window: a reader that statted the file
-    # BEFORE a purge must not re-insert its stale size AFTER it — inserts
-    # are dropped when any purge ran since the reader's snapshot
-    _BYTES_CACHE_LOCK = threading.Lock()
-    _BYTES_EPOCH = 0
-
     def _table_bytes(self, table: str) -> int:
         """On-disk bytes of a table's source (memoized); 'unknown' counts as
         big so the AQE posture is kept whenever we can't cheaply tell."""
         # keyed by the LIVE warehouse root (distinct tmpdirs per default
-        # instance must not share sizes); writes delete their table's entry
+        # instance must not share sizes); warehouse writes invalidate their
+        # table's entry, and a stat that raced the write is not kept
         wh = self._wh_maybe
-        key = (self.sf_dir, wh.root if wh is not None else None, table)
-        with Tsdb._BYTES_CACHE_LOCK:
-            b = Tsdb._BYTES_CACHE.get(key)
-            epoch = Tsdb._BYTES_EPOCH
-        if b is None:
-            b = 1 << 62
-            try:
-                t = self.schema.table(table)
-                path = os.path.join(self.sf_dir, t.path or f"{table}.parquet")
-                if wh is not None and wh.exists(table):
-                    path = wh.path(table)
-                if os.path.isdir(path):
-                    b = sum(e.stat().st_size for e in os.scandir(path)
-                            if e.is_file())
-                else:
-                    b = os.path.getsize(path)
-            except OSError:
-                pass
-            with Tsdb._BYTES_CACHE_LOCK:
-                if Tsdb._BYTES_EPOCH == epoch:   # no purge raced the stat
-                    Tsdb._BYTES_CACHE[key] = b
-        return b
+        root = wh.root if wh is not None else None
+        return memo.get("table_bytes", (self.sf_dir, root, table),
+                        lambda: self._stat_bytes(wh, table))
+
+    def _stat_bytes(self, wh, table: str) -> int:
+        try:
+            t = self.schema.table(table)
+            path = os.path.join(self.sf_dir, t.path or f"{table}.parquet")
+            if wh is not None and wh.exists(table):
+                path = wh.path(table)
+            if os.path.isdir(path):
+                return sum(e.stat().st_size for e in os.scandir(path)
+                           if e.is_file())
+            return os.path.getsize(path)
+        except OSError:
+            return 1 << 62
 
     def _tune_for_volume(self, nbytes: int) -> None:
         """Static small-input fast path vs AQE posture — see
@@ -772,11 +758,6 @@ class Tsdb:
             raise
 
     # -- dictionary-dimension ids (Dictionary.scala:24-105) -------------------
-    _DICT_CACHE: Dict[tuple, Dict[str, int]] = {}
-    # memoized phrase-match key sets for static link sources (small,
-    # localCheckpoint-materialized); keyed by (appId, sf_dir, link, phrases)
-    # (appId, sf_dir, link, phrases) -> (ids frame, key literals | None)
-    _PHRASE_CACHE: Dict[tuple, Tuple[DataFrame, Optional[list]]] = {}
     _DICT_CAP = 100_000  # beyond this a dim is not dictionary-shaped; at
     # cluster scale you'd materialize a dictionary table + broadcast join
     # instead of a map literal
@@ -784,7 +765,7 @@ class Tsdb:
     def _resolve_dictionaries(self, q: Query, table: Table):
         """value -> dense sequential id maps for dictionary dims referenced
         by id(); built from the UNFILTERED table (ids must not shift with
-        the query's time range), memoized per (session, sf_dir, table, dim)."""
+        the query's time range), memoized per (sf_dir, table, dim)."""
         dims = {d.name: d for d in table.dimensions}
         wanted = set()
         exprs = [f.expr for f in q.fields] + list(q.group_by)
@@ -807,19 +788,22 @@ class Tsdb:
                 if persisted is not None:
                     out[dim] = persisted
                     continue
-            # sorted-value fallback for never-ingested (fixture) data
-            key = (self.spark.sparkContext.applicationId, self.sf_dir,
-                   table.name, dim)
-            if key not in self._DICT_CACHE:
-                vals = (self._load(table.name).select(dim).distinct()
-                        .limit(self._DICT_CAP + 1).collect())
-                if len(vals) > self._DICT_CAP:
-                    continue  # too wide: id() keeps the hash surrogate
-                ordered = sorted(r[0] for r in vals if r[0] is not None)
-                self._DICT_CACHE[key] = {v: i + 1
-                                         for i, v in enumerate(ordered)}
-            out[dim] = self._DICT_CACHE[key]
+            # sorted-value fallback for never-ingested (fixture) data; a
+            # dim too wide to be dictionary-shaped memoizes as None and
+            # id() keeps the hash surrogate
+            ids = memo.get("dictionary", (self.sf_dir, table.name, dim),
+                           lambda: self._sorted_ids(table.name, dim))
+            if ids is not None:
+                out[dim] = ids
         return out
+
+    def _sorted_ids(self, table: str, dim: str) -> Optional[Dict[str, int]]:
+        vals = (self._load(table).select(dim).distinct()
+                .limit(self._DICT_CAP + 1).collect())
+        if len(vals) > self._DICT_CAP:
+            return None
+        ordered = sorted(r[0] for r in vals if r[0] is not None)
+        return {v: i + 1 for i, v in enumerate(ordered)}
 
     # -- predicate-rewriting links (substituteLinks, TsdbBase.scala:322-347) --
     def _rewrite_predicate_links(self, df: DataFrame, q: Query, table: Table):
@@ -890,8 +874,8 @@ class Tsdb:
         # build, so a warehouse index rewrite (directory swap) after
         # build yields deleted-file reads, not updated matches.  Callers
         # that mutate the index must re-plan (Tsdb plans are cheap to
-        # rebuild; warehouse writes bump _BYTES_EPOCH for the same
-        # reason).  ≙ the reference: a TSDB query captures the
+        # rebuild; warehouse writes invalidate the memoized volume stats
+        # for the same reason).  ≙ the reference: a TSDB query captures the
         # ItemsInvertedIndex state at mapReduceEngine build.
         def key_literals(ids_df):
             rows = ids_df.limit(_IN_PUSHDOWN_GATE + 1).collect()
@@ -918,19 +902,20 @@ class Tsdb:
                 # dictionary lookup — memoize the (small) matched-key set so
                 # repeated queries skip the tokenizer scan (≙ the reference
                 # caching link catalogs, InvertedIndexDaoHBase reuse); the
-                # mutable warehouse-index path above is never cached
-                ck = (self.spark.sparkContext.applicationId, self.sf_dir,
-                      link.name, tuple(sorted(map(str, phrases))))
-                cached = Tsdb._PHRASE_CACHE.get(ck)
-                if cached is None:
+                # mutable warehouse-index path above is never cached.  The
+                # key carries the link (its source hook included) and the
+                # literal-lowering gate the key set was collected under
+                def matched(link=link, phrases=phrases):
                     items = link.source(self.spark, self.sf_dir)
                     ids = phrase_match_ids(items, link.key_column,
                                            link.text_column, phrases)
                     ids = ids.localCheckpoint(eager=True)
-                    cached = (ids, key_literals(ids))
-                    if len(Tsdb._PHRASE_CACHE) < 64:
-                        Tsdb._PHRASE_CACHE[ck] = cached
-                ids, keys = cached
+                    return ids, key_literals(ids)
+
+                ids, keys = memo.get(
+                    "phrase", (self.sf_dir, link, _IN_PUSHDOWN_GATE,
+                               tuple(sorted(map(str, phrases)))),
+                    matched, cap=64)
             else:
                 keys = key_literals(ids)
             how = "left_anti" if anti else "left_semi"

@@ -4,7 +4,7 @@ Every sample-fit artifact in the engine — the unigram-LM vocabulary
 (``text.unigram_lm_fit``), the KMeans / PQ / IVFADC codebooks
 (``simsearch``), the BPE merge table (``bpe``), and the materialized
 near-dup index frames (minhash signatures, simhash bits, exact-pair
-oracles) — was memoized per *session* (``applicationId`` cache keys), so a
+oracles) — was memoized per *application* only (the in-process memo), so a
 restarted deployment re-fit everything.  The reference materializes its
 inverted index for exactly this reason
 (yupana-externallinks/.../ItemsInvertedIndexImpl.scala: the index lives in
@@ -276,19 +276,23 @@ def artifact_name(prefix: str, *params: Any) -> str:
     return f"{prefix}_{digest}"
 
 
-def store_name(prefix: str, cache_key, store, store_token,
-               *params: Any) -> Optional[str]:
-    """The shared store-gating guard every fit function uses: None unless
-    BOTH store and token are present; persistence requires ``cache_key``
-    (the corpus identity the name hashes).  ``params`` must carry every
-    fit input that changes the artifact — hyperparameters INCLUDING
-    iteration counts and any label identity — so a changed fit never
-    silently loads a stale artifact."""
+def store_tier(form: str, prefix: str, cache_key, store, store_token,
+               *params: Any, spark=None):
+    """The shared store-gating guard every fit function uses: the fit's
+    ``memo.Tier`` (loading ``form``: "df" into ``spark``, "arrays" or
+    "json") or None unless BOTH store and token are present; persistence
+    requires ``cache_key`` (the corpus identity the name hashes).
+    ``params`` must carry every fit input that changes the artifact —
+    hyperparameters INCLUDING iteration counts and any label identity —
+    so a changed fit never silently loads a stale artifact."""
     if store is None or store_token is None:
         return None
     if cache_key is None:
         raise ValueError("store persistence requires cache_key")
-    return artifact_name(prefix, cache_key, *params)
+    from .. import memo
+
+    return memo.Tier(store, artifact_name(prefix, cache_key, *params),
+                     store_token, form, spark)
 
 
 def default_store() -> ArtifactStore:

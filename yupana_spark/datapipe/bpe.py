@@ -34,8 +34,6 @@ from pyspark.sql import types as T
 _EOW = "</w>"      # end-of-word marker: normalized words are
                    # [a-z0-9]+, so it cannot collide with content
 
-_BPE_CACHE: dict = {}
-
 
 def bpe_fit(df: DataFrame, text_col: str = "text", n_merges: int = 256,
             sample_cap: int = 2048, id_col: str = "doc_id",
@@ -55,24 +53,28 @@ def bpe_fit(df: DataFrame, text_col: str = "text", n_merges: int = 256,
     of ``bpe_save``/``bpe_load``): a fresh session loads the JSON with
     zero Spark jobs; a corpus write invalidates by token.
     """
-    key = None
-    if cache_key is not None:
-        key = ("bpe", df.sparkSession.sparkContext.applicationId, cache_key,
-               text_col, n_merges, sample_cap)
-        hit = _BPE_CACHE.get(key)
-        if hit is not None:
-            return hit
-    from .artifacts import store_name
+    from .. import memo
+    from .artifacts import store_tier
 
-    name = store_name("bpe", cache_key, store, store_token,
+    key = None if cache_key is None else (cache_key, text_col, id_col,
+                                          n_merges, sample_cap)
+    tier = store_tier("json", "bpe", cache_key, store, store_token,
                       text_col, n_merges, sample_cap)
-    if name is not None:
-        got = store.load_json(name, store_token)
-        if got is not None:
-            merges = [tuple(p) for p in got[0]]
-            if key is not None:
-                _BPE_CACHE[key] = merges
-            return merges
+
+    def merges():
+        # the store payload holds JSON pairs; the kept value is the tuple
+        # list itself, so a memo hit returns the same object
+        return [tuple(p) for p in memo.get("bpe_stored", key, lambda: (
+            _bpe_learn(df, text_col, n_merges, sample_cap, id_col)),
+            store=tier)[0]]
+
+    return memo.get("bpe", None if key is None else (key, store_token),
+                    merges)
+
+
+def _bpe_learn(df: DataFrame, text_col: str, n_merges: int,
+               sample_cap: int, id_col: str) -> tuple:
+    """(merge list as JSON-ready pairs, {}) — the store-tier payload."""
     from .simsearch import sample_rows
     from .text import normalize_text, words
 
@@ -118,11 +120,7 @@ def bpe_fit(df: DataFrame, text_col: str = "text", n_merges: int = 256,
             t = tuple(ns)
             out[t] = out.get(t, 0) + c
         vocab = out
-    if name is not None:
-        store.save_json(name, store_token, [list(p) for p in merges])
-    if key is not None:
-        _BPE_CACHE[key] = merges
-    return merges
+    return [list(p) for p in merges], {}
 
 
 def _encode_word(word: str, ranks: Dict[Tuple[str, str], int]) -> List[str]:

@@ -28,8 +28,6 @@ from typing import Dict, Optional
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
-_LR_CACHE: dict = {}
-
 FEATURE_NAMES = ("log_chars", "n_words_log", "alpha_ratio", "digit_ratio",
                  "punct_ratio", "stopword_ratio", "dup_word_ratio")
 
@@ -96,9 +94,8 @@ def quality_lr_fit(df: DataFrame, text_col: str = "text",
     persistence with a custom ``label`` — the Column itself cannot hash,
     and omitting it would let a refit under a different rule silently
     return the previous rule's weights."""
-    from .artifacts import store_name
-    from .simsearch import sample_rows
-    from .text import quality_score
+    from .. import memo
+    from .artifacts import store_tier
 
     persisting = store is not None and store_token is not None
     if label is not None and label_key is None \
@@ -107,29 +104,28 @@ def quality_lr_fit(df: DataFrame, text_col: str = "text",
                          "persisting (the label identity must reach the "
                          "cache key / artifact name)")
     lkey = label_key if label is not None else "default"
-    key = None
-    if cache_key is not None:
-        key = ("qlr", df.sparkSession.sparkContext.applicationId,
-               cache_key, text_col, lkey, sample_cap, iters, step,
-               seed_threshold, ngram_buckets, *_ngram_hash_v(ngram_buckets))
-        hit = _LR_CACHE.get(key)
-        if hit is not None:
-            return hit
-    name = store_name("quality_lr", cache_key, store, store_token,
+    key = None if cache_key is None else (
+        cache_key, text_col, id_col, lkey, sample_cap, iters, step,
+        seed_threshold, ngram_buckets, *_ngram_hash_v(ngram_buckets))
+    tier = store_tier("arrays", "quality_lr", cache_key, store, store_token,
                       text_col, lkey, sample_cap, iters, step,
                       seed_threshold, ngram_buckets,
                       *_ngram_hash_v(ngram_buckets))
-    if name is not None:
-        got = store.load_arrays(name, store_token)
-        if got is not None:
-            art = (got[0]["means"], got[0]["stds"], got[0]["weights"],
-                   float(got[0]["bias"]))
-            if "ngram_w" in got[0]:
-                art = art + (got[0]["ngram_w"],
-                             int(got[0]["ngram_buckets"]))
-            if key is not None:
-                _LR_CACHE[key] = art
-            return art
+    got = memo.get("quality_lr", key, lambda: _lr_fit(
+        df, text_col, id_col, label, sample_cap, iters, step,
+        seed_threshold, ngram_buckets), store=tier)[0]
+    art = (got["means"], got["stds"], got["weights"], float(got["bias"]))
+    if "ngram_w" in got:
+        art = art + (got["ngram_w"], int(got["ngram_buckets"]))
+    return art
+
+
+def _lr_fit(df, text_col, id_col, label, sample_cap, iters, step,
+            seed_threshold, ngram_buckets) -> tuple:
+    """The fit behind :func:`quality_lr_fit`: its store payload
+    (named arrays, {})."""
+    from .simsearch import sample_rows
+    from .text import quality_score
 
     feats = quality_lr_features(F.col(text_col))
     lab = label if label is not None else (
@@ -182,19 +178,11 @@ def quality_lr_fit(df: DataFrame, text_col: str = "text",
         # aggregate against ngram_w (engine-side; no per-bucket columns)
         wn = w[k:] / stds[k:]
         b_eff = float(b - np.sum(w[k:] * means[k:] / stds[k:]))
-        art = (means[:k], stds[:k], w[:k], b_eff, wn, ngram_buckets)
-    else:
-        art = (means, stds, w, float(b))
-    if name is not None:
-        payload = dict(means=art[0], stds=art[1], weights=art[2],
-                       bias=np.float64(art[3]))
-        if ngram_buckets > 0:
-            payload.update(ngram_w=art[4],
-                           ngram_buckets=np.int64(ngram_buckets))
-        store.save_arrays(name, store_token, **payload)
-    if key is not None:
-        _LR_CACHE[key] = art
-    return art
+        return dict(means=means[:k], stds=stds[:k], weights=w[:k],
+                    bias=np.float64(b_eff), ngram_w=wn,
+                    ngram_buckets=np.int64(ngram_buckets)), {}
+    return dict(means=means, stds=stds, weights=w,
+                bias=np.float64(b)), {}
 
 
 def quality_lr_score(text: Column, art) -> Column:

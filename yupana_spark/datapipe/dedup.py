@@ -1093,14 +1093,17 @@ def _rung3_exact(sighs_a: DataFrame, sighs_b: DataFrame,
     cache, a deployment's prepared statements) materialize the band
     join once and read the cached pair set thereafter, identical
     per-pass work to the probe path — only now nothing blocks or counts
-    it ahead of the first action.
+    it ahead of the first action.  That persist has an owner: one memo
+    slot holds the latest construction's screened frame and releases the
+    previous one when the next construction screens another plan, so
+    repeated constructions keep one cache entry, not one per call.
     """
     small = True
     if gate_small is not None:
-        small = gate_small
-        from pyspark import StorageLevel
+        from .. import memo
 
-        screened = screened.persist(StorageLevel.MEMORY_AND_DISK)
+        small = gate_small
+        screened = memo.persist("rung3_screened", (), screened)
     elif pair_gate is not None:
         # persist (recomputable lineage), NOT localCheckpoint: a pair set
         # above the gate is potentially huge, and pinning it with

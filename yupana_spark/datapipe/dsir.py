@@ -106,9 +106,6 @@ def _exploded(df: DataFrame, text_col: str, id_col: Optional[str],
         .alias("bucket"))
 
 
-_BUCKETS_CACHE: dict = {}
-
-
 def gram_buckets_fit(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", n_buckets: int = 4096,
                      bigrams: bool = True,
@@ -124,51 +121,43 @@ def gram_buckets_fit(docs: DataFrame, text_col: str = "text",
     invalidation; ``HASH_VERSION`` rides the name so a recipe change
     refits.  Values are exactly ``hashed_gram_buckets`` (pinned by
     test)."""
-    key = None
-    if cache_key is not None:
-        key = (docs.sparkSession.sparkContext.applicationId, cache_key,
-               text_col, id_col, n_buckets, bigrams)
-        hit = _BUCKETS_CACHE.get(key)
-        if hit is not None:
-            return hit
-    from .artifacts import store_name
+    from .. import memo
+    from .artifacts import store_tier
 
     # "m1": artifact-format tag — frames persisted before the param
     # metadata rode the __gb field would load metadata-less and fail
     # the consumer's recipe validation; the tag refits them once
-    name = store_name("dsir_buckets", cache_key, store, store_token,
+    tier = store_tier("df", "dsir_buckets", cache_key, store, store_token,
                       text_col, id_col, n_buckets, bigrams, HASH_VERSION,
-                      "m1")
-    # the recipe params ride as FIELD METADATA (schema metadata survives
-    # both localCheckpoint and the parquet artifact roundtrip), so a
-    # consumer can refuse a frame built under different params instead
-    # of silently mis-scoring (see dsir_log_weights)
-    meta = {"n_buckets": n_buckets, "bigrams": bigrams,
-            "id_col": id_col, "hash_version": HASH_VERSION}
-    live = docs.select(
-        F.col(id_col),
-        hashed_gram_buckets(F.col(text_col), n_buckets, bigrams)
-        .alias("__gb", metadata=meta))
-    if name is not None:
-        # the frame is CORPUS-sized (one bucket array per document), so
-        # unlike the bounded fits it must never be pinned in executor
-        # storage: the save writes the LAZY frame straight to parquet
-        # (one hash pass total) and every consumer — this session
-        # included — reads the columnar artifact lazily (load_df's
-        # single-pass posture; scoring consumes it exactly once per
-        # pass, and a parquet scan of packed longs is the cheap path)
-        got = store.load_df(docs.sparkSession, name, store_token)
-        if got is None:
-            store.save_df(name, store_token, live)
-            got = store.load_df(docs.sparkSession, name, store_token)
-        gb = got[0]
-    else:
-        # session-memo-only: materialize once or the memo would hand
+                      "m1", spark=docs.sparkSession)
+
+    def fit():
+        # the recipe params ride as FIELD METADATA (schema metadata
+        # survives both localCheckpoint and the parquet artifact
+        # roundtrip), so a consumer can refuse a frame built under
+        # different params instead of silently mis-scoring (see
+        # dsir_log_weights)
+        meta = {"n_buckets": n_buckets, "bigrams": bigrams,
+                "id_col": id_col, "hash_version": HASH_VERSION}
+        live = docs.select(
+            F.col(id_col),
+            hashed_gram_buckets(F.col(text_col), n_buckets, bigrams)
+            .alias("__gb", metadata=meta))
+        # with a store the frame is CORPUS-sized (one bucket array per
+        # document), so unlike the bounded fits it must never be pinned
+        # in executor storage: the save writes the LAZY frame straight
+        # to parquet (one hash pass total) and every consumer — this
+        # session included — reads the columnar artifact lazily
+        # (load_df's single-pass posture; scoring consumes it exactly
+        # once per pass, and a parquet scan of packed longs is the cheap
+        # path).  Memo-only: materialize once or the memo would hand
         # back the live plan and every pass would re-hash the corpus
-        gb = live.localCheckpoint(eager=True)
-    if key is not None:
-        _BUCKETS_CACHE[key] = gb
-    return gb
+        return (live if tier is not None
+                else live.localCheckpoint(eager=True)), {}
+
+    key = None if cache_key is None else (cache_key, text_col, id_col,
+                                          n_buckets, bigrams, HASH_VERSION)
+    return memo.get("dsir_buckets", key, fit, store=tier)[0]
 
 
 def dsir_log_ratio(target: DataFrame, raw: DataFrame, text_col: str = "text",
@@ -202,9 +191,6 @@ def dsir_log_ratio(target: DataFrame, raw: DataFrame, text_col: str = "text",
     return tbl, totals
 
 
-_RATIO_CACHE: dict = {}
-
-
 def dsir_ratio_fit(target: DataFrame, raw: DataFrame,
                    text_col: str = "text", n_buckets: int = 4096,
                    alpha: float = 0.5, bigrams: bool = True,
@@ -226,46 +212,32 @@ def dsir_ratio_fit(target: DataFrame, raw: DataFrame,
     live in the meta: n_t/n_r are exact bucket-count sums, so the smoothed
     ``lr`` rebuilt from the artifact is bit-identical to the lazy path's.
     """
-    key = None
-    if cache_key is not None:
-        key = (target.sparkSession.sparkContext.applicationId, cache_key,
-               text_col, n_buckets, alpha, bigrams)
-        hit = _RATIO_CACHE.get(key)
-        if hit is not None:
-            return hit
-    from .artifacts import store_name
+    from .. import memo
+    from .artifacts import store_tier
 
-    name = store_name("dsir_ratio", cache_key, store, store_token,
-                      text_col, n_buckets, alpha, bigrams, HASH_VERSION)
-    if name is not None:
-        got = store.load_df(target.sparkSession, name, store_token)
-        if got is not None:
-            art = (got[0], float(got[1]["n_t"]), float(got[1]["n_r"]))
-            if key is not None:
-                _RATIO_CACHE[key] = art
-            return art
-    tg = _exploded(target, text_col, None, n_buckets, bigrams)
-    rg = _exploded(raw, text_col, None, n_buckets, bigrams)
-    counts = (rg.groupBy("bucket").agg(F.count("*").alias("c_r"))
-              .join(tg.groupBy("bucket").agg(F.count("*").alias("c_t")),
-                    "bucket", "full")
-              .select("bucket", "c_t", "c_r")
-              .localCheckpoint(eager=True))
-    # totals = exact column sums over the bounded counts frame (every gram
-    # lands in some bucket), so pricing needs no second corpus pass
-    tot = counts.agg(F.sum("c_t").alias("n_t"),
-                     F.sum("c_r").alias("n_r")).collect()[0]
-    art = (counts, float(tot["n_t"] or 0.0), float(tot["n_r"] or 0.0))
-    if name is not None:
-        store.save_df(name, store_token, counts,
-                      extra={"n_t": art[1], "n_r": art[2]})
-        # run THIS session on the persisted artifact too (reaps the
-        # checkpoint blocks; identical values by construction)
-        art = (store.load_df(target.sparkSession, name, store_token)[0],
-               art[1], art[2])
-    if key is not None:
-        _RATIO_CACHE[key] = art
-    return art
+    def fit():
+        tg = _exploded(target, text_col, None, n_buckets, bigrams)
+        rg = _exploded(raw, text_col, None, n_buckets, bigrams)
+        counts = (rg.groupBy("bucket").agg(F.count("*").alias("c_r"))
+                  .join(tg.groupBy("bucket").agg(F.count("*").alias("c_t")),
+                        "bucket", "full")
+                  .select("bucket", "c_t", "c_r")
+                  .localCheckpoint(eager=True))
+        # totals = exact column sums over the bounded counts frame (every
+        # gram lands in some bucket), so pricing needs no second corpus
+        # pass
+        tot = counts.agg(F.sum("c_t").alias("n_t"),
+                         F.sum("c_r").alias("n_r")).collect()[0]
+        return counts, {"n_t": float(tot["n_t"] or 0.0),
+                        "n_r": float(tot["n_r"] or 0.0)}
+
+    key = None if cache_key is None else (cache_key, text_col, n_buckets,
+                                          alpha, bigrams, HASH_VERSION)
+    counts, extra = memo.get("dsir_ratio", key, fit, store=store_tier(
+        "df", "dsir_ratio", cache_key, store, store_token, text_col,
+        n_buckets, alpha, bigrams, HASH_VERSION,
+        spark=target.sparkSession))
+    return counts, float(extra["n_t"]), float(extra["n_r"])
 
 
 def _lr_from_counts(counts: DataFrame, n_t: float, n_r: float,
@@ -283,7 +255,6 @@ def _lr_from_counts(counts: DataFrame, n_t: float, n_r: float,
          + F.log(F.lit(n_r) + ab)).alias("lr"))
 
 
-_WARR_CACHE: dict = {}
 #: largest n_buckets the dense literal weight array is built for — past
 #: this the literal bloats every serialized task plan, so the
 #: broadcast-join scoring form stands (the DSIR paper uses 10k buckets;
@@ -301,22 +272,20 @@ def _bucket_lr_array(spark, counts: DataFrame, n_t: float, n_r: float,
     price are evaluated by the SAME Catalyst log expressions the join
     path uses, so the per-bucket values are bit-identical (a Python
     ``math.log`` could differ in the last ulp from JVM ``Math.log``).
-    Memoized per (session, corpus, params): warm calls cost zero jobs."""
-    if memo_key is not None:
-        hit = _WARR_CACHE.get(memo_key)
-        if hit is not None:
-            return hit
-    ab = F.lit(float(alpha) * n_buckets)
-    seen = {r["bucket"]: r["lr"]
-            for r in _lr_from_counts(counts, n_t, n_r,
-                                     n_buckets, alpha).collect()}
-    default = spark.range(1).select(
-        (F.log(F.lit(n_t) + ab) * -1
-         + F.log(F.lit(n_r) + ab)).alias("v")).collect()[0]["v"]
-    warr = [seen.get(b, default) for b in range(n_buckets)]
-    if memo_key is not None:
-        _WARR_CACHE[memo_key] = warr
-    return warr
+    Memoized per (corpus version, params): warm calls cost zero jobs."""
+    from .. import memo
+
+    def build():
+        ab = F.lit(float(alpha) * n_buckets)
+        seen = {r["bucket"]: r["lr"]
+                for r in _lr_from_counts(counts, n_t, n_r,
+                                         n_buckets, alpha).collect()}
+        default = spark.range(1).select(
+            (F.log(F.lit(n_t) + ab) * -1
+             + F.log(F.lit(n_r) + ab)).alias("v")).collect()[0]["v"]
+        return [seen.get(b, default) for b in range(n_buckets)]
+
+    return memo.get("dsir_warr", memo_key, build)
 
 
 def dsir_log_weights(docs: DataFrame, target: DataFrame,
@@ -413,8 +382,8 @@ def dsir_log_weights(docs: DataFrame, target: DataFrame,
                     .groupBy(id_col)
                     .agg(F.sum("lr").alias("logw"),
                          F.count("*").alias("n_grams")))
-        memo_key = (docs.sparkSession.sparkContext.applicationId,
-                    cache_key, text_col, n_buckets, alpha, bigrams)
+        memo_key = (cache_key, store_token, text_col, n_buckets, alpha,
+                    bigrams, HASH_VERSION)
         warr = _bucket_lr_array(docs.sparkSession, counts, n_t, n_r,
                                 n_buckets, alpha, memo_key)
         wlit = F.array(*[F.lit(float(v)) for v in warr])

@@ -38,8 +38,6 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-_PPX_CACHE: dict = {}
-
 #: rows per LM frame above which the scoring joins stop broadcasting
 VOCAB_GATE = 1 << 20
 
@@ -67,71 +65,60 @@ def bigram_lm_fit(target: DataFrame, text_col: str = "text",
     ``text.unigram_lm_scores`` (whitespace words of the lowercased text).
     Same memo + ArtifactStore contract as every fit in this package.
     """
-    from .artifacts import store_name
+    from .. import memo
+    from .artifacts import store_tier
     from .text import words
 
-    key = None
-    if cache_key is not None:
-        key = ("ppx", target.sparkSession.sparkContext.applicationId,
-               cache_key, text_col, uni_cap, big_cap)
-        hit = _PPX_CACHE.get(key)
-        if hit is not None:
-            return hit
-    nm_u = store_name("ppx_uni", cache_key, store, store_token,
-                      text_col, uni_cap, big_cap)
-    nm_b = store_name("ppx_big", cache_key, store, store_token,
-                      text_col, uni_cap, big_cap)
-    if nm_u is not None:
-        got_u = store.load_df(target.sparkSession, nm_u, store_token)
-        got_b = store.load_df(target.sparkSession, nm_b, store_token)
-        if got_u is not None and got_b is not None:
-            art = (got_u[0], got_b[0],
-                   float(got_u[1]["N"]), float(got_u[1]["V"]),
-                   got_u[1].get("rows"), got_b[1].get("rows"))
-            if key is not None:
-                _PPX_CACHE[key] = art
-            return art
-    ws = target.select(words(F.lower(F.col(text_col))).alias("__ws"))
-    toks = ws.select(F.explode("__ws").alias("w"))
-    uc = toks.groupBy("w").agg(F.count("*").alias("c_u"))
-    tot = uc.agg(F.sum("c_u").alias("N"),
-                 F.count("*").alias("V")).collect()[0]
-    n_total, v_total = float(tot["N"] or 0.0), float(tot["V"] or 0.0)
-    # caps: TakeOrderedAndProject (count desc, word asc — deterministic),
-    # bounded artifacts.  Unseen-after-cap entries back off exactly like
-    # truly-unseen ones, so capping only coarsens, never corrupts.
-    uni = (uc.orderBy(F.col("c_u").desc(), F.col("w").asc())
-           .limit(uni_cap)
-           .select(F.xxhash64("w").alias("h"), "c_u")
-           .localCheckpoint(eager=True))
-    bc = (ws.select(F.explode(_pairs(F.col("__ws"))).alias("p"))
-          .select("p.w1", "p.w2")
-          .groupBy("w1", "w2").agg(F.count("*").alias("c_b")))
-    big = (bc.join(uc, bc["w1"] == uc["w"])          # co-keyed on w1
-           .select("w1", "w2",
-                   (F.col("c_b").cast("double")
-                    / F.col("c_u").cast("double")).alias("m"),
-                   "c_b")
-           .orderBy(F.col("c_b").desc(), F.col("w1").asc(),
-                    F.col("w2").asc())
-           .limit(big_cap)
-           .select(F.xxhash64("w1", "w2").alias("hb"), "m")
-           .localCheckpoint(eager=True))
-    # frame sizes are fit-time facts — carried in the artifact so every
-    # scoring call can pick its join strategy WITHOUT probe jobs (the
-    # counts run over the just-checkpointed frames, fit-once cost)
-    n_uni, n_big = uni.count(), big.count()
-    art = (uni, big, n_total, v_total, n_uni, n_big)
-    if nm_u is not None:
-        store.save_df(nm_u, store_token, uni,
-                      extra={"N": n_total, "V": v_total, "rows": n_uni})
-        store.save_df(nm_b, store_token, big, extra={"rows": n_big})
-        art = (store.load_df(target.sparkSession, nm_u, store_token)[0],
-               store.load_df(target.sparkSession, nm_b, store_token)[0],
-               n_total, v_total, n_uni, n_big)
-    if key is not None:
-        _PPX_CACHE[key] = art
-    return art
+    def counts():
+        ws = target.select(words(F.lower(F.col(text_col))).alias("__ws"))
+        toks = ws.select(F.explode("__ws").alias("w"))
+        return ws, toks.groupBy("w").agg(F.count("*").alias("c_u"))
+
+    def fit_uni():
+        uc = counts()[1]
+        tot = uc.agg(F.sum("c_u").alias("N"),
+                     F.count("*").alias("V")).collect()[0]
+        # caps: TakeOrderedAndProject (count desc, word asc —
+        # deterministic), bounded artifacts.  Unseen-after-cap entries
+        # back off exactly like truly-unseen ones, so capping only
+        # coarsens, never corrupts.
+        uni = (uc.orderBy(F.col("c_u").desc(), F.col("w").asc())
+               .limit(uni_cap)
+               .select(F.xxhash64("w").alias("h"), "c_u")
+               .localCheckpoint(eager=True))
+        # frame sizes are fit-time facts — carried in the artifact so
+        # every scoring call can pick its join strategy WITHOUT probe
+        # jobs (the counts run over the just-checkpointed frames)
+        return uni, {"N": float(tot["N"] or 0.0),
+                     "V": float(tot["V"] or 0.0), "rows": uni.count()}
+
+    def fit_big():
+        ws, uc = counts()
+        bc = (ws.select(F.explode(_pairs(F.col("__ws"))).alias("p"))
+              .select("p.w1", "p.w2")
+              .groupBy("w1", "w2").agg(F.count("*").alias("c_b")))
+        big = (bc.join(uc, bc["w1"] == uc["w"])          # co-keyed on w1
+               .select("w1", "w2",
+                       (F.col("c_b").cast("double")
+                        / F.col("c_u").cast("double")).alias("m"),
+                       "c_b")
+               .orderBy(F.col("c_b").desc(), F.col("w1").asc(),
+                        F.col("w2").asc())
+               .limit(big_cap)
+               .select(F.xxhash64("w1", "w2").alias("hb"), "m")
+               .localCheckpoint(eager=True))
+        return big, {"rows": big.count()}
+
+    key = None if cache_key is None else (cache_key, text_col, uni_cap,
+                                          big_cap)
+    uni, ux = memo.get("ppx_uni", key, fit_uni, store=store_tier(
+        "df", "ppx_uni", cache_key, store, store_token, text_col, uni_cap,
+        big_cap, spark=target.sparkSession))
+    big, bx = memo.get("ppx_big", key, fit_big, store=store_tier(
+        "df", "ppx_big", cache_key, store, store_token, text_col, uni_cap,
+        big_cap, spark=target.sparkSession))
+    return (uni, big, float(ux["N"]), float(ux["V"]), ux.get("rows"),
+            bx.get("rows"))
 
 
 def bigram_xent_scores(df: DataFrame, art, text_col: str = "text",

@@ -338,9 +338,6 @@ def mix_corpora(corpora, id_col: str = "doc_id",
     return out
 
 
-_MIX_CACHE: dict = {}
-
-
 def _validate_mix_params(target_total, cap) -> None:
     """Shared cap/target_total contract for the temperature-mix entry
     points — cap is a per-row keep PROBABILITY (the md5-threshold
@@ -362,36 +359,22 @@ def mix_tag_counts(df: DataFrame, tag_col: str,
     artifact is alpha/target/cap-agnostic (rates rebuild in-plan from
     the counts with the identical Catalyst expressions, so the sampled
     subset is bit-identical to the lazy path's)."""
-    key = None
-    if cache_key is not None:
-        key = (df.sparkSession.sparkContext.applicationId, cache_key,
-               tag_col)
-        hit = _MIX_CACHE.get(key)
-        if hit is not None:
-            return hit
-    from .artifacts import store_name
+    from .. import memo
+    from .artifacts import store_tier
 
-    name = store_name("mix_counts", cache_key, store, store_token,
-                      tag_col)
-    if name is not None:
-        got = store.load_df(df.sparkSession, name, store_token)
-        if got is not None:
-            if key is not None:
-                _MIX_CACHE[key] = got[0]
-            return got[0]
-    sz = df.groupBy(tag_col).agg(F.count("*").alias("__n"))
-    if name is not None:
-        sz = sz.localCheckpoint(eager=True)
-        store.save_df(name, store_token, sz)
-        sz = store.load_df(df.sparkSession, name, store_token)[0]
-    elif key is not None:
-        # session-memo-only: materialize, or the memo would hand back
-        # the lazy plan and every consumer action would re-run the
-        # corpus-wide groupBy (the frame is bounded by the tag vocab)
-        sz = sz.localCheckpoint(eager=True)
-    if key is not None:
-        _MIX_CACHE[key] = sz
-    return sz
+    key = None if cache_key is None else (cache_key, tag_col)
+
+    def fit():
+        sz = df.groupBy(tag_col).agg(F.count("*").alias("__n"))
+        # a kept entry is materialized: the store saves from the
+        # checkpoint, and a memo-only entry must not hand back the lazy
+        # plan (every consumer action would re-run the corpus-wide
+        # groupBy; the frame is bounded by the tag vocab)
+        return (sz if key is None else sz.localCheckpoint(eager=True)), {}
+
+    return memo.get("mix_counts", key, fit, store=store_tier(
+        "df", "mix_counts", cache_key, store, store_token, tag_col,
+        spark=df.sparkSession))[0]
 
 
 def temperature_mix_sample(df: DataFrame, tag_col: str, id_col: str,

@@ -23,7 +23,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
-from .artifacts import store_name as _artifact_store_name
+from .. import memo
+from .artifacts import store_tier
 from .dedup import cosine
 
 
@@ -202,9 +203,6 @@ def sample_rows(df: DataFrame, cap: int, id_col: str,
             .limit(cap))
 
 
-_CENTERS_CACHE: dict = {}
-
-
 def kmeans_fit(df: DataFrame, n_centroids: int, vec_col: str = "embedding",
                id_col: str = "vec_id", seed: int = 42,
                sample_cap: int = 4096, iters: int = 20,
@@ -230,38 +228,26 @@ def kmeans_fit(df: DataFrame, n_centroids: int, vec_col: str = "embedding",
     as an ``.npz`` and a fresh session loads it with zero Spark jobs; a
     corpus write changes the token and refits.
     """
-    key = None
-    if cache_key is not None:
-        key = (df.sparkSession.sparkContext.applicationId, cache_key,
-               n_centroids, seed, sample_cap, iters)
-        hit = _CENTERS_CACHE.get(key)
-        if hit is not None:
-            return hit
-    name = _artifact_store_name("kmeans", cache_key, store, store_token,
-                       n_centroids, seed, sample_cap, iters)
-    if name is not None:
-        got = store.load_arrays(name, store_token)
-        if got is not None:
-            C = got[0]["C"]
-            if key is not None:
-                _CENTERS_CACHE[key] = C
-            return C
-    pdf = (sample_rows(df.select(id_col, vec_col), sample_cap, id_col, n=n)
-           .toPandas().sort_values(id_col))
-    X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    rng = np.random.RandomState(seed)
-    C = X[rng.choice(len(X), min(n_centroids, len(X)), replace=False)].copy()
-    for _ in range(iters):
-        dmat = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        a = dmat.argmin(axis=1)
-        for j in range(len(C)):
-            if (a == j).any():
-                C[j] = X[a == j].mean(axis=0)
-    if name is not None:
-        store.save_arrays(name, store_token, C=C)
-    if key is not None:
-        _CENTERS_CACHE[key] = C
-    return C
+    def fit():
+        pdf = (sample_rows(df.select(id_col, vec_col), sample_cap, id_col,
+                           n=n).toPandas().sort_values(id_col))
+        X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        rng = np.random.RandomState(seed)
+        C = X[rng.choice(len(X), min(n_centroids, len(X)),
+                         replace=False)].copy()
+        for _ in range(iters):
+            dmat = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+            a = dmat.argmin(axis=1)
+            for j in range(len(C)):
+                if (a == j).any():
+                    C[j] = X[a == j].mean(axis=0)
+        return {"C": C}, {}
+
+    key = None if cache_key is None else (
+        cache_key, vec_col, id_col, n_centroids, seed, sample_cap, iters)
+    tier = store_tier("arrays", "kmeans", cache_key, store, store_token,
+                      n_centroids, seed, sample_cap, iters)
+    return memo.get("kmeans", key, fit, store=tier)[0]["C"]
 
 
 def assign_cells(vec_col: Column, centers: np.ndarray, m: int = 1) -> Column:
@@ -389,22 +375,16 @@ def pq_fit(df: DataFrame, m: int = 8, ks: int = 256,
     approximates cosine.  Same train-once ``cache_key`` posture as the IVF
     coarse quantizer.
     """
-    key = None
-    if cache_key is not None:
-        key = ("pq", df.sparkSession.sparkContext.applicationId, cache_key,
-               m, ks, seed, sample_cap, iters)
-        hit = _CENTERS_CACHE.get(key)
-        if hit is not None:
-            return hit
-    name = _artifact_store_name("pq", cache_key, store, store_token,
-                       m, ks, seed, sample_cap, iters)
-    if name is not None:
-        got = store.load_arrays(name, store_token)
-        if got is not None:
-            books = got[0]["books"]
-            if key is not None:
-                _CENTERS_CACHE[key] = books
-            return books
+    key = None if cache_key is None else (
+        cache_key, vec_col, id_col, m, ks, seed, sample_cap, iters)
+    tier = store_tier("arrays", "pq", cache_key, store, store_token,
+                      m, ks, seed, sample_cap, iters)
+    return memo.get("pq", key, lambda: _pq_fit(
+        df, m, ks, vec_col, id_col, seed, sample_cap, iters, n),
+        store=tier)[0]["books"]
+
+
+def _pq_fit(df, m, ks, vec_col, id_col, seed, sample_cap, iters, n):
     pdf = (sample_rows(df.select(id_col, vec_col), sample_cap, id_col, n=n)
            .toPandas().sort_values(id_col))
     X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
@@ -429,11 +409,7 @@ def pq_fit(df: DataFrame, m: int = 8, ks: int = 256,
         if k_eff < ks:
             # pad unused slots far away so they are never argmin winners
             books[j, k_eff:] = 1e6
-    if name is not None:
-        store.save_arrays(name, store_token, books=books)
-    if key is not None:
-        _CENTERS_CACHE[key] = books
-    return books
+    return {"books": books}, {}
 
 
 def pq_encode(vec_col: Column, codebooks: np.ndarray) -> Column:
@@ -530,22 +506,19 @@ def ivfadc_fit(df: DataFrame, n_centroids: int = 16, m: int = 8,
     ``cache_key`` memoization as ``kmeans_fit``/``pq_fit``); returns
     ((n_centroids, dim), (m, ks, dim/m)) float64 arrays to close over.
     """
-    key = None
-    if cache_key is not None:
-        key = ("ivfadc", df.sparkSession.sparkContext.applicationId,
-               cache_key, n_centroids, m, ks, seed, sample_cap, iters)
-        hit = _CENTERS_CACHE.get(key)
-        if hit is not None:
-            return hit
-    name = _artifact_store_name("ivfadc", cache_key, store, store_token,
-                       n_centroids, m, ks, seed, sample_cap, iters)
-    if name is not None:
-        got = store.load_arrays(name, store_token)
-        if got is not None:
-            art = (got[0]["centers"], got[0]["books"])
-            if key is not None:
-                _CENTERS_CACHE[key] = art
-            return art
+    key = None if cache_key is None else (
+        cache_key, vec_col, id_col, n_centroids, m, ks, seed, sample_cap,
+        iters)
+    tier = store_tier("arrays", "ivfadc", cache_key, store, store_token,
+                      n_centroids, m, ks, seed, sample_cap, iters)
+    got = memo.get("ivfadc", key, lambda: _ivfadc_fit(
+        df, n_centroids, m, ks, vec_col, id_col, seed, sample_cap, iters,
+        n), store=tier)[0]
+    return got["centers"], got["books"]
+
+
+def _ivfadc_fit(df, n_centroids, m, ks, vec_col, id_col, seed, sample_cap,
+                iters, n):
     pdf = (sample_rows(df.select(id_col, vec_col), sample_cap, id_col, n=n)
            .toPandas().sort_values(id_col))
     X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
@@ -583,12 +556,7 @@ def ivfadc_fit(df: DataFrame, n_centroids: int = 16, m: int = 8,
         books[j, :k_eff] = B
         if k_eff < ks:
             books[j, k_eff:] = 1e6
-    art = (centers, books)
-    if name is not None:
-        store.save_arrays(name, store_token, centers=centers, books=books)
-    if key is not None:
-        _CENTERS_CACHE[key] = art
-    return art
+    return {"centers": centers, "books": books}, {}
 
 
 def ivfadc_encode(vec_col: Column, centers: np.ndarray,

@@ -50,14 +50,13 @@ _SAFETY = 8
 # driver on a high-cardinality grouping at 100 TB)
 _SIZES_BCAST_GATE = 1_000_000
 
-# (appId, df.semanticHash, col, by, k, gate) -> small: bool — repeated
-# sketch builds over the same input reuse the gate DECISION so only the
-# first call pays the probe job.  Deliberately NOT the checkpointed
-# frame: a cached localCheckpoint pins executor storage for the app
-# lifetime and a single executor loss would poison the entry forever
-# (review r10); the sizes aggregation itself recomputes lazily inside
-# the sketch job, exactly as the unprobed path always did
-_SIZES_CACHE: dict = {}
+# memo "kmv_sizes_small": (df.semanticHash, col, by, k, gate) -> small:
+# bool — repeated sketch builds over the same input reuse the gate
+# DECISION so only the first call pays the probe job.  Deliberately NOT
+# the checkpointed frame: a cached localCheckpoint pins executor storage
+# for the app lifetime and a single executor loss would poison the entry
+# forever; the sizes aggregation itself recomputes lazily
+# inside the sketch job, exactly as the unprobed path always did
 
 
 def _kcol(k) -> Column:
@@ -115,15 +114,14 @@ def kmv_sketch(df: DataFrame, col: str, by: Sequence[str] = (),
         # checkpointed once and probed with a limit(gate+1) count
         if by:
             if n_groups is None:
-                ck = (df.sparkSession.sparkContext.applicationId,
-                      df.semanticHash(), col, tuple(by), k,
-                      _SIZES_BCAST_GATE)
-                small = _SIZES_CACHE.get(ck)
-                if small is None:
-                    small = (sizes.limit(_SIZES_BCAST_GATE + 1).count()
-                             <= _SIZES_BCAST_GATE)
-                    if len(_SIZES_CACHE) < 256:
-                        _SIZES_CACHE[ck] = small
+                from .. import memo
+
+                small = memo.get(
+                    "kmv_sizes_small",
+                    (df.semanticHash(), col, tuple(by), k,
+                     _SIZES_BCAST_GATE),
+                    lambda: (sizes.limit(_SIZES_BCAST_GATE + 1).count()
+                             <= _SIZES_BCAST_GATE), cap=256)
             else:
                 small = n_groups <= _SIZES_BCAST_GATE
             sz = F.broadcast(sizes) if small else sizes.hint("shuffle_hash")

@@ -691,9 +691,6 @@ def contamination_frac(docs: DataFrame, eval_docs: DataFrame,
                                 6)))
 
 
-_LM_CACHE: dict = {}
-
-
 def unigram_lm_fit(df: DataFrame, text_col: str = "text",
                    vocab_cap: int = 1 << 16,
                    cache_key: str | None = None,
@@ -715,39 +712,24 @@ def unigram_lm_fit(df: DataFrame, text_col: str = "text",
     over bounded storage).  A corpus write changes the token and refits.
     Requires ``cache_key`` (it names the artifact).
     """
-    key = None
-    if cache_key is not None:
-        key = (df.sparkSession.sparkContext.applicationId, cache_key,
-               text_col, vocab_cap)
-        hit = _LM_CACHE.get(key)
-        if hit is not None:
-            return hit
-    from .artifacts import store_name
+    from .. import memo
+    from .artifacts import store_tier
 
-    name = store_name("unigram_lm", cache_key, store, store_token,
-                      text_col, vocab_cap)
-    if name is not None:
-        got = store.load_df(df.sparkSession, name, store_token)
-        if got is not None:
-            art = (got[0], float(got[1]["total"]))
-            if key is not None:
-                _LM_CACHE[key] = art
-            return art
-    toks = df.select(F.explode(words(F.lower(F.col(text_col)))).alias("w"))
-    counts = toks.groupBy("w").agg(F.count("*").alias("__c"))
-    vocab = (counts.orderBy(F.col("__c").desc(), F.col("w").asc())
-             .limit(vocab_cap)
-             .localCheckpoint(eager=True))
-    total = float(counts.agg(F.sum("__c")).collect()[0][0] or 0.0)
-    art = (vocab, total)
-    if name is not None:
-        store.save_df(name, store_token, vocab, extra={"total": total})
-        # read back from storage so THIS session already runs on the
-        # persisted artifact (and the checkpoint blocks can be reaped)
-        art = (store.load_df(df.sparkSession, name, store_token)[0], total)
-    if key is not None:
-        _LM_CACHE[key] = art
-    return art
+    def fit():
+        toks = df.select(F.explode(words(F.lower(F.col(text_col))))
+                         .alias("w"))
+        counts = toks.groupBy("w").agg(F.count("*").alias("__c"))
+        vocab = (counts.orderBy(F.col("__c").desc(), F.col("w").asc())
+                 .limit(vocab_cap)
+                 .localCheckpoint(eager=True))
+        total = float(counts.agg(F.sum("__c")).collect()[0][0] or 0.0)
+        return vocab, {"total": total}
+
+    key = None if cache_key is None else (cache_key, text_col, vocab_cap)
+    tier = store_tier("df", "unigram_lm", cache_key, store, store_token,
+                      text_col, vocab_cap, spark=df.sparkSession)
+    vocab, extra = memo.get("unigram_lm", key, fit, store=tier)
+    return vocab, float(extra["total"])
 
 
 def unigram_lm_scores(df: DataFrame, text_col: str = "text",

@@ -29,6 +29,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import memo
+
 # ---------------------------------------------------------------------------
 # Russian light stemmer (Lucene RussianLightStemmer algorithm)
 # ---------------------------------------------------------------------------
@@ -212,32 +214,31 @@ def _tokens_arr_udf(s: pd.Series) -> pd.Series:
     return s.map(per_row)
 
 
-_CUSTOM_UDFS: dict = {}
-
-
 def tokens_column(col: Column, is_array: bool = False,
                   fn: Optional[Callable] = None) -> Column:
     """tokens() as a Column; ``fn`` overrides the tokenizer (Schema hook)."""
     if fn is None:
         return _tokens_arr_udf(col) if is_array else _tokens_udf(col)
-    key = (id(fn), is_array)
-    if key not in _CUSTOM_UDFS:
-        if is_array:
-            @F.pandas_udf(T.ArrayType(T.StringType()))
-            def custom_arr(s: pd.Series) -> pd.Series:
-                def per_row(arr):
-                    out: List[str] = []
-                    for item in arr or []:
-                        out.extend(fn(item))
-                    return out
+    return memo.get("custom_tokens_udf", (fn, is_array),
+                    lambda: _custom_udf(fn, is_array))(col)
 
-                return s.map(per_row)
 
-            _CUSTOM_UDFS[key] = custom_arr
-        else:
-            @F.pandas_udf(T.ArrayType(T.StringType()))
-            def custom(s: pd.Series) -> pd.Series:
-                return s.map(lambda x: [] if x is None else fn(x))
+def _custom_udf(fn: Callable, is_array: bool):
+    if is_array:
+        @F.pandas_udf(T.ArrayType(T.StringType()))
+        def custom_arr(s: pd.Series) -> pd.Series:
+            def per_row(arr):
+                out: List[str] = []
+                for item in arr or []:
+                    out.extend(fn(item))
+                return out
 
-            _CUSTOM_UDFS[key] = custom
-    return _CUSTOM_UDFS[key](col)
+            return s.map(per_row)
+
+        return custom_arr
+
+    @F.pandas_udf(T.ArrayType(T.StringType()))
+    def custom(s: pd.Series) -> pd.Series:
+        return s.map(lambda x: [] if x is None else fn(x))
+
+    return custom

@@ -29,6 +29,7 @@ from typing import Any, Dict, Iterable, Optional, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import memo
 from ..schema import Schema, Table
 
 BUCKET_COL = "__month"
@@ -45,22 +46,19 @@ TOKEN_PIN = "__token_pin"
 # wrong column (advice r9)
 BUCKET_PIN = "__bucket_pin"
 
-_FIXER_UDFS: dict = {}
-
-
 def _item_fixer_udf(fn):
     """Vectorized (Arrow) wrapper for the schema's item_fixer hook; memoized
     per hook so repeated upserts reuse one UDF registration."""
     from pyspark.sql import types as T
 
-    key = id(fn)
-    if key not in _FIXER_UDFS:
+    def build():
         @F.pandas_udf(T.StringType())
         def fixer(s: pd.Series) -> pd.Series:
             return s.map(lambda v: None if v is None else fn(v))
 
-        _FIXER_UDFS[key] = fixer
-    return _FIXER_UDFS[key]
+        return fixer
+
+    return memo.get("item_fixer_udf", (fn,), build)
 
 
 @_dataclasses.dataclass
@@ -410,13 +408,10 @@ class Warehouse:
                     "write of %r to sweep", old, e, table)
         # volume-gate cache entries for this table are now stale — the next
         # query must re-stat the warehouse copy, or tune_for_volume would
-        # keep the pre-write posture for a much larger table
-        from ..compiler import Tsdb
-        with Tsdb._BYTES_CACHE_LOCK:
-            for k in [k for k in Tsdb._BYTES_CACHE
-                      if k[1] == self.root and k[2] == table]:
-                del Tsdb._BYTES_CACHE[k]
-            Tsdb._BYTES_EPOCH += 1   # invalidate in-flight reader stats
+        # keep the pre-write posture for a much larger table (a stat in
+        # flight across the swap is not kept either)
+        memo.invalidate("table_bytes",
+                        lambda p: p[1] == self.root and p[2] == table)
 
     def compact(self, table: str, max_records_per_file: int = 0) -> dict:
         """Rewrite ``table`` with one output file per time-bucket partition

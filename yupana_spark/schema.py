@@ -16,41 +16,28 @@ the time-bucket partition column used for partition pruning at scale.
 from __future__ import annotations
 
 import os
-import threading
 from dataclasses import dataclass, field
 from typing import Callable, Dict, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import types as yt
+from . import memo, types as yt
 
 
-# base-DataFrame memo per (session, path): a plain ``spark.read.parquet``
-# re-runs file listing + footer/schema resolution on EVERY call, which is the
-# bulk of the fixed per-query latency at small scale (and a needless
-# namenode/object-store round trip at large scale).  The cached object is an
-# immutable logical plan — filters/projections compose on top per query, so
-# pushdown and pruning are unaffected.  Keyed by applicationId (stable per
-# session, never aliased the way id() can be).
-_PARQUET_CACHE: Dict[Tuple[str, str], DataFrame] = {}
-
-
+# base-DataFrame memo per path: a plain ``spark.read.parquet`` re-runs file
+# listing + footer/schema resolution on EVERY call, which is the bulk of the
+# fixed per-query latency at small scale (and a needless namenode/object-
+# store round trip at large scale).  The cached object is an immutable
+# logical plan — filters/projections compose on top per query, so pushdown
+# and pruning are unaffected.  ``time_col`` only orders the one-time
+# rewrite's files (see _parallel_read); the rows are the path's, so the
+# path alone keys the entry.
 def cached_parquet(spark: SparkSession, path: str,
                    time_col: Optional[str] = None) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path)
-    df = _PARQUET_CACHE.get(key)
-    if df is None:
-        df = _parallel_read(spark, path, time_col)
-        _PARQUET_CACHE[key] = df
-    return df
+    return memo.get("parquet", (path,),
+                    lambda: _parallel_read(spark, path, time_col))
 
 
-# session-scoped re-ingested copies of single-row-group fixture files
-# (path -> rewritten dir); see _parallel_read.  The lock serializes the
-# one-time rewrite across threads (pgwire serves concurrent connections):
-# without it two first-touches both pay the rewrite and race the memo.
-_SPLIT_CACHE: Dict[Tuple[str, str], str] = {}
-_SPLIT_LOCK = threading.Lock()
 _SPLIT_MIN_ROWS = 50_000       # only fact-sized tables; dims broadcast anyway
 _SPLIT_MAX_BYTES = 256 << 20   # fixture-shape gate — never triggers at scale
 # ~32k rows/file: measured sweet spot on local[32] — light aggregates over
@@ -78,25 +65,12 @@ def _parallel_read(spark: SparkSession, path: str,
     pruning are untouched (plain parquet scan), and the per-file min/max
     time stats now PRUNE files under the mandatory time condition, which is
     exactly the at-scale layout.  Small dims and multi-row-group inputs are
-    returned as-is; nothing under /root/testdata is ever written.
+    returned as-is; the source files are never written.  Runs as
+    the build of the path's ``cached_parquet`` entry, so concurrent first
+    touches (pgwire serves connections from threads) pay one rewrite.
     """
     df = spark.read.parquet(path)
-    # double-checked memo: steady-state reads of an already-rewritten path
-    # never touch the lock; only the one-time rewrite serializes
-    done = _SPLIT_CACHE.get((spark.sparkContext.applicationId, path))
-    if done is not None:
-        return spark.read.parquet(done)
-    with _SPLIT_LOCK:
-        return _parallel_read_locked(spark, path, time_col, df)
-
-
-def _parallel_read_locked(spark: SparkSession, path: str,
-                          time_col: Optional[str],
-                          df: DataFrame) -> DataFrame:
     try:
-        done = _SPLIT_CACHE.get((spark.sparkContext.applicationId, path))
-        if done is not None:
-            return spark.read.parquet(done)
         import pyarrow.parquet as pq
 
         if (not os.path.isfile(path)
@@ -127,18 +101,15 @@ def _parallel_read_locked(spark: SparkSession, path: str,
             chunk = tbl.slice(i * per_file, per_file)
             if chunk.num_rows:
                 pq.write_table(chunk, os.path.join(out, f"part-{i:05d}.parquet"))
-        _SPLIT_CACHE[(spark.sparkContext.applicationId, path)] = out
         return spark.read.parquet(out)
     except Exception:  # noqa: BLE001 — layout fixing must never fail a read
         return df
 
 
 def invalidate_parquet_cache(path_prefix: str = "") -> None:
-    """Drop cached reads under a path prefix (used after writes)."""
-    for k in [k for k in _PARQUET_CACHE if k[1].startswith(path_prefix)]:
-        del _PARQUET_CACHE[k]
-    for k in [k for k in _SPLIT_CACHE if k[1].startswith(path_prefix)]:
-        del _SPLIT_CACHE[k]
+    """Drop cached reads (and with them their rewritten copies' frames)
+    under a path prefix (used after writes)."""
+    memo.invalidate("parquet", lambda p: p[0].startswith(path_prefix))
 
 
 @dataclass(frozen=True)

@@ -13,8 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-
-_CONFED_SESSIONS: set = set()
+from . import memo
 
 
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
@@ -23,13 +22,14 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     The driver harness hands us its own SparkSession; these confs are the
     ones that must hold regardless of how the session was built (dialect
     semantics + the AQE posture).  Only runtime-settable keys belong here.
-    Applied once per session (memoized by applicationId): every Tsdb/datapipe
-    entry calls this, and nine py4j conf round trips per query add up.
+    Applied once per application (memoized): every Tsdb/datapipe entry
+    calls this, and nine py4j conf round trips per query add up.
     """
-    app = spark.sparkContext.applicationId
-    if app in _CONFED_SESSIONS:
-        return spark
-    _CONFED_SESSIONS.add(app)
+    memo.get("engine_confs", (), lambda: _apply_engine_confs(spark))
+    return spark
+
+
+def _apply_engine_confs(spark: SparkSession) -> bool:
     cpus = spark.sparkContext.defaultParallelism
     for k, v in {
         "spark.sql.session.timeZone": "UTC",
@@ -54,7 +54,7 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:  # noqa: BLE001 — non-settable on some builds
             pass
-    return spark
+    return True
 
 
 SMALL_INPUT_BYTES = 1 << 30
