@@ -219,12 +219,93 @@ def test_extended_portal_suspension(client):
     msgs = client.read_until_ready()
     tags = [t for t, _ in msgs]
     assert tags.count(b"D") == 3 and b"s" in tags           # PortalSuspended
+    paged = [PgClient._row(b) for t, b in msgs if t == b"D"]
     # resume the suspended portal: remaining 7 rows then CommandComplete
     client.send(b"E", _cstr("p2") + struct.pack("!i", 0))
     client.send(b"S")
     msgs = client.read_until_ready()
     assert [t for t, _ in msgs].count(b"D") == 7
     assert any(t == b"C" for t, _ in msgs)
+    paged += [PgClient._row(b) for t, b in msgs if t == b"D"]
+    # the two pages, in order, are exactly the statement's full result
+    _, rows, errors = client.query(sql)
+    assert not errors and paged == rows
+
+
+def _group_jobs(sc, group):
+    """Job ids of ``group`` once the listener bus has caught up."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10000)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_job_per_statement(server, tsdb):
+    """A statement's rows come from one Spark job however many partitions
+    the result has, and an admin answer (a driver-local relation) needs no
+    job at all."""
+    c = PgClient(server, ssl_probe=True)
+    msgs = c.read_until_ready()
+    pid, secret = struct.unpack(
+        "!II", [body for tag, body in msgs if tag == b"K"][0])
+    group = f"pgwire-{pid}-{secret}"
+    sc = tsdb.spark.sparkContext
+    sql = (f"SELECT l_returnflag, count(l_quantity) AS cnt "
+           f"FROM lineitem WHERE {TB} GROUP BY l_returnflag")
+    assert tsdb.sql(sql).rdd.getNumPartitions() >= 2
+    _, rows, errors = c.query(sql)
+    assert not errors and len(rows) == 3
+    assert len(_group_jobs(sc, group)) == 1
+    _, rows, errors = c.query("SHOW TABLES")
+    assert not errors and ["lineitem"] in rows
+    assert len(_group_jobs(sc, group)) == 1
+    c.close()
+
+
+def test_describe_statement_does_not_execute_writes(tsdb, tmp_path):
+    """Describe of a prepared UPSERT answers NoData and writes nothing;
+    only its Execute writes.  Reads are still described."""
+    from yupana_spark import Tsdb, default_schema
+    from tests.conftest import SF_SMALL
+
+    wt = Tsdb(tsdb.spark, default_schema(), SF_SMALL,
+              warehouse_root=str(tmp_path / "wh"))
+    srv = PgWireServer(wt, port=0)
+    c = PgClient(srv.start(), ssl_probe=True)
+    c.read_until_ready()
+    count = ("SELECT count(l_orderkey) AS c FROM lineitem "
+             "WHERE time >= TIMESTAMP '1996-06-01' "
+             "AND time < TIMESTAMP '1996-07-01' AND l_orderkey >= 7000000")
+
+    def state():
+        _, n, e1 = c.query(count)
+        _, iv, e2 = c.query("SHOW UPDATES_INTERVALS")
+        assert not e1 and not e2
+        return n, iv
+
+    upsert = ("UPSERT INTO lineitem (time, l_orderkey, l_partkey, "
+              "l_suppkey, l_linenumber, l_quantity) VALUES "
+              "(TIMESTAMP '1996-06-06', 7000000, 1, 1, 1, 42.0)")
+    try:
+        before = state()
+        for name, sql in (("sel", count), ("show", "SHOW TABLES"),
+                          ("up", upsert)):
+            c.send(b"P", _cstr(name) + _cstr(sql) + struct.pack("!H", 0))
+            c.send(b"D", b"S" + _cstr(name))
+        c.send(b"S")
+        tags = [t for t, _ in c.read_until_ready()]
+        assert state() == before
+        # ParseComplete, ParameterDescription, then RowDescription / NoData
+        assert tags == [b"1", b"t", b"T"] * 2 + [b"1", b"t", b"n"]
+        c.send(b"B", _cstr("") + _cstr("up") + struct.pack("!H", 0)
+               + struct.pack("!H", 0) + struct.pack("!H", 0))
+        c.send(b"E", _cstr("") + struct.pack("!i", 0))
+        c.send(b"S")
+        row = next(b for t, b in c.read_until_ready() if t == b"D")
+        assert PgClient._row(row) == ["1"]
+        n, iv = state()
+        assert n == [["1"]] and len(iv) > len(before[1])
+    finally:
+        c.close()
+        srv.stop()
 
 
 def test_extended_error_skips_to_sync(client):
@@ -446,7 +527,7 @@ def test_cancel_request_kills_running_job(server, tsdb):
     job dies mid-flight; a wrong secret cancels nothing.  (The fixture's
     dialect queries finish in milliseconds, so the victim job is started
     directly under the connection's registered group — the same group every
-    wire query's streaming jobs run in, see _send_rows.)"""
+    wire query's result job runs in, see _send_rows.)"""
     import threading
     import time
 

@@ -19,7 +19,9 @@ from __future__ import annotations
 import dataclasses as _dataclasses
 from typing import TYPE_CHECKING
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import __version__ as _pkg_version_guard  # noqa: F401
 from .. import types as yt
@@ -32,7 +34,16 @@ if TYPE_CHECKING:
 
 
 def _df(spark, rows, schema):
-    return spark.createDataFrame(rows, schema)
+    """A statement's answer as a driver-local ``LocalRelation``.
+
+    Built from an Arrow table, so collecting it runs no Spark job; a plain
+    row list would be parallelized into an RDD that costs one job per
+    answer (every UPSERT's one-row count included)."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 # SHOW FUNCTIONS FOR <type> (FunctionRegistry.scala:334-342)

@@ -15,9 +15,14 @@
 Implementation is deliberately NOT a Netty translation: a threaded
 `socketserver` front-end that parses the public protocol with `struct`
 and hands every statement to `Tsdb.sql` (parse -> analyze -> DataFrame).
-Results stream through `DataFrame.toLocalIterator()` — the driver never
-materializes the full result set, so a 100 TB-scale SELECT streams
-partition-by-partition to the client instead of OOMing the driver.
+Each statement's result is fetched with one Spark action
+(`DataFrame.collect()`), so a statement costs one job, not one job per
+result partition.  The driver holds the whole result while it is sent,
+capped by Spark's own `spark.driver.maxResultSize` (default 1 GiB; the
+engine does not set it): a larger result fails the statement with Spark's
+error as an ErrorResponse and the connection stays usable.  This is the
+default of Spark's own Thrift JDBC server
+(`spark.sql.thriftServer.incrementalCollect=false`).
 
 All results are sent in text format (format code 0).  Extended-protocol
 parameters are accepted in text format and typed from the Parse-message
@@ -273,25 +278,28 @@ class _Conn(socketserver.BaseRequestHandler):
 
     def _send_rows(self, df, limit: int = 0, it=None,
                    send_desc: bool = True) -> Tuple[int, bool, Any]:
-        """[RowDescription +] DataRows; streams via toLocalIterator.
+        """[RowDescription +] DataRows from one ``collect()`` of ``df``.
 
-        Execute responses must NOT carry a RowDescription (clients get it
-        from Describe), so ``send_desc=False`` there.  Returns
-        (rows_sent, exhausted, iterator) so Execute-with-limit can suspend
-        the portal (protocol: PortalSuspended) and resume later.
+        The whole result is fetched with a single Spark job and held on the
+        driver (bounded by ``spark.driver.maxResultSize``); ``it`` iterates
+        the collected rows.  Execute responses must NOT carry a
+        RowDescription (clients get it from Describe), so
+        ``send_desc=False`` there.  Returns (rows_sent, exhausted,
+        iterator) so Execute-with-limit can suspend the portal (protocol:
+        PortalSuspended) and resume later without running the query again.
         """
+        if it is None:
+            # the job runs on this thread: tag it with the connection's
+            # cancel group so a CancelRequest (or server-side kill)
+            # interrupts it mid-flight, not just between messages
+            try:
+                self.server.tsdb.spark.sparkContext.setJobGroup(
+                    self._group, "pgwire query", True)
+            except Exception:  # noqa: BLE001 — grouping is best-effort
+                pass
+            it = iter(df.collect())
         if send_desc:
             self._send(self._row_description(df.schema))
-        # streaming jobs run on this thread: tag them with the connection's
-        # cancel group so a CancelRequest (or server-side kill) interrupts
-        # the scan mid-stream, not just between messages
-        try:
-            self.server.tsdb.spark.sparkContext.setJobGroup(
-                self._group, "pgwire query", True)
-        except Exception:  # noqa: BLE001 — grouping is best-effort
-            pass
-        if it is None:
-            it = df.toLocalIterator()
         sent = 0
         chunk = _Buf()
         for row in it:
@@ -594,14 +602,22 @@ class _Conn(socketserver.BaseRequestHandler):
                 b"t", struct.pack("!H", len(oids))
                 + b"".join(struct.pack("!I", o or _OID_UNKNOWN)
                            for o in oids)))
+            # building a statement runs it, so only reads are built to learn
+            # their schema: an UPSERT, SET or user DDL must not take effect
+            # before Bind/Execute
+            from yupana_spark.sql import ast as A
+            from yupana_spark.sql.parser import parse as yql_parse
+
+            reads = (A.Select, A.ShowTables, A.ShowVersion, A.ShowColumns,
+                     A.ShowFunctions, A.ShowUsers, A.ShowQueries,
+                     A.ShowUpdatesIntervals)
             try:                       # schema without params -> best effort
-                df = self._execute_sql(sql)
-                if df is None:
-                    self._send(_Buf().msg(b"n"))
-                else:
-                    self._send(self._row_description(df.schema))
-            except Exception:
-                self._send(_Buf().msg(b"n"))              # NoData
+                stmt = yql_parse(self._preprocess(sql).strip().rstrip(";"))
+                df = self._execute_sql(sql) if isinstance(stmt, reads) else None
+            except Exception:  # noqa: BLE001
+                df = None
+            self._send(_Buf().msg(b"n") if df is None         # NoData
+                       else self._row_description(df.schema))
         else:
             if name not in portals:
                 raise ValueError(f'unknown portal "{name}"')
