@@ -1355,24 +1355,32 @@ def test_corpus_preprocess_bundle_minhash_verdict(spark):
 
 
 def test_prepared_posture_replay(spark):
-    """A cache hit must re-apply the volume-gated confs captured at build
-    time — another query flipping AQE/shuffle-partitions between calls must
-    not leak its posture into the cached entry's next execution."""
+    """A cache hit executes under the posture its own volume gate chose:
+    the cached frame is rooted in its posture session, so another query
+    (or a caller) flipping AQE/shuffle-partitions on the shared session
+    between calls cannot leak into the cached entry's next execution."""
     import __spark_entry__ as ent
 
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     qs = ent.queries()
-    qs["q_having"](spark, SF)  # build + snapshot
-    snap = {k: spark.conf.get(k)
-            for k in ("spark.sql.adaptive.enabled",
-                      "spark.sql.shuffle.partitions")}
-    # simulate a dp_* entry pinning the opposite posture
-    flipped = "false" if snap["spark.sql.adaptive.enabled"] == "true" else "true"
-    spark.conf.set("spark.sql.adaptive.enabled", flipped)
+    df = qs["q_having"](spark, SF)
+    snap = {k: df.sparkSession.conf.get(k) for k in keys}
+    assert snap["spark.sql.adaptive.enabled"] == "false"   # small input
+    before = {k: spark.conf.get(k) for k in keys}
+    # flip the shared session to the opposite posture
+    spark.conf.set("spark.sql.adaptive.enabled",
+                   "false" if before[keys[0]] == "true" else "true")
     spark.conf.set("spark.sql.shuffle.partitions",
-                   str(int(snap["spark.sql.shuffle.partitions"]) + 7))
-    qs["q_having"](spark, SF)  # hit -> replay
-    for k, v in snap.items():
-        assert spark.conf.get(k) == v
+                   str(int(before[keys[1]]) + 7))
+    try:
+        hit = qs["q_having"](spark, SF)
+        assert hit is df
+        assert {k: hit.sparkSession.conf.get(k) for k in keys} == snap
+        plan = hit._jdf.queryExecution().executedPlan().toString()
+        assert "AdaptiveSparkPlan" not in plan
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
 def test_gif_frame_features_end_to_end(spark):

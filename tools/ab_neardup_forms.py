@@ -1,6 +1,6 @@
 """CORRECTED in-session interleaved A/B for dp_neardup_scale form changes.
 
-The first r18 A/B scripts went through ent.queries(), whose _prepared plan
+The first r18 A/B scripts went through ent.queries(), whose prepared-plan
 cache returns the FIRST-built DataFrame on every later call — both "forms"
 were the same cached plan and the comparison measured only pass-ordering
 drift.  This harness builds each form ONCE by calling the RAW entry

@@ -40,18 +40,15 @@ def main() -> int:
                                             repetition_stats, words)
     from yupana_spark.datapipe.vectorized import (rep_ngram_cols,
                                                   rep_ngram_signals)
-    from yupana_spark.session import (ensure_engine_confs, get_spark,
-                                      tune_for_volume)
+    from yupana_spark.session import get_spark, posture, rehome
 
     sf = sys.argv[sys.argv.index("--sf") + 1] if "--sf" in sys.argv \
         else "/tmp/yupana_scale10_sf0.1"
     spark = get_spark("repfold-ab",
                       cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     spark.sparkContext.setLogLevel("ERROR")
-    ensure_engine_confs(spark)
-    tune_for_volume(spark, 1 << 62)
-    docs = _fan_out(spark.read.parquet(
-        os.path.join(sf, "documents.parquet")))
+    docs = _fan_out(rehome(spark.read.parquet(
+        os.path.join(sf, "documents.parquet")), posture(spark)))
     staged = docs.withColumn("__lw", words(F.lower(F.col("text"))))
 
     def arm_fold():

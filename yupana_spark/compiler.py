@@ -23,7 +23,6 @@ whole-stage codegen); the only Python UDF is ``tokens`` (the RU stemmer).
 from __future__ import annotations
 
 import datetime as _dt
-import os
 import threading
 from dataclasses import dataclass, field
 from decimal import Decimal
@@ -409,7 +408,8 @@ class Tsdb:
         self._um_init_lock = threading.Lock()
         self._permissions = None
         # dialect semantics (non-ANSI arithmetic, UTC — Time.scala:27) +
-        # AQE posture must hold for whatever session the driver hands us
+        # the base AQE posture must hold for whatever session the driver
+        # hands us
         from .session import ensure_engine_confs
 
         ensure_engine_confs(spark)
@@ -520,38 +520,6 @@ class Tsdb:
         return self.schema.load(self.spark, self.sf_dir, table,
                                 time_bounds=time_bounds)
 
-    # -- static small-input tuning -------------------------------------------
-    def _table_bytes(self, table: str) -> int:
-        """On-disk bytes of a table's source (memoized); 'unknown' counts as
-        big so the AQE posture is kept whenever we can't cheaply tell."""
-        # keyed by the LIVE warehouse root (distinct tmpdirs per default
-        # instance must not share sizes); warehouse writes invalidate their
-        # table's entry, and a stat that raced the write is not kept
-        wh = self._wh_maybe
-        root = wh.root if wh is not None else None
-        return memo.get("table_bytes", (self.sf_dir, root, table),
-                        lambda: self._stat_bytes(wh, table))
-
-    def _stat_bytes(self, wh, table: str) -> int:
-        try:
-            t = self.schema.table(table)
-            path = os.path.join(self.sf_dir, t.path or f"{table}.parquet")
-            if wh is not None and wh.exists(table):
-                path = wh.path(table)
-            if os.path.isdir(path):
-                return sum(e.stat().st_size for e in os.scandir(path)
-                           if e.is_file())
-            return os.path.getsize(path)
-        except OSError:
-            return 1 << 62
-
-    def _tune_for_volume(self, nbytes: int) -> None:
-        """Static small-input fast path vs AQE posture — see
-        session.tune_for_volume for the rationale and measurements."""
-        from .session import tune_for_volume
-
-        tune_for_volume(self.spark, nbytes)
-
     # -- binding (TsdbBase.fillPlaceholders:293-309) -------------------------
     def _bind(self, e: Expr, params: Optional[Sequence[Any]]) -> Expr:
         now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
@@ -630,7 +598,6 @@ class Tsdb:
         q = optimize(q)
         validate(q, require_time_bounds=require_time_bounds)
         table = self.schema.table(q.table)
-        self._tune_for_volume(self._table_bytes(q.table))
         ec = ExpressionCompiler(table, tokenizer=self.schema.tokenizer,
                                 dict_ids=self._resolve_dictionaries(q, table))
 
@@ -667,7 +634,14 @@ class Tsdb:
 
         if q.limit is not None:
             df = df.limit(q.limit)
-        return self._apply_hints(df, q)
+        # the frame plans and runs on the posture session its volume gate
+        # picks, whatever posture other frames were built under
+        from .operators.writes import table_bytes
+        from .session import posture, rehome
+
+        nbytes = table_bytes(self.schema, self.sf_dir, self._wh_maybe,
+                             q.table)
+        return rehome(self._apply_hints(df, q), posture(self.spark, nbytes))
 
     def _apply_hints(self, df: DataFrame, q: Query) -> DataFrame:
         """QueryHint surface (Query.scala:26/45): post-plan directives."""
@@ -1092,25 +1066,11 @@ class Tsdb:
             # map-side SortAggregate back over RAW rows, the exact
             # 1e12-row full-sort shape the split exists to avoid (plan-
             # verified: with the rule on, the distinct HashAggregate
-            # vanishes from the physical plan).  Exclude the rule in the
-            # executing session; it only fires on intentionally redundant
-            # aggregate pairs, which this compiler never otherwise emits.
-            # SESSION-LEVEL contract: the exclusion must still hold when
-            # the returned frame eventually EXECUTES (optimization is
-            # lazy) — a later conf overwrite that drops the rule would
-            # silently restore the raw-row sort; re-compiling any split
-            # query re-asserts it (exact list membership, not substring)
-            rule = ("org.apache.spark.sql.catalyst.optimizer."
-                    "RemoveRedundantAggregates")
-            cur = self.spark.conf.get("spark.sql.optimizer.excludedRules",
-                                      None)
-            # strip each item: a pre-existing value spelled 'a, b' would
-            # otherwise defeat the exact-membership check and the rule
-            # would be appended again on every compile (advice r10)
-            rules = [r.strip() for r in (cur or "").split(",") if r.strip()]
-            if rule not in rules:
-                self.spark.conf.set("spark.sql.optimizer.excludedRules",
-                                    ",".join(rules + [rule]))
+            # vanishes from the physical plan).  The posture sessions every
+            # Tsdb.query frame runs on exclude the rule
+            # (session._REDUNDANT_AGGS); it only fires on intentionally
+            # redundant aggregate pairs, which this compiler never
+            # otherwise emits.
             l = _agg_over(hash_aggs).alias("l")
             r = _varlen_pass(var_aggs).alias("r")
             gnames = [group_map[g.key()] for g in q.group_by]

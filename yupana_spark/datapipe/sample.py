@@ -234,7 +234,7 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     """(id, cluster_id): connected components over an undirected pair list,
     cluster_id = min member id.
 
-    Volume-gated execution (same posture as session.tune_for_volume): the
+    Volume-gated execution (same gate as session.posture): the
     pair list is ALREADY the reduced output of a dedup pipeline — orders of
     magnitude smaller than the corpus — so when it fits ``small_limit``
     rows it is union-found driver-side in one collect (a 200k-row pair

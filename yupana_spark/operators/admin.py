@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import __version__ as _pkg_version_guard  # noqa: F401
-from .. import types as yt
+from .. import memo, types as yt
 from ..expressions import InvalidQueryError
 from ..sql import ast as A
 from .metrics import REGISTRY
@@ -301,6 +301,9 @@ def execute_statement(tsdb: "Tsdb", stmt: A.Statement,
         # otherwise flip spark.sql.session.timeZone for everyone)
         if eff.role == "ADMIN":
             spark.conf.set(stmt.name, str(stmt.value))
+            # posture sessions are clones taken before the SET: drop them
+            # so the next statement re-clones with the new value
+            memo.invalidate("posture")
         return _df(spark, [(stmt.name, str(stmt.value))],
                    "NAME string, VALUE string")
     if isinstance(stmt, A.Upsert):

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import expressions as E
 from ..compiler import ExpressionCompiler, _Ctx
+from ..session import rehome
 from .writes import Warehouse
 
 
@@ -43,7 +44,7 @@ def run_rollup(wh: Warehouse, rollup: Rollup,
     The aggregation relies on HashAggregateExec partial/final (the
     reference's fold/combine/postCombine, TsdbBase.scala:241-267).
     """
-    src = wh.read(rollup.from_table)
+    src = wh.read(rollup.from_table)   # on the source table's posture
     if from_time is not None:
         src = src.filter(F.col("time") >= F.lit(from_time))
     if to_time is not None:
@@ -58,7 +59,8 @@ def run_rollup(wh: Warehouse, rollup: Rollup,
 
     if wh.exists(rollup.to_table) and (from_time or to_time):
         # incremental: merge only the recomputed buckets
-        existing = wh.spark.read.parquet(wh.path(rollup.to_table))
+        existing = rehome(wh.spark.read.parquet(wh.path(rollup.to_table)),
+                          src.sparkSession)
         from .writes import BUCKET_COL
 
         if BUCKET_COL in existing.columns:
@@ -121,7 +123,8 @@ def recalculate(wh: Warehouse, rollup: Rollup,
         table_name=rollup.from_table,
         updated_after=since,
         updated_by=updated_by)
-    intervals = (wh.updates_intervals(flt)
+    intervals = (rehome(wh.updates_intervals(flt),
+                        wh.session_for(rollup.from_table))
                  .select("day").distinct().collect())
     if not intervals:
         if since is None and updated_by is None:

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import memo
 from ..schema import Schema, Table
+from ..session import posture, rehome
 
 BUCKET_COL = "__month"
 CHANGELOG = "_changelog"
@@ -45,6 +46,33 @@ TOKEN_PIN = "__token_pin"
 # time column can never get its buckets silently re-derived from the
 # wrong column (advice r9)
 BUCKET_PIN = "__bucket_pin"
+
+
+def table_bytes(schema: Schema, sf_dir: str, wh, table: str) -> int:
+    """On-disk bytes of ``table``'s live source (``wh``'s copy, else the
+    fixture), memoized; unknown counts as big (the full posture)."""
+    # keyed by the LIVE warehouse root (distinct tmpdirs per default
+    # instance must not share sizes); warehouse writes invalidate their
+    # table's entry, and a stat that raced the write is not kept
+    root = wh.root if wh is not None else None
+    return memo.get("table_bytes", (sf_dir, root, table),
+                    lambda: _stat_bytes(schema, sf_dir, wh, table))
+
+
+def _stat_bytes(schema: Schema, sf_dir: str, wh, table: str) -> int:
+    try:
+        if wh is not None and wh.exists(table):
+            path = wh.path(table)     # ad-hoc tables need no schema entry
+        else:
+            t = schema.table(table)
+            path = os.path.join(sf_dir, t.path or f"{table}.parquet")
+        if os.path.isdir(path):
+            return sum(e.stat().st_size for e in os.scandir(path)
+                       if e.is_file())
+        return os.path.getsize(path)
+    except OSError:
+        return 1 << 62
+
 
 def _item_fixer_udf(fn):
     """Vectorized (Arrow) wrapper for the schema's item_fixer hook; memoized
@@ -125,12 +153,20 @@ class Warehouse:
     def exists(self, table: str) -> bool:
         return os.path.exists(self.path(table))
 
+    def session_for(self, table: str) -> SparkSession:
+        """The posture session for work over ``table`` (Tsdb.query's gate)."""
+        return posture(self.spark,
+                       table_bytes(self.schema, self.sf_dir, self, table))
+
     def read(self, table: str) -> DataFrame:
-        """Warehouse copy if the table was written, else the sf_dir fixture."""
+        """Warehouse copy if the table was written, else the sf_dir fixture,
+        rooted in the table's posture session."""
         if self.exists(table):
             df = self.spark.read.parquet(self.path(table))
-            return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
-        return self.schema.load(self.spark, self.sf_dir, table)
+            df = df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
+        else:
+            df = self.schema.load(self.spark, self.sf_dir, table)
+        return rehome(df, self.session_for(table))
 
     # -- core upsert -----------------------------------------------------------
     def upsert(self, table: str, incoming: DataFrame,
@@ -140,6 +176,9 @@ class Warehouse:
         if keys is None:
             keys = ["time"] + [d.name for d in t.dimensions]
         current = self.read(table)
+        # the merge, the dictionary and the changelog writes all derive
+        # from these two frames, so they run on the table's posture
+        incoming = rehome(incoming, current.sparkSession)
         for c in current.columns:
             if c not in incoming.columns:
                 incoming = incoming.withColumn(c, F.lit(None).cast(
@@ -407,7 +446,7 @@ class Warehouse:
                     "delete of %s failed (%s) — leaving it for the next "
                     "write of %r to sweep", old, e, table)
         # volume-gate cache entries for this table are now stale — the next
-        # query must re-stat the warehouse copy, or tune_for_volume would
+        # query must re-stat the warehouse copy, or the posture gate would
         # keep the pre-write posture for a much larger table (a stat in
         # flight across the swap is not kept either)
         memo.invalidate("table_bytes",
@@ -442,7 +481,7 @@ class Warehouse:
 
         before = _nfiles()
         pinned = self.table_token(table)   # content-identical: keep it
-        df = self.spark.read.parquet(path)
+        df = rehome(self.spark.read.parquet(path), self.session_for(table))
         # the bucket column is whatever _write RECORDED at write time
         # (BUCKET_PIN sidecar) — never re-derived from the schema: a
         # table written ad-hoc via write_table(time_col='ts') whose frame

@@ -22,6 +22,7 @@ from typing import Callable, Dict, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import memo, types as yt
+from .session import ensure_engine_confs
 
 
 # base-DataFrame memo per path: a plain ``spark.read.parquet`` re-runs file
@@ -247,9 +248,10 @@ class Schema:
         t = self.table(name)
         path = os.path.join(sf_dir, t.path or f"{name}.parquet")
         # some sources write TIMESTAMP(NANOS) which Spark's vectorized reader
-        # rejects; read nanos as long and convert (integer division keeps the
-        # full 64-bit precision — going through double would corrupt it)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # rejects: the engine confs read nanos as long and this converts
+        # (integer division keeps the full 64-bit precision — going through
+        # double would corrupt it)
+        ensure_engine_confs(spark)
         df = cached_parquet(spark, path, time_col=t.time_column)
         from pyspark.sql import types as T
 
