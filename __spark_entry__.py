@@ -1671,8 +1671,8 @@ def dp_text_stats(spark, sf_dir):
         # an Arrow factorize+numpy mirror wins the ISOLATED subtree
         # 4.9x but measured an end-to-end WASH in this bundle — the
         # folds overlap fully inside the saturated scan stage while the
-        # Arrow pass splits it; see docs/scale.md and
-        # datapipe/vectorized.py, kept as the measured experiment.)
+        # Arrow pass splits it; the mirror was deleted, its numbers
+        # stay in docs/scale.md.)
         *ngram_char_frac_cols(F.col("__lw"), F.length(F.col("text")),
                               [(2, "top", "top2_char_frac"),
                                (5, "dup", "dup5_char_frac")]),

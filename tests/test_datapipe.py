@@ -2268,84 +2268,6 @@ def test_cut_starts_fused_matches_operators(spark):
     assert fused[6]["n_dup_spans"] == 0
 
 
-def test_exactsubstr_bloom_prefilter_identical(spark):
-    """The occurrence-side Bloom prefilter (the beyond-broadcast-gate
-    scale lever, judge r13 #1) must be result-identical to the plain
-    join — no false negatives by construction, false positives cleared
-    by the exact join — across the edge corpus, and it must actually
-    DROP certain-miss occurrences (the filtered count falls when dups
-    are a minority).  A wrong-sized word list fails loudly."""
-    from yupana_spark.datapipe.dedup import (exactsubstr_bloom,
-                                             exactsubstr_cut_starts,
-                                             exactsubstr_index)
-
-    span = "alpha beta gamma delta epsilon zeta eta theta"
-    rows = [(1, f"{span} unique tail one two three four five six"),
-            (2, f"{span} other ending entirely different here now"),
-            (3, "short"),
-            (4, None),
-            (5, "clean words that appear nowhere else in this corpus "
-                "with plenty of padding to clear eight")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    esi = exactsubstr_index(docs, n=8).localCheckpoint(eager=True)
-    bloom = exactsubstr_bloom(esi, n_bits=1 << 16)
-    plain = {r["id"]: r for r in
-             exactsubstr_cut_starts(docs, n=8, dup_index=esi).collect()}
-    pre = {r["id"]: r for r in
-           exactsubstr_cut_starts(docs, n=8, dup_index=esi, bloom=bloom,
-                                  bloom_bits=1 << 16).collect()}
-    assert set(plain) == set(pre)
-    for i in plain:
-        assert sorted(plain[i]["__ps"]) == sorted(pre[i]["__ps"]), i
-        assert plain[i]["n_dup_spans"] == pre[i]["n_dup_spans"], i
-    # the filter genuinely prunes: only doc 1/2's shared-prefix grams
-    # (and collisions) survive — doc 5's unique grams are dropped
-    # map-side, so the bloom must reject at least one of its hashes
-    from yupana_spark.datapipe.dedup import bloom_hit_expr
-    from yupana_spark.datapipe.text import ngram_hashes, normalize_text, words
-
-    staged = docs.withColumn(
-        "__w", F.coalesce(words(normalize_text(F.col("text"))), F.array()))
-    occ = staged.select("doc_id",
-                        F.explode(ngram_hashes(F.col("__w"), 8)).alias("h"))
-    kept = (occ.withColumn("__bf", F.lit(bloom))
-            .filter(bloom_hit_expr(1 << 16, 5, "h")).count())
-    assert kept < occ.count()
-    with pytest.raises(ValueError, match="n_bits"):
-        exactsubstr_cut_starts(docs, n=8, dup_index=esi, bloom=bloom,
-                               bloom_bits=1 << 20)
-    # bloom='auto' (r15, judge r14 #3): keyed on the index's ~32 B/row
-    # estimate vs the session broadcast gate.  Under the gate it's a
-    # no-op (tiny index here, 64 MB session gate); with the gate forced
-    # below the index's footprint it builds+applies the filter — both
-    # arms result-identical to the plain join
-    auto_off = {r["id"]: r for r in
-                exactsubstr_cut_starts(docs, n=8, dup_index=esi,
-                                       bloom="auto").collect()}
-    thr_key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(thr_key)
-    # threshold '1': even the rows*32 fallback estimate strictly exceeds
-    # it (ADVICE r15: at '64' the fallback est was EXACTLY 64, so a
-    # failed stats call made the 'on' arm silently duplicate 'off')
-    spark.conf.set(thr_key, "1")
-    try:
-        from yupana_spark.datapipe.dedup import _auto_bloom
-        forced, forced_bits = _auto_bloom(esi)
-        assert forced is not None and len(forced) == forced_bits // 64
-        auto_on = {r["id"]: r for r in
-                   exactsubstr_cut_starts(docs, n=8, dup_index=esi,
-                                          bloom="auto").collect()}
-    finally:
-        spark.conf.set(thr_key, prev)
-    for got in (auto_off, auto_on):
-        assert set(got) == set(plain)
-        for i in plain:
-            assert sorted(plain[i]["__ps"]) == sorted(got[i]["__ps"]), i
-            assert plain[i]["n_dup_spans"] == got[i]["n_dup_spans"], i
-    with pytest.raises(ValueError, match="auto"):
-        exactsubstr_cut_starts(docs, n=8, dup_index=esi, bloom="always")
-
-
 def test_duplicated_line_stats_narrow_matches_rebuild(spark):
     """rebuild=False must agree with the rebuilt form on every stat and
     report EXACTLY length(cleaned) — including blank-line structure,
@@ -3826,82 +3748,6 @@ def test_salted_quota_rank_identical_and_skew_bounded(spark):
     plan = salted._jdf.queryExecution().executedPlan().toString()
     import re
     assert re.search(r"windowspecdefinition\(dom#\d+, __salt#\d+", plan)
-
-
-def test_vectorized_signals_match_folds(spark):
-    """The Arrow-vectorized repetition-signal mirror (r15 experiment,
-    datapipe/vectorized.py) must reproduce the HOF folds' four rounded
-    signals EXACTLY across the edge corpus — NULL text, empty-after-
-    split, 1/2-word (the lone-shingle floor), all-duplicate words,
-    repeated trigrams, a dominant 2-gram, duplicated 5-grams, and a
-    clean long doc — and across a real fixture slice."""
-    from yupana_spark.datapipe.text import (ngram_char_frac_cols,
-                                            repetition_stats, words)
-    from yupana_spark.datapipe.vectorized import (rep_ngram_cols,
-                                                  rep_ngram_signals)
-
-    rows = [
-        (1, None),
-        (2, "   "),
-        (3, "one"),
-        (4, "two words"),
-        (5, "spam spam spam spam spam spam spam spam spam spam"),
-        (6, "a b c a b c a b c a b c a b c"),
-        (7, "x y x y x y x y x y x y"),
-        (8, "p q r s t p q r s t p q r s t unique tail here now"),
-        (9, "the quick brown fox jumps over the lazy dog and keeps "
-            "going through the quiet field for a while longer today"),
-        (10, "aa aa bb bb aa aa bb bb cc"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string") \
-        .withColumn("__lw", words(F.lower(F.col("text"))))
-    rep = repetition_stats(F.col("__lw"), as_words=True)
-    specs = [(2, "top", "top2_char_frac"), (5, "dup", "dup5_char_frac")]
-    want_df = docs.select(
-        "doc_id",
-        rep["dup_word_ratio"].alias("dup_word_ratio"),
-        rep["dup_trigram_ratio"].alias("dup_trigram_ratio"),
-        *ngram_char_frac_cols(F.col("__lw"), F.length(F.col("text")),
-                              specs))
-    staged = docs.withColumn("__sig", rep_ngram_signals(F.col("__lw")))
-    mc = rep_ngram_cols(F.col("__sig"), F.col("__lw"),
-                        F.length(F.col("text")))
-    got_df = staged.select("doc_id", *[mc[c].alias(c) for c in
-                                       ("dup_word_ratio",
-                                        "dup_trigram_ratio",
-                                        "top2_char_frac",
-                                        "dup5_char_frac")])
-    want = {r["doc_id"]: tuple(r)[1:] for r in want_df.collect()}
-    got = {r["doc_id"]: tuple(r)[1:] for r in got_df.collect()}
-    assert want == got
-    # non-vacuous: every signal fires somewhere in the edge corpus
-    import math
-    cols = list(zip(*[v for v in want.values()]))
-    for i, name in enumerate(("dup_word_ratio", "dup_trigram_ratio",
-                              "top2_char_frac", "dup5_char_frac")):
-        assert any((x or 0) > 0 and not math.isnan(x or 0)
-                   for x in cols[i]), name
-    # real fixture slice (first 200 docs at sf0.001)
-    fx = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-          .limit(200)
-          .withColumn("__lw", words(F.lower(F.col("text")))))
-    w_fx = {r["doc_id"]: tuple(r)[1:] for r in fx.select(
-        "doc_id",
-        repetition_stats(F.col("__lw"), as_words=True)["dup_word_ratio"]
-        .alias("a"),
-        repetition_stats(F.col("__lw"), as_words=True)["dup_trigram_ratio"]
-        .alias("b"),
-        *ngram_char_frac_cols(F.col("__lw"), F.length(F.col("text")),
-                              specs)).collect()}
-    fxs = fx.withColumn("__sig", rep_ngram_signals(F.col("__lw")))
-    mfx = rep_ngram_cols(F.col("__sig"), F.col("__lw"),
-                         F.length(F.col("text")))
-    g_fx = {r["doc_id"]: tuple(r)[1:] for r in fxs.select(
-        "doc_id", mfx["dup_word_ratio"].alias("a"),
-        mfx["dup_trigram_ratio"].alias("b"),
-        mfx["top2_char_frac"].alias("top2_char_frac"),
-        mfx["dup5_char_frac"].alias("dup5_char_frac")).collect()}
-    assert w_fx == g_fx
 
 
 def test_whitespace_class_engine_agreement(spark):

@@ -1,31 +1,6 @@
-"""LSH embedding dedup scale path, multimodal resize/audio stubs,
-standard rollups, Tsdb.explain."""
-
-import datetime as dt
-
-import pytest
-from pyspark.sql import functions as F
+"""Multimodal resize/audio stubs, standard rollups, Tsdb.explain."""
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_embedding_lsh_matches_bruteforce(spark):
-    from yupana_spark.datapipe.dedup import (embedding_neardup_pairs,
-                                             embedding_neardup_pairs_lsh)
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    # add a near-identical twin so there's a true high-cosine pair
-    twin = emb.filter("vec_id = 5").select(
-        F.lit(88888).cast("long").alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.001)).alias("embedding"),
-        F.col("label"))
-    df = emb.unionByName(twin)
-    exact = {(r["id_a"], r["id_b"])
-             for r in embedding_neardup_pairs(df, threshold=0.9).collect()}
-    approx = {(r["id_a"], r["id_b"])
-              for r in embedding_neardup_pairs_lsh(df, threshold=0.9).collect()}
-    assert (5, 88888) in exact
-    assert approx == exact  # hamming<=3 of 12 planes keeps all cos>=0.9 pairs
 
 
 def test_resize_images_real(spark):

@@ -4,6 +4,8 @@ bundle constructions from piling up cache entries."""
 
 import threading
 
+import pytest
+
 from tests.conftest import SF_SMALL
 
 
@@ -131,11 +133,16 @@ def test_repeated_uncached_constructions_keep_storage_flat(spark):
         assert sizes[0] == sizes[1] == sizes[2], (entry.__name__, sizes)
 
 
-def test_rung3_screened_persist_has_one_owner(spark):
-    """The gate_small ladder's screened-pair persist is released by the
-    next construction even when the two constructions' plans differ (two
+@pytest.mark.parametrize("gate_small", [True, None])
+def test_rung3_screened_persist_has_one_owner(spark, gate_small):
+    """The ladder's screened-pair persist is released by the next
+    construction even when the two constructions' plans differ (two
     corpora): Spark only dedupes identical plans, so without an owner
-    every distinct construction would keep its cache entry."""
+    every distinct construction would keep its cache entry.  Holds with
+    a precomputed gate decision and on the probe path
+    (``gate_small=None``, as ``filters.corpus_preprocess`` and
+    ``q_stream_dedup`` call the ladder), where the bounded volume probe
+    counts the pair set the memo slot persisted."""
     from yupana_spark.datapipe.dedup import (band_explode,
                                              minhash_artifacts,
                                              minhash_dedup_pairs)
@@ -153,7 +160,7 @@ def test_rung3_screened_persist_has_one_owner(spark):
 
     def run(docs, arts, banded):
         minhash_dedup_pairs(docs, threshold=0.5, artifacts=arts,
-                            banded=banded, gate_small=True).collect()
+                            banded=banded, gate_small=gate_small).collect()
         return len(sc._jsc.sc().getRDDStorageInfo())
 
     a, b = corpus("alpha"), corpus("beta")

@@ -487,17 +487,6 @@ def dsir_select(docs: DataFrame, target: DataFrame, k: int,
     return sel.drop("__key")
 
 
-def expected_gram_count(text: str, bigrams: bool = True) -> int:
-    """Driver-side mirror of the gram count for tests: grams of the
-    normalized text (uni + adjacent bigrams)."""
-    toks = [t for t in
-            " ".join("".join(ch for ch in text.lower()
-                             if ch.isalnum() or ch.isspace()).split())
-            .split(" ") if t]
-    n = len(toks)
-    return n + (max(n - 1, 0) if bigrams else 0)
-
-
 def py_word_hash24(w: str) -> int:
     """Driver-side mirror of ``word_hash24`` for tests."""
     import hashlib

@@ -162,16 +162,6 @@ def _ycbcr_to_rgb(y, cb, cr):
         .astype(np.uint8)
 
 
-def _to_blocks(plane):
-    """(h, w) float plane -> (n, 8, 8) blocks, edge-replicated to 8-multiples
-    (replication keeps block-boundary DCT energy low, unlike zero pad)."""
-    h, w = plane.shape
-    ph, pw = (h + 7) // 8 * 8, (w + 7) // 8 * 8
-    padded = np.pad(plane, ((0, ph - h), (0, pw - w)), mode="edge")
-    return (padded.reshape(ph // 8, 8, pw // 8, 8)
-            .transpose(0, 2, 1, 3).reshape(-1, 8, 8)), ph // 8, pw // 8
-
-
 def _from_blocks(blocks, bh, bw):
     return (blocks.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3)
             .reshape(bh * 8, bw * 8))

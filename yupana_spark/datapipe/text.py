@@ -431,16 +431,6 @@ _STOPWORDS = {
 }
 
 
-def lang_scores(col: Column) -> Dict[str, Column]:
-    """Per-language stopword-hit counts over distinct lowercased words."""
-    w = F.array_distinct(words(F.lower(col)))
-    out = {}
-    for lang, sws in _STOPWORDS.items():
-        out[lang] = F.size(F.array_intersect(
-            w, F.array([F.lit(s) for s in sws])))
-    return out
-
-
 # the CLOSED set of values lang_id can return: the stopword languages
 # plus the 'und' fallback and the CJK override.  Callers that need the
 # prediction as a compact integer (e.g. to keep it out of string
