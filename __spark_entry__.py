@@ -2917,7 +2917,7 @@ def dp_neardup_scale(spark, sf_dir):
         # filters of the ONE memoized banded index — no per-pass explode;
         # pair_gate=None: the parity split of this fixture bounds the
         # screened set independently, so skip the per-pass gate-probe job
-        # (the >gate shuffle-hash path is pinned by
+        # (the >gate merge path is pinned by
         # test_minhash_cross_pairs_gate_large_path)
         pair_gate=None,
         banded_a=banded.filter(idp == 0),

@@ -526,7 +526,7 @@ def test_minhash_gate_small_precomputed(docs_with_dups):
 
 def test_minhash_cross_pairs_gate_large_path(spark):
     """Same gate contract for the cross-corpus ladder: pair_gate=0 forces
-    the shuffle-hash shape with unchanged pairs."""
+    the merge shape with unchanged pairs."""
     from yupana_spark.datapipe.dedup import minhash_cross_pairs
 
     base = ("the quick brown fox jumps over the lazy dog while the cat "

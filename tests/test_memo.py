@@ -142,7 +142,9 @@ def test_rung3_screened_persist_has_one_owner(spark, gate_small):
     a precomputed gate decision and on the probe path
     (``gate_small=None``, as ``filters.corpus_preprocess`` and
     ``q_stream_dedup`` call the ladder), where the bounded volume probe
-    counts the pair set the memo slot persisted."""
+    counts the pair set the memo slot persisted.  Counted over the RDDs
+    cached since both corpora were built, so the ContextCleaner reaping
+    earlier tests' garbage cannot move the count."""
     from yupana_spark.datapipe.dedup import (band_explode,
                                              minhash_artifacts,
                                              minhash_dedup_pairs)
@@ -158,12 +160,16 @@ def test_rung3_screened_persist_has_one_owner(spark, gate_small):
         banded = band_explode(arts, 32, 8, "sig").localCheckpoint(eager=True)
         return docs, arts, banded
 
+    def cached_ids():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
     def run(docs, arts, banded):
         minhash_dedup_pairs(docs, threshold=0.5, artifacts=arts,
                             banded=banded, gate_small=gate_small).collect()
-        return len(sc._jsc.sc().getRDDStorageInfo())
+        return len(cached_ids() - before)
 
     a, b = corpus("alpha"), corpus("beta")
+    before = cached_ids()
     after_a = run(*a)
     assert run(*b) == after_a           # b's entry replaced a's
     assert run(*a) == after_a
