@@ -1195,7 +1195,7 @@ def q_stream_dedup(spark, sf_dir):
         try:
             stream3 = spark.readStream.schema(src.schema).parquet(srcdir)
             sq = (running_totals(stream3, key_col="user_id",
-                                 value_col="value", idle_timeout=False)
+                                 value_col="value", idle_timeout_ms=None)
                   .writeStream.format("memory").queryName(ssink)
                   .outputMode("update")
                   .option("checkpointLocation", sck)
@@ -1492,12 +1492,11 @@ def dp_text_stats(spark, sf_dir):
     deterministically derived multi-line view: n_lines / n_dup_lines /
     dup_line_ratio / cleaned_lines_len), and the composed corpus_keep
     decision.  Was dp_token_count + dp_quality."""
-    from yupana_spark.datapipe.text import lang_id as _lang_id
+    from yupana_spark.datapipe.filters import keep_reasons, row_rules
     from yupana_spark.datapipe.text import (bpe_token_count, c4_rules,
                                             line_shape_stats,
                                             ngram_char_frac_cols, pii_counts,
-                                            quality_metrics, quality_score,
-                                            repetition_stats, scrub_pii,
+                                            quality_metrics, scrub_pii,
                                             symbol_word_ratio, token_count,
                                             within_doc_dup_stats)
 
@@ -1520,10 +1519,6 @@ def dp_text_stats(spark, sf_dir):
     # counts ride the staged scrub output (__scrubv below): three literal
     # splits, zero extra regex passes (pii_counts r16 redesign)
     pii = pii_counts(aug, scrubbed=F.col("__scrubv"))
-    # stage the lowercased word array: the trigram lambda references it per
-    # element, and an unstaged expression would re-split the text per
-    # trigram (see repetition_stats docstring)
-    from yupana_spark.datapipe.text import words as _words
     from yupana_spark.datapipe.retrieval import (_words_safe,
                                                  bm25_probe_fit,
                                                  bm25_score_col)
@@ -1538,16 +1533,24 @@ def dp_text_stats(spark, sf_dir):
     # this corpus+query), so the former relational arm's explode + tf/df
     # shuffles and its per-doc join are gone — the score rides the base
     # scan as a pure Column.  The scorer needs ITS staged word array
-    # (__bw, normalize_text-based — unlike __lw's plain lower)
+    # (__bw, normalize_text-based — unlike __rw's plain lower)
     probe = memo.get("bm25_probe", (sf_dir, "dup customer window scan"),
                      lambda: bm25_probe_fit(docs, "dup customer window scan"))
     # the three derived text VIEWS (lined, wdd-injected, c4-injected)
     # are staged as columns: CollapseProject keeps a multi-referenced
     # non-trivial alias in its own projection, so the concat+regexp
     # chain runs once per row instead of once per consuming output
-    # column (r13: wdd columns alone 0.31 s -> 0.21 s at sf0.1)
-    docs = (docs.withColumn("__lw", _words(F.lower(F.col("text"))))
-            .withColumn("__bw", _words_safe(F.col("text")))
+    # column (r13: wdd columns alone 0.31 s -> 0.21 s at sf0.1).
+    # corpus_keep's row-local rules are the shared filters.row_rules
+    # stage (the one the batch and streaming filters evaluate): it stages
+    # the lowercased word array __rw, which the rep/n-gram folds below
+    # read too, and the rule signals, so quality, dup_word_ratio and
+    # dup_trigram_ratio are output from the same staged columns the rules
+    # read — higher-order-function folds get no subexpression
+    # elimination, and calling the packaged flag next to the stat columns
+    # paid the trigram fold twice (~1 s at 10x)
+    docs, rules = row_rules(docs, rep_rule=True)
+    docs = (docs.withColumn("__bw", _words_safe(F.col("text")))
             # the lined replacement is shared by the __lsv and __wddv
             # views — staged once so the regexp runs once per row, not
             # once per consuming view (r14; the same CollapseProject
@@ -1576,12 +1579,7 @@ def dp_text_stats(spark, sf_dir):
                 F.when(did % 9 == 0, F.lit(" {")).otherwise(F.lit("")),
                 F.when(did % 11 == 0, F.lit(" lorem ipsum"))
                 .otherwise(F.lit("")))))
-    rep = repetition_stats(F.col("__lw"), as_words=True)
     _line_shape = line_shape_stats(F.col("__lsv"))
-    # plain-text line shape for the keep decision's repetition rule
-    # (the __lsv view above carries injected bullet/ellipsis arms the
-    # rule must not see — corpus_keep evaluates the raw text)
-    _ls0 = line_shape_stats(F.col("text"))
     # WITHIN-doc duplicate line/paragraph fractions (Gopher A1.1 rows the
     # corpus-wide lstats do not cover) over the same lined view, with
     # deterministic repeats injected (%8: duplicate line pair, %10:
@@ -1608,9 +1606,9 @@ def dp_text_stats(spark, sf_dir):
         m["alpha_ratio"].alias("alpha_ratio"),
         m["punct_ratio"].alias("punct_ratio"),
         m["stopword_ratio"].alias("stopword_ratio"),
-        rep["dup_word_ratio"].alias("dup_word_ratio"),
-        rep["dup_trigram_ratio"].alias("dup_trigram_ratio"),
-        quality_score(F.col("text")).alias("quality"),
+        F.col("__dup_word_ratio").alias("dup_word_ratio"),
+        F.col("__dup_trigram_ratio").alias("dup_trigram_ratio"),
+        F.col("__quality").alias("quality"),
         pii["email"].alias("pii_emails"),
         pii["ipv4"].alias("pii_ipv4"),
         pii["phone"].alias("pii_phones"),
@@ -1641,31 +1639,17 @@ def dp_text_stats(spark, sf_dir):
         # the row-local BM25 probe score (see the probe fit above) —
         # rides the one base scan, no explode, no join
         bm25_score_col(F.col("__bw"), probe).alias("bm25_probe"),
-        # corpus_keep's ROW-LOCAL signals ride this same scan (r14): the
-        # former separate corpus_keep subtree re-scanned the full text
-        # for quality_score/lang_id/repetition_flag (~3 s of duplicated
-        # scan CPU at 10x) and joined the verdict back on doc_id; the
-        # decision now composes in the final select via the SAME
-        # keep_reasons definition (filters.keep_reasons — the one shared
-        # with the streaming twin), pinned equal to corpus_keep in
-        # test_text_stats_inline_keep_matches_corpus_keep.  The Gopher
-        # repetition rule decomposes over base's OWN staged rep columns
-        # (dup_word_ratio / dup_trigram_ratio above) plus the three
-        # PLAIN-text shape signals staged here — repetition_flag's HOF
-        # folds get no subexpression elimination, so calling the packaged
-        # flag alongside the rep columns paid the trigram fold twice
-        # (~1 s at 10x); the oracle recomputes the composed rule
-        # arithmetically, so drift from filters.repetition_flag's
-        # definition flips the hash
-        _lang_id(F.col("text")).alias("__lang"),
-        symbol_word_ratio(F.col("text"), word_array=F.col("__lw"))
-        .alias("__sw0"),
-        _ls0["bullet_line_ratio"].alias("__bl0"),
-        _ls0["ellipsis_line_ratio"].alias("__el0"),
+        # corpus_keep's ROW-LOCAL rule flags ride this same scan (r14):
+        # the former separate corpus_keep subtree re-scanned the full
+        # text (~3 s of duplicated scan CPU at 10x) and joined the
+        # verdict back on doc_id; the decision now composes in the final
+        # select via the shared keep_reasons, pinned equal to corpus_keep
+        # in test_text_stats_inline_keep_matches_corpus_keep
+        *rules.values(),
         # Gopher n-gram repetition fractions (text.ngram_char_frac_cols):
         # top-2-gram char mass and duplicated-5-gram char mass — WITHIN-
         # document folds since r12, so they ride this same scan over the
-        # staged __lw (zero shuffles; the former explode+groupBy shape
+        # staged __rw (zero shuffles; the former explode+groupBy shape
         # and its per-doc join are gone).  Sub-n-word docs score the
         # published 0.0, matching the old left-join + coalesce.  (r15:
         # an Arrow factorize+numpy mirror wins the ISOLATED subtree
@@ -1673,7 +1657,7 @@ def dp_text_stats(spark, sf_dir):
         # folds overlap fully inside the saturated scan stage while the
         # Arrow pass splits it; the mirror was deleted, its numbers
         # stay in docs/scale.md.)
-        *ngram_char_frac_cols(F.col("__lw"), F.length(F.col("text")),
+        *ngram_char_frac_cols(F.col("__rw"), F.length(F.col("text")),
                               [(2, "top", "top2_char_frac"),
                                (5, "dup", "dup5_char_frac")]),
         # staged normalize_text word array, carried through the narrow
@@ -1742,19 +1726,14 @@ def dp_text_stats(spark, sf_dir):
                       F.col("cleaned_len").alias("cleaned_lines_len")))
     # the COMPOSED pipeline decision, semantically corpus_keep
     # (datapipe/filters.corpus_keep) but composed IN-PLAN (r14): the
-    # row-local signals (quality_score / lang_id / repetition_flag)
-    # ride the base scan above instead of a second full text scan, the
-    # 'contaminated' rule IS the dcs frame's n_contaminated > 0 (the
-    # same membership corpus_keep's flag join used, r12), the
-    # 'duplicate' rule joins the narrow is_duplicate frame derived from
-    # the memoized ingest-time fingerprint index, and keep/reasons
-    # compose in the final select via the ONE shared keep_reasons
-    # definition — deleting corpus_keep's duplicate scan AND its
-    # verdict-side join (pinned equal to the operator in
-    # test_text_stats_inline_keep_matches_corpus_keep; every rule is
-    # still recomputed arithmetically by the oracle)
-    from yupana_spark.datapipe.filters import keep_reasons
-
+    # row_rules flags ride the base scan above instead of a second full
+    # text scan, the 'contaminated' rule IS the fused starts frame's
+    # n_contaminated > 0 (the membership corpus_keep's contaminated_ids
+    # join computes), the 'duplicate' rule joins the narrow
+    # is_duplicate frame derived from the memoized ingest-time
+    # fingerprint index, and keep/reasons compose in the final select
+    # via the shared keep_reasons (every rule is still recomputed
+    # arithmetically by the oracle)
     fpd = _fp_index(spark, sf_dir)[0]
     dupf = (fpd.join(fpd.groupBy("fp").agg(F.min("doc_id").alias("__k")),
                      "fp")
@@ -1776,31 +1755,10 @@ def dp_text_stats(spark, sf_dir):
     nds = F.coalesce(F.col("n_dup_spans"), F.lit(0)).cast("long")
     ncont = F.coalesce(F.col("n_contaminated"), F.lit(0)).cast("long")
     cfr = F.round(ncont / shingles, 6)
-    # filters.repetition_flag's rule, decomposed over the staged columns
-    # — the bars are the SHARED module constants, not re-typed literals
-    # (ADVICE r14), so a default change moves the flag and this
-    # decomposition together and the oracle's arithmetic recomputation
-    # flags it
-    from yupana_spark.datapipe.filters import (REP_MAX_BULLET_LINE,
-                                               REP_MAX_DUP_TRIGRAM,
-                                               REP_MAX_DUP_WORD,
-                                               REP_MAX_ELLIPSIS_LINE,
-                                               REP_MAX_SYMBOL_WORD)
-
-    rp = ((F.col("dup_word_ratio") > REP_MAX_DUP_WORD)
-          | (F.col("dup_trigram_ratio") > REP_MAX_DUP_TRIGRAM)
-          | (F.col("__sw0") > REP_MAX_SYMBOL_WORD)
-          | (F.col("__bl0") > REP_MAX_BULLET_LINE)
-          | (F.col("__el0") > REP_MAX_ELLIPSIS_LINE))
-    reasons = keep_reasons(
-        ncont > 0,
-        F.coalesce(F.col("is_duplicate"), F.lit(False)),
-        ~F.col("__lang").isin("en"),
-        F.col("quality"), 0.7,
-        rep_high=rp)
+    reasons = keep_reasons({**rules, "contaminated": ncont > 0,
+                            "duplicate": F.col("is_duplicate")})
     return joined.select(
-        *[c for c in base.columns
-          if c not in ("__bw", "__lang", "__sw0", "__bl0", "__el0")],
+        *[c for c in base.columns if not c.startswith("__")],
         es_r[1], es_r[2], F.md5(es_r[3]).alias("es_cleaned_md5"),
         shingles.alias("n_spans"), nds.alias("n_dup_spans"),
         F.round(nds / shingles, 6).alias("dup_span_ratio"),
@@ -2571,8 +2529,6 @@ def dp_corpus_preprocess(spark, sf_dir):
     emptiness).  At sf0.01, the driver's hash SF, the sample holds 2
     genuine survivor pairs (j=0.9646/0.9796), so the oracle pins the
     'ok' state with real teeth."""
-    from pyspark import StorageLevel
-
     from yupana_spark.datapipe.dedup import (ngram_jaccard_pairs,
                                              sampled_exact_jaccard_pairs)
     from yupana_spark.datapipe.filters import corpus_preprocess
@@ -2588,13 +2544,11 @@ def dp_corpus_preprocess(spark, sf_dir):
     # immutable corpus: built once per (session, corpus) and pinned
     # (the dp_neardup_scale ex_mh posture); the superset joins below
     # run LIVE against the threshold-arm output every pass
-    # cache-entry lifecycle: this bundle persists three narrow frames
-    # (two recipe verdict frames — one cache entry, identical plans —
-    # plus verd below), but the body runs ONCE per (session, corpus):
-    # queries() routes it through the prepared-plan cache, so repeated
-    # bench passes re-execute one plan against one bounded set of cache
-    # entries rather than accumulating new ones (the recipe API's
-    # caller-owned release_cache handles the long-lived-driver case).
+    # cache-entry lifecycle: this bundle persists two narrow frames, each
+    # owned by a memo slot — the recipe's verdict frame (both arms build
+    # identical verdict plans, so they share the slot's one entry) and
+    # verd below — so a repeated construction reads its predecessor's
+    # entry instead of adding one.
     # The (0.85, cap 400) exact-pair frame is dp_neardup_scale's nd_exmh
     # artifact (reuse rather than rebuild) — the shared memo
     # entry first, then the warehouse artifact, and only then a fresh
@@ -2610,10 +2564,9 @@ def dp_corpus_preprocess(spark, sf_dir):
     # count — without it the whole threshold-arm recipe would execute
     # once per reference (the same reasoning as the recipe's own
     # verdict-frame persist)
-    verd = (mh_out.select(
+    verd = _persist_narrow(("cp_verd", sf_dir), mh_out.select(
         "id", F.col("reasons").contains("near_dup").alias("__nd"),
-        F.col("reasons").isin("", "near_dup").alias("__sv"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        F.col("reasons").isin("", "near_dup").alias("__sv")))
     # ONE pair of inner endpoint joins carries the survivor AND the
     # near-dup flag together (review r16: a former left_semi pair
     # restriction duplicated these joins); conservation gives every ex

@@ -83,9 +83,8 @@ def test_exact_dedup_null_text_kept(spark):
 
 
 def test_corpus_keep_null_text_covered(spark):
-    """corpus_keep's default (internal exact_dedup) path must emit a
-    decision row for NULL-text docs — same cardinality as the
-    dup_flags path (review r12)."""
+    """corpus_keep's exact_dedup path must emit a decision row for
+    NULL-text docs — one row per input doc, like every other rule."""
     from yupana_spark.datapipe.filters import corpus_keep
 
     df = spark.createDataFrame(
@@ -2081,19 +2080,25 @@ def test_corpus_preprocess_laws(spark):
     out2 = {r["id"]: r for r in res2.collect()}
     assert {k: tuple(v) for k, v in out.items()} \
         == {k: tuple(v) for k, v in out2.items()}
-    # cache lifecycle is caller-owned (ADVICE r15): the narrow verdict
-    # persist rides the returned frame and release_cache drops it
-    from yupana_spark.datapipe.filters import release_cache
+    # the narrow verdict persist has one owner: a recipe over a second
+    # corpus releases the first corpus' verdict frame, so exactly one
+    # stays cached (storageLevel looks the plan up in the cache manager)
+    from pyspark import StorageLevel
 
-    (frame,) = res2._yupana_persisted
-    assert frame.is_cached
-    release_cache(res2)
-    assert not frame.is_cached
-    release_cache(res2)                       # idempotent
-    # no-neardup arm attaches nothing and release is a no-op
-    plain = corpus_preprocess(docs, eval_docs=evals, sample_rate=0.6)
-    assert plain._yupana_persisted == ()
-    release_cache(plain)
+    def verdict_level(frame):
+        return corpus_keep(frame, min_quality=0.7, langs=("en",),
+                           rep_rule=True, eval_docs=evals).storageLevel
+
+    assert verdict_level(docs) == StorageLevel.MEMORY_AND_DISK
+    other = spark.createDataFrame(rows[:6], "doc_id long, text string")
+    corpus_preprocess(other, eval_docs=evals, neardup_threshold=0.5,
+                      sample_rate=0.6).collect()
+    assert verdict_level(other) == StorageLevel.MEMORY_AND_DISK
+    assert verdict_level(docs) == StorageLevel.NONE
+    # the no-neardup arm persists nothing, so the held entry stays
+    corpus_preprocess(docs, eval_docs=evals, sample_rate=0.6).collect()
+    assert verdict_level(other) == StorageLevel.MEMORY_AND_DISK
+    assert verdict_level(docs) == StorageLevel.NONE
     # the two-arg reject fires BEFORE any plan is built (judge r15 #5):
     # df=None would explode inside corpus_keep if any work preceded it
     with pytest.raises(ValueError, match="not both"):
@@ -2150,9 +2155,7 @@ def test_text_stats_inline_keep_matches_corpus_keep(spark):
     repetition)."""
     from yupana_spark.datapipe.dedup import decontaminate_cut_starts
     from yupana_spark.datapipe.filters import (corpus_keep, keep_reasons,
-                                               repetition_flag)
-    from yupana_spark.datapipe.text import lang_id, quality_score
-    from yupana_spark.datapipe.text import words as _words
+                                               repetition_flag, row_rules)
 
     good = ("the quick brown fox jumps over the lazy dog and runs far "
             "into the quiet green field for a long while today")
@@ -2182,14 +2185,11 @@ def test_text_stats_inline_keep_matches_corpus_keep(spark):
                      "fp")
             .select("doc_id", (F.col("doc_id") != F.col("__k"))
                     .alias("is_duplicate")))
-    staged = docs.withColumn("__lw", _words(F.lower(F.col("text"))))
-    reasons = keep_reasons(
-        F.coalesce(F.col("n_contaminated"), F.lit(0)) > 0,
-        F.coalesce(F.col("is_duplicate"), F.lit(False)),
-        ~lang_id(F.col("text")).isin("en"),
-        quality_score(F.col("text")), 0.7,
-        rep_high=repetition_flag(F.col("text"),
-                                 word_array=F.col("__lw")))
+    staged, rules = row_rules(docs, rep_rule=True)
+    reasons = keep_reasons({
+        **rules,
+        "contaminated": F.coalesce(F.col("n_contaminated"), F.lit(0)) > 0,
+        "duplicate": F.coalesce(F.col("is_duplicate"), F.lit(False))})
     got = {r["doc_id"]: (r["keep"], r["reasons"])
            for r in (staged.join(dcs, "doc_id", "left")
                      .join(dupf, "doc_id", "left")

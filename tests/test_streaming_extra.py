@@ -47,11 +47,8 @@ def test_stateful_running_totals(spark, tmp_path):
     (src / "b.json").write_text("\n".join(json.dumps(r) for r in rows))
     schema = T.StructType([T.StructField("user_id", T.LongType()),
                            T.StructField("value", T.DoubleType())])
-    from yupana_spark.streaming import stateful
-
-    stateful.set_idle_timeout_ms(3000)
     stream = spark.readStream.schema(schema).json(str(src))
-    out = running_totals(stream)
+    out = running_totals(stream, idle_timeout_ms=3000)
     q = (out.writeStream.format("memory").queryName("rt")
          .outputMode("update").trigger(availableNow=True).start())
     q.awaitTermination(30)

@@ -141,18 +141,17 @@ def profile_textstats(spark):
     (fused es/dc starts, corpus line dedup, fp dup frame) timed against
     the row-local base-scan families and the FULL entry.  The base-scan
     probe re-stages the entry's expensive row-local columns through the
-    same library calls — an approximation for attribution, not the
-    entry's exact select list (which also carries c4/line-shape/bm25 and
-    the keep signals)."""
+    same library calls (the shared row_rules stage included) — an
+    approximation for attribution, not the entry's exact select list
+    (which also carries c4/line-shape/bm25)."""
     import __spark_entry__ as ent
     from pyspark.sql import functions as F
     from yupana_spark.datapipe.dedup import (cut_starts_fused,
                                              duplicated_line_stats)
+    from yupana_spark.datapipe.filters import row_rules
     from yupana_spark.datapipe.retrieval import _words_safe
     from yupana_spark.datapipe.text import (ngram_char_frac_cols,
-                                            quality_metrics,
-                                            repetition_stats, scrub_pii)
-    from yupana_spark.datapipe.text import words as _words
+                                            quality_metrics, scrub_pii)
 
     print("== dp_text_stats arms ==")
     # populate the es-index/bm25/fp memos exactly as the bench does
@@ -178,15 +177,14 @@ def profile_textstats(spark):
 
     def baseish():
         m = quality_metrics(F.col("text"))
-        st = (docs.withColumn("__lw", _words(F.lower(F.col("text"))))
-              .withColumn("__bw", _words_safe(F.col("text")))
+        st, rules = row_rules(docs, rep_rule=True)
+        st = (st.withColumn("__bw", _words_safe(F.col("text")))
               .withColumn("__scrubv", scrub_pii(F.col("text"))))
-        rep = repetition_stats(F.col("__lw"), as_words=True)
         return st.select(
             "doc_id", m["n_words"], m["alpha_ratio"], m["stopword_ratio"],
-            rep["dup_word_ratio"], rep["dup_trigram_ratio"],
-            F.md5("__scrubv"),
-            *ngram_char_frac_cols(F.col("__lw"), F.length(F.col("text")),
+            "__quality", "__dup_word_ratio", "__dup_trigram_ratio",
+            *rules.values(), F.md5("__scrubv"),
+            *ngram_char_frac_cols(F.col("__rw"), F.length(F.col("text")),
                                   [(2, "top", "top2_char_frac"),
                                    (5, "dup", "dup5_char_frac")]))
 

@@ -7,70 +7,72 @@ exact-dup detection, benchmark decontamination — into ONE relational
 decision: (id, keep, reasons).  Reasons are a SORTED comma-joined string so
 the output is hash-stable and a SQL oracle can recompute it exactly.
 
-100 TB shape: quality + language are row-local JVM expressions on the one
-scan; the dup flag is the exact-dedup fingerprint min-id aggregate + join
-(one shuffle on 32-byte md5, skew-splittable); decontamination is the
-broadcast n-gram semi-join, or a caller-precomputed flag frame.  Nothing
-collects; the decision column composes with any downstream write.
+100 TB shape: the row-local rules (``row_rules``: quality, language,
+classifier, Gopher repetition, C4) are JVM expressions on the one scan,
+staged once for the batch, streaming and bundle filters alike; the dup
+flag is the exact-dedup fingerprint min-id aggregate + join (one shuffle
+on 32-byte md5, skew-splittable); decontamination is the broadcast n-gram
+semi-join.  Nothing collects; the decision column composes with any
+downstream write.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Dict, Mapping, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def keep_reasons(cont: Column, is_dup: Column, lang_bad: Column,
-                 quality: Column, min_quality: float,
-                 model_low: Optional[Column] = None,
-                 ppx_high: Optional[Column] = None,
-                 rep_high: Optional[Column] = None,
-                 c4_bad: Optional[Column] = None) -> Column:
-    """The ONE definition of the decision labels and their (alphabetical)
-    order — shared by the batch and streaming operators so their
-    pinned-equal decisions cannot drift apart.  ``model_low`` (optional)
-    is the model-based rule's fire flag — 'model_quality' sorts after
-    'low_quality'; ``ppx_high`` (optional) is the CCNet perplexity
-    rule's; ``rep_high`` (optional) is the Gopher repetition/shape
-    rule's — 'repetition' sorts last; ``c4_bad`` (optional) is the C4
-    page rule's — 'c4' sorts first.  The order stays alphabetical."""
+def keep_reasons(flags: Mapping[str, Column]) -> Column:
+    """The ONE definition of the decision string, shared by the batch,
+    streaming and bundle filters so their pinned-equal decisions cannot
+    drift apart: the labels of ``flags`` (label -> fire flag) whose flag
+    is true, in sorted label order, comma-joined ('' when none fires).
+    A NULL flag does not fire."""
     return F.array_join(
-        F.filter(
-            F.array(
-                F.when(c4_bad if c4_bad is not None else F.lit(False),
-                       F.lit("c4")),
-                F.when(cont, F.lit("contaminated")),
-                F.when(is_dup, F.lit("duplicate")),
-                F.when(lang_bad, F.lit("lang")),
-                F.when(quality < F.lit(float(min_quality)),
-                       F.lit("low_quality")),
-                F.when(model_low if model_low is not None else F.lit(False),
-                       F.lit("model_quality")),
-                F.when(ppx_high if ppx_high is not None else F.lit(False),
-                       F.lit("perplexity")),
-                F.when(rep_high if rep_high is not None else F.lit(False),
-                       F.lit("repetition")),
-            ),
-            lambda x: x.isNotNull()),
+        F.filter(F.array(*[F.when(flags[k], F.lit(k))
+                           for k in sorted(flags)]),
+                 lambda x: x.isNotNull()),
         ",")
 
 
 #: The Gopher repetition/shape rule's default bars (Rae et al. 2021
 #: appendix A1.1 for symbol/bullet/ellipsis; in-house analogues for the
-#: duplicate word/trigram family) — the ONE definition shared by
-#: ``repetition_flag``'s keyword defaults AND dp_text_stats' in-plan
-#: decomposition over staged columns (ADVICE r14: the decomposition
-#: duplicated these as literals, so a future default change would have
-#: silently diverged the bundle from the operator with the oracle still
-#: green; sharing the constants makes the pair move together, and the
-#: hash-strict oracle — which recomputes the rule arithmetically — then
-#: flags any change loudly).
+#: duplicate word/trigram family) — ``repetition_flag``'s keyword
+#: defaults and the bars ``row_rules`` stages; the hash-strict oracle
+#: recomputes the rule arithmetically, so a change here shows loudly.
 REP_MAX_DUP_WORD = 0.3
 REP_MAX_DUP_TRIGRAM = 0.2
 REP_MAX_SYMBOL_WORD = 0.1
 REP_MAX_BULLET_LINE = 0.9
 REP_MAX_ELLIPSIS_LINE = 0.3
+
+
+def _repetition_signals(text: Column, w: Column) -> Dict[str, Column]:
+    """The repetition rule's five signals over ``text`` and its staged
+    lowercased word array ``w``."""
+    from .text import line_shape_stats, repetition_stats, symbol_word_ratio
+
+    rep = repetition_stats(w, as_words=True)
+    ls = line_shape_stats(text)
+    return {"dup_word_ratio": rep["dup_word_ratio"],
+            "dup_trigram_ratio": rep["dup_trigram_ratio"],
+            "symbol_word_ratio": symbol_word_ratio(text, word_array=w),
+            "bullet_line_ratio": ls["bullet_line_ratio"],
+            "ellipsis_line_ratio": ls["ellipsis_line_ratio"]}
+
+
+def _repetition_fires(sig: Mapping[str, Column],
+                      max_dup_word: float, max_dup_trigram: float,
+                      max_symbol_word: float, max_bullet_line: float,
+                      max_ellipsis_line: float) -> Column:
+    """The repetition rule's predicate: ANY signal above its bar."""
+    return ((sig["dup_word_ratio"] > F.lit(float(max_dup_word)))
+            | (sig["dup_trigram_ratio"] > F.lit(float(max_dup_trigram)))
+            | (sig["symbol_word_ratio"] > F.lit(float(max_symbol_word)))
+            | (sig["bullet_line_ratio"] > F.lit(float(max_bullet_line)))
+            | (sig["ellipsis_line_ratio"]
+               > F.lit(float(max_ellipsis_line))))
 
 
 def repetition_flag(text: Column, word_array: Optional[Column] = None,
@@ -91,19 +93,77 @@ def repetition_flag(text: Column, word_array: Optional[Column] = None,
     Entirely row-local array/length expressions: identical in batch and
     streaming.  Pass a staged ``word_array`` on hot paths (the trigram
     lambda's per-element recomputation caveat, see
-    ``text.repetition_stats``)."""
-    from .text import (line_shape_stats, repetition_stats,
-                       symbol_word_ratio, words)
+    ``text.repetition_stats``); the corpus filters get it staged by
+    ``row_rules``."""
+    from .text import words
 
     w = word_array if word_array is not None else words(F.lower(text))
-    rep = repetition_stats(w, as_words=True)
-    ls = line_shape_stats(text)
-    return ((rep["dup_word_ratio"] > F.lit(float(max_dup_word)))
-            | (rep["dup_trigram_ratio"] > F.lit(float(max_dup_trigram)))
-            | (symbol_word_ratio(text, word_array=w)
-               > F.lit(float(max_symbol_word)))
-            | (ls["bullet_line_ratio"] > F.lit(float(max_bullet_line)))
-            | (ls["ellipsis_line_ratio"] > F.lit(float(max_ellipsis_line))))
+    return _repetition_fires(_repetition_signals(text, w), max_dup_word,
+                             max_dup_trigram, max_symbol_word,
+                             max_bullet_line, max_ellipsis_line)
+
+
+def row_rules(df: DataFrame, text_col: str = "text",
+              min_quality: float = 0.7,
+              langs: Optional[Sequence[str]] = ("en",),
+              lr_art=None, min_lr: float = 0.5,
+              rep_rule: bool = False, c4_rule: bool = False
+              ) -> Tuple[DataFrame, Dict[str, Column]]:
+    """The row-local corpus rules as ONE stage, shared by ``corpus_keep``,
+    ``streaming.filters.streaming_corpus_filter`` and the dp_text_stats
+    bundle: ``df`` with the staging columns added, and the mapping
+    label -> fire-flag column for ``keep_reasons``.
+
+    Staged, one projection level each:
+
+    * ``__rw`` — ``words(lower(text))``; higher-order functions re-split
+      an unstaged array per element (``text.repetition_stats`` caveat);
+    * the signals ``__quality`` (``quality_score``), ``__lang``
+      (``lang_id``, when ``langs`` is set) and, with ``rep_rule``, the
+      repetition rule's five (``__dup_word_ratio``, ...).  A consumer
+      that also outputs a signal reads the staged column, so the
+      trigram fold runs once per row;
+    * one boolean ``__r_<label>`` flag per enabled rule:
+
+      - 'low_quality'   quality_score < ``min_quality``
+      - 'lang'          predicted language not in ``langs`` (None
+        disables)
+      - 'model_quality' ``classify.quality_lr_score`` < ``min_lr``
+        (``lr_art`` = a ``quality_lr_fit`` artifact)
+      - 'repetition'    the Gopher rule at the ``REP_MAX_*`` bars
+        (``rep_rule``)
+      - 'c4'            NOT ``text.c4_rules(...)["c4_keep"]`` at the
+        paper's defaults (``c4_rule``)
+
+    Every flag is row-local, so batch and stream evaluate the same
+    columns; carry them through joins or a stateful operator by name."""
+    from .text import c4_rules, lang_id, quality_score, words
+
+    text = F.col(text_col)
+    staged = df.withColumn("__rw", words(F.lower(text)))
+    sig = {"quality": quality_score(text)}
+    if langs is not None:
+        sig["lang"] = lang_id(text)
+    if rep_rule:
+        sig.update(_repetition_signals(text, F.col("__rw")))
+    staged = staged.withColumns({f"__{k}": v for k, v in sig.items()})
+    s = {k: F.col(f"__{k}") for k in sig}
+    fires = {"low_quality": s["quality"] < F.lit(float(min_quality))}
+    if langs is not None:
+        fires["lang"] = ~s["lang"].isin(*langs)
+    if lr_art is not None:
+        from .classify import quality_lr_score
+
+        fires["model_quality"] = (quality_lr_score(text, lr_art)
+                                  < F.lit(min_lr))
+    if rep_rule:
+        fires["repetition"] = _repetition_fires(
+            s, REP_MAX_DUP_WORD, REP_MAX_DUP_TRIGRAM, REP_MAX_SYMBOL_WORD,
+            REP_MAX_BULLET_LINE, REP_MAX_ELLIPSIS_LINE)
+    if c4_rule:
+        fires["c4"] = ~c4_rules(text)["c4_keep"]
+    staged = staged.withColumns({f"__r_{k}": v for k, v in fires.items()})
+    return staged, {k: F.col(f"__r_{k}") for k in fires}
 
 
 def corpus_keep(df: DataFrame, text_col: str = "text",
@@ -113,131 +173,46 @@ def corpus_keep(df: DataFrame, text_col: str = "text",
                 lr_art=None, min_lr: float = 0.5,
                 ppx_art=None, max_xent: float = 10.0,
                 rep_rule: bool = False,
-                c4_rule: bool = False,
-                contaminated_flags: Optional[DataFrame] = None,
-                dup_flags: Optional[DataFrame] = None) -> DataFrame:
+                c4_rule: bool = False) -> DataFrame:
     """(id, keep, reasons): keep iff NO rule fires; ``reasons`` lists the
     fired rules in fixed alphabetical order ('c4', 'contaminated',
     'duplicate', 'lang', 'low_quality', 'model_quality', 'perplexity',
     'repetition'), comma-joined ('' when kept).
 
-    Rules (each optional):
-    * quality_score < ``min_quality``          -> 'low_quality'
-    * predicted language not in ``langs``      -> 'lang'  (None disables)
+    The row-local rules ('c4', 'lang', 'low_quality', 'model_quality',
+    'repetition') are ``row_rules``' flags — see there for their
+    parameters.  The corpus-wide ones:
     * exact-duplicate (non-min-id fingerprint) -> 'duplicate'
-      (or pass ``dup_flags`` — a precomputed (id, is_duplicate) frame,
-      e.g. from a memoized ingest-time fingerprint index — to skip the
-      md5 fingerprint pass here; absent ids default to not-duplicate)
     * shares a word-8-gram with ``eval_docs``  -> 'contaminated'
-      (or pass ``contaminated_flags`` — a precomputed one-``id``-column
-      frame of contaminated docs, e.g. ``decontaminate_cut``'s
-      ``contamination_frac > 0`` rows — to reuse a gram explode the
-      pipeline already pays for instead of re-deriving it here)
-    * classifier score < ``min_lr``            -> 'model_quality'
-      (``lr_art`` = a ``classify.quality_lr_fit`` artifact; the score is
-      pure JVM arithmetic riding the same scan — the FineWeb-Edu/DCLM
-      model-filter composed with the rule filters)
     * bigram-LM cross-entropy > ``max_xent``   -> 'perplexity'
       (``ppx_art`` = a ``ppx.bigram_lm_fit`` artifact; the CCNet-style
       statistical filter — Wenzek et al. 2020 drop the high-perplexity
       tail of the crawl.  Unlike the row-local rules this one joins the
       per-doc score frame on id; docs with < 2 words carry no bigram
       evidence and never fire it)
-    * Gopher repetition/shape rule fires       -> 'repetition'
-      (``rep_rule=True``; row-local ``repetition_flag`` at its
-      published default bars — custom bars compose the flag directly)
-    * C4 page rule fires                        -> 'c4'
-      (``c4_rule=True``; ``NOT text.c4_rules(...)["c4_keep"]`` at the
-      paper's defaults — < 3 sentences in the cleaned lines, a curly
-      brace, or 'lorem ipsum'; row-local like the Gopher rule)
     """
     from .dedup import exact_dedup
-    from .text import contaminated_ids, lang_id, quality_score
+    from .text import contaminated_ids
 
-    mq = F.lit(False)
-    if lr_art is not None:
-        from .classify import quality_lr_score
-
-        mq = quality_lr_score(F.col(text_col), lr_art) < F.lit(min_lr)
-    # staged word array: repetition_flag's trigram lambda would otherwise
-    # re-split the text per element (text.repetition_stats caveat)
-    from .text import words as _words
-
-    rp = (repetition_flag(F.col(text_col), word_array=F.col("__rw"))
-          if rep_rule else F.lit(False))
-    if c4_rule:
-        from .text import c4_rules
-
-        c4 = ~c4_rules(F.col(text_col))["c4_keep"]
-    else:
-        c4 = F.lit(False)
-    sig_cols = lambda frame: frame \
-        .withColumn("__rw", _words(F.lower(F.col(text_col)))) \
-        .select(
-            F.col(id_col).alias("id"),
-            F.col("is_duplicate"),
-            quality_score(F.col(text_col)).alias("__q"),
-            lang_id(F.col(text_col)).alias("__lang"),
-            mq.alias("__mq"),
-            rp.alias("__rp"),
-            c4.alias("__c4"),
-        )
-    if dup_flags is not None:
-        # precomputed (id, is_duplicate) frame — e.g. derived from a
-        # memoized ingest-time fingerprint index — so the md5 fingerprint
-        # pass over the full text is not re-paid here (r12); missing ids
-        # default to NOT duplicate like exact_dedup's unique rows
-        out = sig_cols(
-            df.join(dup_flags.select(F.col("id").alias(id_col),
-                                     "is_duplicate"),
-                    id_col, "left")
-            .withColumn("is_duplicate",
-                        F.coalesce(F.col("is_duplicate"), F.lit(False))))
-    else:
-        out = sig_cols(exact_dedup(df, text_col, id_col))
-    if contaminated_flags is not None:
-        # precomputed contaminated-id frame (single ``id`` column, one
-        # row per contaminated doc): a pipeline that already ran
-        # decontaminate_cut/contamination_frac passes its own flags so
-        # the corpus gram explode is paid ONCE, not re-derived here —
-        # identical exchanges dedupe to a ReusedExchange in one plan
-        # (review r12: dp_text_stats re-exploded the corpus for this
-        # rule).  The frame's membership must be the same any-overlap
-        # boolean contaminated_ids computes (contamination_frac > 0).
-        flags = (contaminated_flags.select(F.col("id"))
-                 .withColumn("__cont", F.lit(True)))
-        out = (out.join(flags, "id", "left")
-               .withColumn("__cont", F.coalesce(F.col("__cont"),
-                                                F.lit(False))))
-    elif eval_docs is not None:
-        flags = (contaminated_ids(df, eval_docs, text_col, id_col)
-                 .select(F.col(id_col).alias("id"))
-                 .withColumn("__cont", F.lit(True)))
-        out = (out.join(flags, "id", "left")
-               .withColumn("__cont", F.coalesce(F.col("__cont"),
-                                                F.lit(False))))
-    else:
-        out = out.withColumn("__cont", F.lit(False))
+    staged, flags = row_rules(exact_dedup(df, text_col, id_col), text_col,
+                              min_quality, langs, lr_art, min_lr,
+                              rep_rule, c4_rule)
+    out = staged.select(F.col(id_col).alias("id"), "is_duplicate",
+                        *flags.values())
+    flags["duplicate"] = F.col("is_duplicate")
+    if eval_docs is not None:
+        cont = (contaminated_ids(df, eval_docs, text_col, id_col)
+                .select(F.col(id_col).alias("id"),
+                        F.lit(True).alias("__cont")))
+        out = out.join(cont, "id", "left")
+        flags["contaminated"] = F.col("__cont")
     if ppx_art is not None:
         from .ppx import bigram_xent_scores
 
-        xs = bigram_xent_scores(df, ppx_art, text_col, id_col)
-        out = (out.join(xs, "id", "left")
-               .withColumn("__px",
-                           F.coalesce(F.col("big_xent")
-                                      > F.lit(float(max_xent)),
-                                      F.lit(False)))
-               .drop("big_xent"))
-    else:
-        out = out.withColumn("__px", F.lit(False))
-    lang_bad = (F.lit(False) if langs is None
-                else ~F.col("__lang").isin(*langs))
-    reasons = keep_reasons(F.col("__cont"), F.col("is_duplicate"),
-                           lang_bad, F.col("__q"), min_quality,
-                           model_low=F.col("__mq"),
-                           ppx_high=F.col("__px"),
-                           rep_high=F.col("__rp"),
-                           c4_bad=F.col("__c4"))
+        out = out.join(bigram_xent_scores(df, ppx_art, text_col, id_col),
+                       "id", "left")
+        flags["perplexity"] = F.col("big_xent") > F.lit(float(max_xent))
+    reasons = keep_reasons(flags)
     return out.select(
         "id",
         (F.length(reasons) == 0).alias("keep"),
@@ -309,15 +284,14 @@ def corpus_preprocess(df: DataFrame, text_col: str = "text",
     cut, and a row-local sample predicate.  Composition adds only
     narrow id-keyed joins.
 
-    Cache lifecycle (caller-owned, ADVICE r15): when a near-dup arm is
-    active the recipe PERSISTS a narrow (id, reasons) verdict frame
-    (MEMORY_AND_DISK) so the corpus_keep subtree does not execute
-    twice per action.  That entry outlives this call — a long-lived
-    driver invoking the recipe repeatedly should call
-    :func:`release_cache` on the returned frame once it has been
-    materialized (the handle rides the frame as ``_yupana_persisted``;
-    lineage stays recomputable, so an early release can only cost
-    recompute time, never correctness).
+    Cache lifecycle: when a near-dup arm is active the recipe PERSISTS a
+    narrow (id, reasons) verdict frame (MEMORY_AND_DISK) so the
+    corpus_keep subtree does not execute twice per action.  One
+    ``memo.persist`` slot owns it: a recipe over the same corpus reads
+    the held entry, a recipe over another corpus releases it first, so
+    a long-lived driver holds at most one verdict frame (lineage stays
+    recomputable, so a release can only cost recompute time, never
+    correctness).
 
     Oracled first-class as the dp_corpus_preprocess bundle (r15 — the
     DuckDB oracle recomputes keep/reasons/text_clean/cuts/sampled end
@@ -365,12 +339,11 @@ def corpus_preprocess(df: DataFrame, text_col: str = "text",
         # whole corpus_keep subtree — fingerprint shuffle, contamination
         # explode — executes twice per action.  Persist the NARROW
         # (id, reasons) frame instead (tens of bytes/doc at any scale):
-        # MEMORY_AND_DISK with recomputable lineage, the same posture as
-        # dedup._rung3_exact's screened set (r15).
-        from pyspark import StorageLevel
+        # MEMORY_AND_DISK with recomputable lineage, owned by one memo
+        # slot like dedup._rung3_exact's screened set.
+        from .. import memo
 
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted = out
+        out = memo.persist("recipe_verdict", (), out)
         surv = out.filter(F.length("reasons") == 0).select("id")
         if neardup_pairs is not None:
             pairs = (neardup_pairs
@@ -390,7 +363,6 @@ def corpus_preprocess(df: DataFrame, text_col: str = "text",
                .withColumn("__nd", F.coalesce(F.col("__nd"),
                                               F.lit(False))))
     else:
-        persisted = None
         out = out.withColumn("__nd", F.lit(False))
     # fold the near-dup verdict into the SAME alphabetical reason list
     reasons = F.array_join(
@@ -423,24 +395,8 @@ def corpus_preprocess(df: DataFrame, text_col: str = "text",
     # verbatim — replay == batch)
     sampled = (F.lit(True) if sample_rate >= 1.0
                else bernoulli_keep(F.col("id"), float(sample_rate)))
-    result = out.select(
+    return out.select(
         "id", "keep", "reasons",
         F.when(F.col("keep"), F.col("__clean")).alias("text_clean"),
         "n_words", "n_cut_words",
         (F.col("keep") & sampled).alias("sampled"))
-    # cache lifecycle is CALLER-owned (ADVICE r15): the narrow verdict
-    # persist above outlives this call so repeated recipes in a
-    # long-lived driver would accumulate MEMORY_AND_DISK entries.  The
-    # handle rides the returned frame; call release_cache(result) once
-    # it is materialized (lineage stays recomputable, so an early
-    # release can only cost recompute time, never correctness).
-    result._yupana_persisted = () if persisted is None else (persisted,)
-    return result
-
-
-def release_cache(df: DataFrame) -> None:
-    """Unpersist the cache entries a recipe attached to ``df``
-    (``corpus_preprocess``'s narrow verdict frame).  Non-blocking and
-    idempotent; a no-op for frames that carry none."""
-    for frame in getattr(df, "_yupana_persisted", ()):
-        frame.unpersist(False)

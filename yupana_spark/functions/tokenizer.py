@@ -177,10 +177,6 @@ def stemmed_tokens(text: str) -> List[str]:
     return tokenize(text, do_stem=True)
 
 
-def raw_tokens(text: str) -> List[str]:
-    return tokenize(text, do_stem=False)
-
-
 def transliterated_tokens(text: str) -> List[str]:
     """stemmedTokens -> transliterate (TokenizerBase.transliteratedTokens)."""
     return [t for t in (transliterate(w) for w in stemmed_tokens(text)) if t]

@@ -1,15 +1,20 @@
 """Online corpus filtering: the batch keep/drop decision
 (datapipe/filters.corpus_keep) for an always-on ingest.
 
-Row-local rules (quality score, language ID, decontamination against a
-STATIC eval corpus) are stateless and computed scan-side; the one stateful
-rule is exact-dup — "is this content fingerprint already seen" — kept per
-fingerprint with ``applyInPandasWithState`` (the same keyed layout as
-Spark's own streaming dedup, but FLAGGING later arrivals instead of
-dropping them, so the output keeps the per-document decision contract:
-(id, keep, reasons)).  The row-local columns ride THROUGH the stateful
-operator: a streaming join back to the source would be a stream-stream
-join, which append mode forbids.
+The row-local rules (quality, language, classifier, Gopher repetition,
+C4) are the batch twin's own ``filters.row_rules`` stage, evaluated
+scan-side.  The stream differs from the batch only where it must:
+
+* exact-dup — "is this content fingerprint already seen" — is kept per
+  fingerprint with ``applyInPandasWithState`` (the same keyed layout as
+  Spark's own streaming dedup, but FLAGGING later arrivals instead of
+  dropping them, so the output keeps the per-document decision
+  contract: (id, keep, reasons));
+* decontamination and perplexity read broadcast sets instead of
+  joining (below).
+
+The fire flags ride THROUGH the stateful operator: a streaming join back
+to the source would be a stream-stream join, which append mode forbids.
 
 Decontamination without a join: the eval corpus is bounded by definition
 (the batch path already broadcasts it), so its distinct word-8-gram hash
@@ -33,24 +38,12 @@ from pyspark.sql.streaming.state import GroupState
 
 from .horizon import arm_timeout, event_ms, timeout_mode
 
-_OUT_SCHEMA = T.StructType([
-    T.StructField("id", T.LongType()),
-    T.StructField("q", T.DoubleType()),
-    T.StructField("lang", T.StringType()),
-    T.StructField("cont", T.BooleanType()),
-    T.StructField("mq", T.BooleanType()),
-    T.StructField("px", T.BooleanType()),
-    T.StructField("rp", T.BooleanType()),
-    T.StructField("c4", T.BooleanType()),
-    T.StructField("is_duplicate", T.BooleanType()),
-])
-
 _STATE_SCHEMA = T.StructType([
     T.StructField("n", T.IntegerType()),
 ])
 
 
-def _make_dup_update(idle_timeout_ms: Optional[int],
+def _make_dup_update(carry: Sequence[str], idle_timeout_ms: Optional[int],
                      event_time_col: Optional[str] = None):
     def _dup_update(key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame],
                     state: GroupState) -> Iterator[pd.DataFrame]:
@@ -71,8 +64,7 @@ def _make_dup_update(idle_timeout_ms: Optional[int],
                     event_ms(pdf[event_time_col])
                     if event_time_col is not None else None)
         if len(pdf):
-            out = pdf[["id", "q", "lang", "cont", "mq", "px", "rp",
-                       "c4"]].copy()
+            out = pdf[list(carry)].copy()
             out["is_duplicate"] = dup
             yield out
 
@@ -219,22 +211,20 @@ def streaming_corpus_filter(stream: DataFrame, text_col: str = "text",
     ``event_time_col`` (requires a watermark on that column) makes the
     horizon EVENT-time — eviction keyed to the watermark, deterministic
     under replay at any wall-clock pacing — instead of processing-time.
-    ``lr_art``/``min_lr`` enable the model-quality rule exactly as in the
-    batch twin (the LR score is row-local JVM arithmetic, so it rides the
-    stream scan like the other stateless rules).  ``ppx_art``/``max_xent``
-    enable the CCNet perplexity rule: the bounded LM artifacts ship via
-    ``sc.broadcast`` to a row-local Arrow UDF (the decontamination
-    pattern), same hashes/formula/rounding as the batch scorer.
-    ``rep_rule`` enables the Gopher repetition/shape rule — row-local
-    array expressions, so it rides the stream scan verbatim (the SAME
-    ``filters.repetition_flag`` the batch twin evaluates).  ``c4_rule``
-    enables the C4 page rule the same way (``text.c4_rules``)."""
+    ``min_quality``/``langs``/``lr_art``/``min_lr``/``rep_rule``/
+    ``c4_rule`` are ``filters.row_rules``' parameters, the SAME stage
+    the batch twin evaluates.  ``ppx_art``/``max_xent`` enable the CCNet
+    perplexity rule: the bounded LM artifacts ship via ``sc.broadcast``
+    to a row-local Arrow UDF (the decontamination pattern), same
+    hashes/formula/rounding as the batch scorer, over the stage's
+    staged word array."""
+    from ..datapipe.filters import keep_reasons, row_rules
     from ..datapipe.text import (exploded_ngram_hashes, fingerprint_md5,
-                                 lang_id, normalize_text, quality_score,
-                                 words)
+                                 normalize_text, words)
 
-    staged = stream.withColumn("__w",
-                               words(normalize_text(F.col(text_col))))
+    timeout = timeout_mode(idle_timeout_ms, event_time_col)
+    staged, flags = row_rules(stream, text_col, min_quality, langs, lr_art,
+                              min_lr, rep_rule, c4_rule)
     if eval_docs is not None:
         # bounded by the eval corpus' size; one static collect through THE
         # shared staged n-gram definition (text.exploded_ngram_hashes),
@@ -245,68 +235,41 @@ def streaming_corpus_filter(stream: DataFrame, text_col: str = "text",
                    .distinct().collect())
         bc = stream.sparkSession.sparkContext.broadcast(
             frozenset(int(r["h"]) for r in ev_rows))
-        cont = _contaminated_col(F.col("__w"), bc)
-    else:
-        cont = F.lit(False)
-    timeout = timeout_mode(idle_timeout_ms, event_time_col)
-    mq = F.lit(False)
-    if lr_art is not None:
-        from ..datapipe.classify import quality_lr_score
-
-        mq = quality_lr_score(F.col(text_col), lr_art) < F.lit(min_lr)
-    px = F.lit(False)
+        staged = staged.withColumn(
+            "__w", words(normalize_text(F.col(text_col))))
+        flags["contaminated"] = _contaminated_col(F.col("__w"), bc)
     if ppx_art is not None:
         from ..datapipe.ppx import _pairs as _ppx_pairs
-        from ..datapipe.text import words as _words
 
         uni_f, big_f, n_total, v_total = ppx_art[:4]
         lm_bc = stream.sparkSession.sparkContext.broadcast(
             ({int(r["h"]): float(r["c_u"]) for r in uni_f.collect()},
              {int(r["hb"]): float(r["m"]) for r in big_f.collect()},
              float(n_total), float(v_total)))
-        pw = _ppx_pairs(_words(F.lower(F.col(text_col))))
-        px = _ppx_flag_col(
+        pw = _ppx_pairs(F.col("__rw"))
+        flags["perplexity"] = _ppx_flag_col(
             F.transform(pw, lambda s: F.xxhash64(s["w1"], s["w2"])),
             F.transform(pw, lambda s: F.xxhash64(s["w2"])),
             lm_bc, 0.75, 0.5, max_xent)
-    rp = F.lit(False)
-    if rep_rule:
-        from ..datapipe.filters import repetition_flag
-        from ..datapipe.text import words as _lw
-
-        # staged like the batch twin (lowercased, un-normalized words)
-        staged = staged.withColumn("__rw", _lw(F.lower(F.col(text_col))))
-        rp = repetition_flag(F.col(text_col), word_array=F.col("__rw"))
-    c4 = F.lit(False)
-    if c4_rule:
-        from ..datapipe.text import c4_rules
-
-        c4 = ~c4_rules(F.col(text_col))["c4_keep"]
+    labels = sorted(flags)
     carry = ((F.col(event_time_col),) if event_time_col is not None else ())
     base = staged.select(
         F.col(id_col).cast("long").alias("id"),
         *carry,
         fingerprint_md5(F.col(text_col)).alias("__fp"),
-        quality_score(F.col(text_col)).alias("q"),
-        lang_id(F.col(text_col)).alias("lang"),
-        cont.alias("cont"),
-        mq.alias("mq"),
-        px.alias("px"),
-        rp.alias("rp"),
-        c4.alias("c4"),
+        *[flags[k].alias(k) for k in labels],
     )
+    out_schema = T.StructType(
+        [T.StructField("id", T.LongType())]
+        + [T.StructField(k, T.BooleanType()) for k in labels]
+        + [T.StructField("is_duplicate", T.BooleanType())])
     flagged = (base.groupBy("__fp")
                .applyInPandasWithState(
-                   _make_dup_update(idle_timeout_ms, event_time_col),
-                   _OUT_SCHEMA, _STATE_SCHEMA, "append", timeout))
-    from ..datapipe.filters import keep_reasons
-
-    lang_bad = (F.lit(False) if langs is None
-                else ~F.col("lang").isin(*langs))
-    reasons = keep_reasons(F.col("cont"), F.col("is_duplicate"),
-                           lang_bad, F.col("q"), min_quality,
-                           model_low=F.col("mq"), ppx_high=F.col("px"),
-                           rep_high=F.col("rp"), c4_bad=F.col("c4"))
+                   _make_dup_update(["id", *labels], idle_timeout_ms,
+                                    event_time_col),
+                   out_schema, _STATE_SCHEMA, "append", timeout))
+    reasons = keep_reasons({**{k: F.col(k) for k in labels},
+                            "duplicate": F.col("is_duplicate")})
     return flagged.select(
         "id",
         (F.length(reasons) == 0).alias("keep"),

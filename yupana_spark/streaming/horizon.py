@@ -1,10 +1,11 @@
 """Shared state-horizon plumbing for the stateful streaming operators.
 
-Both online operators (near-dup buckets, corpus-filter fingerprints)
-offer the same two eviction clocks — wall time (ProcessingTimeTimeout)
-and data time (EventTimeTimeout keyed to the watermark).  The clock
-selection and the per-group timeout arming live HERE so the two can
-never drift apart.
+The stateful operators (near-dup buckets, corpus-filter fingerprints,
+per-domain caps, running totals) bound their state by a horizon under
+one of two eviction clocks — wall time (ProcessingTimeTimeout) and data
+time (EventTimeTimeout keyed to the watermark).  The clock selection and
+the per-group timeout arming live HERE so the operators can never drift
+apart.
 """
 
 from __future__ import annotations

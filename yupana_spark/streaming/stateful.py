@@ -5,21 +5,24 @@ Spark-native extension point for operators session_window can't express —
 arbitrary per-key state with timeouts.  Example operator: running per-key
 totals with inactivity expiry (emits a final snapshot when a key goes quiet).
 
-State is a per-key tuple (count, sum, last_seen_epoch); each micro-batch
-updates it from the Arrow-batched rows; processing-time timeout flushes idle
-keys.  At scale this is one shuffle on the key (state is partition-local
+State is a per-key tuple (count, sum); each micro-batch updates it from
+the Arrow-batched rows; a processing-time timeout (armed through
+``horizon`` like the other stateful operators) flushes idle keys.  At
+scale this is one shuffle on the key (state is partition-local
 afterwards) — the same layout Flink keyed state or Spark's own
 streaming-aggregation state store uses.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
+from typing import Any, Iterator, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from .horizon import arm_timeout, timeout_mode
 
 OUTPUT_SCHEMA = T.StructType([
     T.StructField("key", T.LongType()),
@@ -34,15 +37,7 @@ STATE_SCHEMA = T.StructType([
 ])
 
 
-_TIMEOUT_MS = 30_000  # overridable for tests via set_idle_timeout_ms
-
-
-def set_idle_timeout_ms(ms: int) -> None:
-    global _TIMEOUT_MS
-    _TIMEOUT_MS = ms
-
-
-def _make_update(with_timeout: bool):
+def _make_update(idle_timeout_ms: Optional[int]):
     def _update(key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame],
                 state: GroupState) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
@@ -56,35 +51,31 @@ def _make_update(with_timeout: bool):
             n += len(pdf)
             total += float(pdf["value"].sum())
         state.update((n, total))
-        if with_timeout:
-            state.setTimeoutDuration(_TIMEOUT_MS)  # inactivity closes keys
+        arm_timeout(state, idle_timeout_ms, None, None)  # inactivity closes
         yield pd.DataFrame({"key": [key[0]], "n_events": [n],
                             "total": [total], "closed": [False]})
 
     return _update
 
 
-_update = _make_update(True)  # back-compat module-level form
-
-
 def running_totals(stream: DataFrame, key_col: str = "user_id",
                    value_col: str = "value",
-                   idle_timeout: bool = True) -> DataFrame:
+                   idle_timeout_ms: Optional[int] = 30_000) -> DataFrame:
     """Per-key running (count, sum), with optional inactivity expiry.
 
     Works on a streaming DataFrame with columns (key_col, value_col).
-    ``idle_timeout=False`` runs with NoTimeout — required under an
-    availableNow trigger, where ProcessingTimeTimeout keeps the query alive
-    scheduling empty micro-batches until wall-clock expiry (observed: the
-    query never terminates); an always-on pipeline keeps the default.
+    A key idle for ``idle_timeout_ms`` of processing time emits a final
+    ``closed`` snapshot and drops its state.  ``None`` runs with
+    NoTimeout — required under an availableNow trigger, where
+    ProcessingTimeTimeout keeps the query alive scheduling empty
+    micro-batches until wall-clock expiry (observed: the query never
+    terminates); an always-on pipeline keeps a horizon.
     """
     from pyspark.sql import functions as F
 
     src = stream.select(F.col(key_col).alias("key"),
                         F.col(value_col).alias("value"))
-    timeout = (GroupStateTimeout.ProcessingTimeTimeout if idle_timeout
-               else GroupStateTimeout.NoTimeout)
     return (src.groupBy("key")
             .applyInPandasWithState(
-                _make_update(idle_timeout), OUTPUT_SCHEMA, STATE_SCHEMA,
-                "update", timeout))
+                _make_update(idle_timeout_ms), OUTPUT_SCHEMA, STATE_SCHEMA,
+                "update", timeout_mode(idle_timeout_ms, None)))
