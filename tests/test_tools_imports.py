@@ -1,4 +1,5 @@
-"""Every name a script takes from the engine still exists.
+"""Every name a script takes from the engine still exists, and every
+script imports the engine from its own tree.
 
 The scripts — ``tools/*.py``, ``bench.py`` and the benchmark's
 ``perfbench/*.py`` — import bundle internals (``ent._nd_arts``,
@@ -11,10 +12,16 @@ module> import name``, every attribute read through an engine alias (a
 module, or a class imported from one, and dotted chains from them) and
 every string literal passed right after such an alias.  Aliases follow
 Python's scoping: a local of the same name hides them.  No Spark
-session is started."""
+session is started.
+
+A script that puts a fixed absolute checkout path on ``sys.path`` imports
+that checkout's engine wherever it is run from, so a run from a second
+copy of the repo (a parent/change comparison) tests the wrong tree;
+scripts resolve the repo from ``__file__`` instead."""
 
 import ast
 import importlib
+import os
 from pathlib import Path
 from types import ModuleType
 
@@ -115,12 +122,30 @@ def missing_engine_names(path: Path) -> list:
     return sorted(set(missing))
 
 
-@pytest.mark.parametrize(
-    "script", SCRIPTS,
-    ids=[p.name if p.parent == TOOLS else str(p.relative_to(ROOT))
-         for p in SCRIPTS])
+def fixed_sys_paths(path: Path) -> list:
+    """Absolute path literals ``path`` puts on ``sys.path``."""
+    return [a.value for node in ast.walk(ast.parse(path.read_text()))
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("insert", "append")
+            and ast.unparse(node.func.value) == "sys.path"
+            for a in node.args
+            if isinstance(a, ast.Constant) and isinstance(a.value, str)
+            and os.path.isabs(a.value)]
+
+
+_IDS = [p.name if p.parent == TOOLS else str(p.relative_to(ROOT))
+        for p in SCRIPTS]
+
+
+@pytest.mark.parametrize("script", SCRIPTS, ids=_IDS)
 def test_tool_uses_only_live_engine_names(script):
     assert missing_engine_names(script) == []
+
+
+@pytest.mark.parametrize("script", SCRIPTS, ids=_IDS)
+def test_tool_imports_its_own_tree(script):
+    assert fixed_sys_paths(script) == []
 
 
 def test_missing_name_is_reported(tmp_path):
@@ -144,3 +169,14 @@ def test_missing_name_is_reported(tmp_path):
         "yupana_spark.datapipe.dedup.no_such_operator",
         "yupana_spark.memo.no_such_kind",
     ]
+
+
+def test_fixed_sys_path_is_reported(tmp_path):
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "import os, sys\n"
+        "sys.path.insert(0, '/srv/checkout')\n"
+        "sys.path.append('/opt/other')\n"
+        "sys.path.insert(0, os.path.dirname(__file__))\n"
+        "sys.path.insert(0, 'relative')\n")
+    assert fixed_sys_paths(probe) == ["/srv/checkout", "/opt/other"]

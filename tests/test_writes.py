@@ -543,3 +543,235 @@ def test_swap_sweeps_leaked_old_dirs(wtsdb, monkeypatch):
     wh.write_table("orders", src)
     assert not glob.glob(wh.path("orders") + ".compact.*")
     assert wh.read("orders").count() == 50
+
+
+# -- snapshot reads: one resolution of a table's files and schema per commit
+
+
+def test_schema_pin_equals_inferred_schema(wtsdb):
+    """Every commit pins exactly the schema a read would infer (nullable
+    at every level, the bucket column last)."""
+    import json
+    import os
+
+    import pyspark.sql.functions as F
+    from pyspark.sql import types as T
+
+    from yupana_spark.operators.writes import SCHEMA_PIN
+
+    wh, spark = wtsdb.warehouse, wtsdb.spark
+
+    def check(table):
+        with open(os.path.join(wh.path(table), SCHEMA_PIN)) as f:
+            pinned = T.StructType.fromJson(json.load(f))
+        assert pinned == spark.read.parquet(wh.path(table)).schema
+
+    orders = wtsdb.schema.load(spark, wtsdb.sf_dir, "orders").limit(20)
+    wh.write_table("orders", orders)                   # partitioned _write
+    check("orders")
+    wh.compact("orders")
+    check("orders")
+    flat = spark.range(3).select(
+        "id", F.array(F.col("id")).alias("ids"),
+        F.lit("1.50").cast("decimal(18,2)").alias("fee"))
+    wh.write_table("flat", flat)                       # no time column
+    check("flat")
+    wh.compact("flat")
+    check("flat")
+    ts = spark.range(3).select(
+        "id", F.lit(dt.datetime(1997, 3, 5)).alias("ts"))
+    wh.write_table("by_ts", ts, time_col="ts")
+    check("by_ts")
+
+
+def test_snapshot_read_sees_every_commit(wtsdb, spark):
+    """Each commit (upsert, write_table, compact, recalculate) drops the
+    table's one memoized read, for this Tsdb and for a second one on the
+    same root; a repeated read between commits is the same frame."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    from yupana_spark import memo
+    from yupana_spark.operators.rollup import Rollup, recalculate
+
+    wh = wtsdb.warehouse
+    other = Tsdb(spark, default_schema(), wtsdb.sf_dir,
+                 warehouse_root=wh.root).warehouse
+    upsert = ("UPSERT INTO orders (time, o_orderkey, o_custkey, "
+              "o_orderstatus, o_orderpriority, o_totalprice) VALUES "
+              "(TIMESTAMP '1996-06-0{d}', 99000{d}, 1, 'F', '1-URGENT', 1.0)")
+
+    def keys(w, table="orders"):
+        df = w.read(table)
+        assert all(os.path.exists(unquote(urlparse(p).path))
+                   for p in df.inputFiles())
+        return {r[0] for r in df.filter("o_orderkey >= 990000")
+                .select("o_orderkey").collect()}
+
+    wtsdb.sql(upsert.format(d=1))
+    assert keys(wh) == keys(other) == {990001}
+    assert wh.snapshot("orders") is other.snapshot("orders")
+    wtsdb.sql(upsert.format(d=2))
+    assert memo.peek("wh_read", (wh.path("orders"),)) is None
+    assert keys(other) == keys(wh) == {990001, 990002}
+    wh.write_table("orders", wh.read("orders").filter("o_orderkey != 990001"))
+    assert keys(wh) == keys(other) == {990002}
+    before = set(wh.read("orders").inputFiles())
+    wh.compact("orders")
+    assert keys(other) == {990002}
+    assert not before & set(other.read("orders").inputFiles())
+
+    r = Rollup(name="orders_by_month", from_table="orders",
+               to_table="orders_by_month", time_trunc="month",
+               group_by=(), aggregates=((E.count(E.Field(
+                   "o_orderkey", "LONG")), "n"),))
+
+    def month_n():
+        return {x["time"]: x["n"] for x in other.read(r.to_table).collect()}
+
+    recalculate(wh, r)
+    before = month_n()
+    wtsdb.sql(upsert.format(d=3))
+    recalculate(wh, r)
+    june = dt.datetime(1996, 6, 1)
+    assert month_n() == {**before, june: before[june] + 1}
+
+
+def test_snapshot_reads_directory_without_pin(wtsdb):
+    """A table directory written before schema pins existed is read with
+    an inferred schema."""
+    import os
+
+    from yupana_spark import memo
+    from yupana_spark.operators.writes import SCHEMA_PIN
+
+    wh = wtsdb.warehouse
+    wh.write_table("orders",
+                   wtsdb.schema.load(wtsdb.spark, wtsdb.sf_dir, "orders"))
+    want = sorted(map(tuple, wh.read("orders").collect()))
+    os.remove(os.path.join(wh.path("orders"), SCHEMA_PIN))
+    memo.invalidate("wh_read")
+    assert sorted(map(tuple, wh.read("orders").collect())) == want
+
+
+def test_snapshot_build_racing_a_commit_is_not_kept(wtsdb, monkeypatch):
+    """A read whose build overlapped a commit of the table is returned
+    but not memoized: the next read lists the committed files."""
+    import yupana_spark.operators.writes as W
+    from yupana_spark import memo
+
+    wh = wtsdb.warehouse
+    src = wtsdb.schema.load(wtsdb.spark, wtsdb.sf_dir, "orders")
+    wh.write_table("orders", src.limit(10))
+    memo.invalidate("wh_read")
+    real = W._read_dir
+
+    def racing(spark, path):
+        df = real(spark, path)
+        monkeypatch.setattr(W, "_read_dir", real)
+        wh.write_table("orders", src.limit(20))       # commits mid-build
+        return df
+
+    monkeypatch.setattr(W, "_read_dir", racing)
+    wh.read("orders")
+    assert memo.peek("wh_read", (wh.path("orders"),)) is None
+    assert wh.read("orders").count() == 20
+
+
+def test_upsert_values_arrow_batch_roundtrip(wtsdb):
+    """UPSERT VALUES batches keep DECIMAL/CURRENCY values (rounded half-up
+    to the column scale), NULL dimensions and microsecond timestamps, and
+    a key repeated inside one batch keeps its last row."""
+    from decimal import Decimal
+
+    import pyspark.sql.functions as F
+
+    wh = wtsdb.warehouse
+    wh.write_table("orders", wtsdb.schema.load(
+        wtsdb.spark, wtsdb.sf_dir, "orders").limit(5).select(
+        "*", F.lit(None).cast("decimal(18,2)").alias("o_fee"),
+        F.lit(None).cast("decimal(18,4)").alias("o_rate")))
+    t = dt.datetime(1996, 6, 6, 1, 2, 3, 456789)
+    cols = ["time", "o_orderkey", "o_custkey", "o_orderstatus",
+            "o_orderpriority", "o_totalprice", "o_fee", "o_rate"]
+    n = wh.upsert_values("orders", cols, [
+        (t, 990001, None, None, "1-URGENT", Decimal("1.5"),
+         Decimal("12.345"), 7),
+        (t, 990002, 5, "F", None, 2, Decimal("-0.005"), Decimal("0.12345")),
+        (t, 990001, None, None, "1-URGENT", Decimal("9.5"),
+         Decimal("1.01"), None),                      # same key: wins
+    ])
+    assert n == 2
+    got = {r["o_orderkey"]: r.asDict() for r in wh.read("orders")
+           .filter("o_orderkey >= 990001").collect()}
+    common = {"time": t, "o_orderdate": t}
+    assert {k: {c: v[c] for c in cols[1:] + ["time", "o_orderdate"]}
+            for k, v in got.items()} == {
+        990001: {**common, "o_orderkey": 990001, "o_custkey": None,
+                 "o_orderstatus": None, "o_orderpriority": "1-URGENT",
+                 "o_totalprice": 9.5, "o_fee": Decimal("1.01"),
+                 "o_rate": None},
+        990002: {**common, "o_orderkey": 990002, "o_custkey": 5,
+                 "o_orderstatus": "F", "o_orderpriority": None,
+                 "o_totalprice": 2.0, "o_fee": Decimal("-0.01"),
+                 "o_rate": Decimal("0.1235")},
+    }
+
+
+def test_changelog_without_updated_by_reads_anonymous(wtsdb):
+    """The changelog is read with its declared columns: a file written
+    before ``updated_by`` existed reads back as 'anonymous'."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from yupana_spark.operators.writes import CHANGELOG
+
+    wh = wtsdb.warehouse
+    wtsdb.spark.range(1).select(
+        F.lit(dt.datetime(1997, 3, 3)).alias("day"),
+        F.lit("lineitem").alias("table_name"),
+        F.current_timestamp().alias("updated_at"),
+    ).write.mode("append").parquet(os.path.join(wh.root, CHANGELOG))
+    wtsdb.sql(
+        "UPSERT INTO lineitem (time, l_orderkey, l_partkey, l_suppkey, "
+        "l_linenumber, l_quantity) VALUES "
+        "(TIMESTAMP '1997-04-04', 888888, 1, 1, 1, 1.0)")
+    got = {(r["day"], r["updated_by"])
+           for r in wh.updates_intervals().collect()}
+    assert got == {(dt.datetime(1997, 3, 3), "anonymous"),
+                   (dt.datetime(1997, 4, 4), wh.user)}
+
+
+def test_pgwire_select_on_warehouse_table_runs_one_job(wtsdb):
+    """A SELECT on a warehouse table runs exactly one Spark job: its
+    result collect.  Resolving the table's files and schema runs none,
+    on the first SELECT after an UPSERT as on an unchanged table."""
+    from yupana_spark.server import PgWireServer
+    from tests.test_pgwire import PgClient
+
+    srv = PgWireServer(wtsdb, port=0)
+    c = PgClient(srv.start(), ssl_probe=True)
+    c.read_until_ready()
+    sched = wtsdb.spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(sql):
+        n = sched.nextJobId()
+        _, rows, errors = c.query(sql)
+        assert not errors
+        return sched.nextJobId() - n
+
+    # events spans few month buckets: past 32 bucket directories Spark
+    # lists a table's files with a job of its own
+    sel = ("SELECT count(event_id) AS c FROM events WHERE "
+           "time >= TIMESTAMP '2023-01-01' AND time < TIMESTAMP '2025-01-01'")
+    try:
+        for key in (999991, 999992):
+            c.query("UPSERT INTO events (time, event_id, user_id, "
+                    "event_type, value) VALUES "
+                    f"(TIMESTAMP '2024-01-06', {key}, 1, 'x', 1.0)")
+            assert jobs(sel) == 1          # first SELECT after the commit
+            assert jobs(sel) == 1          # unchanged table
+    finally:
+        c.close()
+        srv.stop()

@@ -31,7 +31,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(__file__))
 
 SF1 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

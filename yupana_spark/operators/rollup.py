@@ -7,9 +7,10 @@ yupana-spark/.../CustomRollup.scala:16-60; recalc windows come from the
 changelog (TsdbBase.scala:415-423).
 
 Spark design: one declarative groupBy/agg job per rollup; output written to
-the warehouse partitioned by the (re-bucketed) day column.  ``recalculate``
-limits work to the time intervals the changelog marks dirty — at scale this
-is the difference between rewriting one day-partition and rescanning 100 TB.
+the warehouse like any table (month buckets).  ``recalculate`` limits the
+AGGREGATION to the rollup buckets the changelog marks dirty: only those are
+recomputed from the source, but every run still rewrites the whole target
+table (the warehouse commits whole tables).
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 from .. import expressions as E
 from ..compiler import ExpressionCompiler, _Ctx
 from ..session import rehome
-from .writes import Warehouse
+from .writes import BUCKET_COL, Warehouse
 
 
 @dataclass(frozen=True)
@@ -59,13 +60,8 @@ def run_rollup(wh: Warehouse, rollup: Rollup,
 
     if wh.exists(rollup.to_table) and (from_time or to_time):
         # incremental: merge only the recomputed buckets
-        existing = rehome(wh.spark.read.parquet(wh.path(rollup.to_table)),
-                          src.sparkSession)
-        from .writes import BUCKET_COL
-
-        if BUCKET_COL in existing.columns:
-            existing = existing.drop(BUCKET_COL)
-        keys = ["time"] + list(rollup.group_by)
+        existing = rehome(wh.snapshot(rollup.to_table),
+                          src.sparkSession).drop(BUCKET_COL)
         kept = existing.join(out.select("time").distinct(), ["time"],
                              "left_anti")
         merged = kept.unionByName(out)

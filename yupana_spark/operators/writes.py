@@ -6,20 +6,28 @@ Reference: TsdbBase.scala:362-413 (``put(dataPoints)`` upserts cells keyed by
 bookkeeping, TsdbBase.scala:415-423).
 
 Spark design: a Warehouse directory holds one parquet dataset per table,
-partitioned by a day-bucket column (``rowTimeSpan`` ≙ partition granularity:
-partition pruning replaces the reference's baseTime range scans).  Upsert =
-key-based merge (existing rows whose primary key collides with incoming rows
-are replaced) implemented as ``left_anti`` + ``unionByName`` + atomic swap —
-on a production lake this maps 1:1 onto Delta/Iceberg MERGE; plain parquet is
-used here because the container ships without Delta.  At 100 TB the merge
-only rewrites the partitions that contain incoming keys (partition values are
-derived from incoming data and pushed as a filter on the existing side).
+partitioned by a month-bucket column (``__month``; the schema's
+``rowTimeSpan`` is not used yet).  Upsert = key-based merge (existing rows
+whose primary key collides with incoming rows are replaced) implemented as
+``left_anti`` + ``unionByName``; every commit rewrites the WHOLE table into
+a new directory and swaps it in.  On a production lake this maps onto
+Delta/Iceberg MERGE; plain parquet is used here because Delta is not a
+dependency.
+
+Reads are resolved once per commit: each commit pins the table's schema
+in a sidecar, and ``Warehouse.read`` lists a table's files under that
+schema once (one memo entry per table directory, dropped by the next
+commit), so reads between two commits share one listing and none runs a
+schema-inference job.  A frame still running when the next commit swaps
+the directory fails on the files it listed.
 """
 
 from __future__ import annotations
 
 import dataclasses as _dataclasses
 import datetime as _dt
+import decimal as _decimal
+import json
 import os
 import shutil
 import tempfile
@@ -27,7 +35,9 @@ import uuid
 from typing import Any, Dict, Iterable, Optional, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import memo
 from ..schema import Schema, Table
@@ -46,6 +56,17 @@ TOKEN_PIN = "__token_pin"
 # time column can never get its buckets silently re-derived from the
 # wrong column (advice r9)
 BUCKET_PIN = "__bucket_pin"
+# sidecar holding the schema a read of the directory would infer (every
+# commit writes it): reads take it instead of running an inference job
+SCHEMA_PIN = "__schema_pin"
+# the changelog's columns; a file written before ``updated_by`` existed
+# reads it back as NULL
+CHANGELOG_SCHEMA = T.StructType([
+    T.StructField("day", T.TimestampType()),
+    T.StructField("table_name", T.StringType()),
+    T.StructField("updated_at", T.TimestampType()),
+    T.StructField("updated_by", T.StringType()),
+])
 
 
 def table_bytes(schema: Schema, sf_dir: str, wh, table: str) -> int:
@@ -74,10 +95,71 @@ def _stat_bytes(schema: Schema, sf_dir: str, wh, table: str) -> int:
         return 1 << 62
 
 
+_DEC38 = _decimal.Context(prec=38, rounding=_decimal.ROUND_HALF_UP)
+
+
+def _coerce(v, dtype: T.DataType):
+    """A SQL literal (Decimal/int) aligned to its column type (≙ implicit
+    const coercion, DataTypeUtils.scala:40-123); decimals round half-up
+    to the column's scale, as Spark's own conversion does."""
+    if v is None:
+        return None
+    if isinstance(dtype, (T.DoubleType, T.FloatType)):
+        return float(v)
+    if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType,
+                          T.ByteType)):
+        return int(v)
+    if isinstance(dtype, T.DecimalType):
+        return _decimal.Decimal(str(v)).quantize(
+            _decimal.Decimal(1).scaleb(-dtype.scale), context=_DEC38)
+    return v
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` nullable at every level, as parquet schema inference
+    returns a written type."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType),
+                                           True, f.metadata) for f in dt])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType),
+                         True)
+    return dt
+
+
+def _write_dir(out: DataFrame, tmp: str, partition_by: Sequence[str] = (),
+               max_records_per_file: int = 0) -> None:
+    """Write ``out`` as a parquet directory at ``tmp`` and pin the schema
+    a read of it infers (data columns, then the partition columns)."""
+    writer = out.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    if max_records_per_file:
+        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
+    writer.parquet(tmp)
+    schema = out.schema
+    fields = ([f for f in schema if f.name not in partition_by]
+              + [schema[c] for c in partition_by])
+    with open(os.path.join(tmp, SCHEMA_PIN), "w") as f:
+        f.write(_nullable(T.StructType(fields)).json())
+
+
+def _read_dir(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet directory at ``path`` under its pinned schema; a
+    directory written without a pin has its schema inferred."""
+    try:
+        with open(os.path.join(path, SCHEMA_PIN)) as f:
+            pinned = T.StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return spark.read.parquet(path)
+    return spark.read.schema(pinned).parquet(path)
+
+
 def _item_fixer_udf(fn):
     """Vectorized (Arrow) wrapper for the schema's item_fixer hook; memoized
     per hook so repeated upserts reuse one UDF registration."""
-    from pyspark.sql import types as T
 
     def build():
         @F.pandas_udf(T.StringType())
@@ -158,11 +240,19 @@ class Warehouse:
         return posture(self.spark,
                        table_bytes(self.schema, self.sf_dir, self, table))
 
+    def snapshot(self, table: str) -> DataFrame:
+        """The committed warehouse copy of ``table`` with its bucket
+        column, resolved once per commit: the frame is memoized per table
+        directory and each commit's swap drops it."""
+        path = self.path(table)
+        return memo.get("wh_read", (path,),
+                        lambda: _read_dir(self.spark, path))
+
     def read(self, table: str) -> DataFrame:
         """Warehouse copy if the table was written, else the sf_dir fixture,
         rooted in the table's posture session."""
         if self.exists(table):
-            df = self.spark.read.parquet(self.path(table))
+            df = self.snapshot(table)
             df = df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
         else:
             df = self.schema.load(self.spark, self.sf_dir, table)
@@ -236,35 +326,21 @@ class Warehouse:
         t = self.schema.table(table)
         current = self.read(table)
         cols = list(columns)
-        from pyspark.sql import types as T
-
         fields = []
         for c in cols:
             src = "time" if c == "time" else c
             fields.append(current.schema[src] if src in current.columns
                           else T.StructField(c, T.StringType()))
-        def coerce(v, dtype):
-            """SQL literals arrive as Decimal/int; align to the column type
-            (≙ implicit const coercion, DataTypeUtils.scala:40-123)."""
-            if v is None:
-                return None
-            import decimal
-
-            if isinstance(dtype, (T.DoubleType, T.FloatType)):
-                return float(v)
-            if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType,
-                                  T.ByteType)):
-                return int(v)
-            if isinstance(dtype, T.DecimalType) and not isinstance(
-                    v, decimal.Decimal):
-                return decimal.Decimal(str(v))
-            return v
-
-        data = [tuple(coerce(v, f.dataType) for v, f in zip(r, fields))
-                for r in rows]
-        df = self.spark.createDataFrame(
-            data, schema=T.StructType(
-                [T.StructField(c, f.dataType) for c, f in zip(cols, fields)]))
+        schema = T.StructType([T.StructField(c, f.dataType)
+                               for c, f in zip(cols, fields)])
+        # an Arrow-built LocalRelation: a row list would become a Python
+        # RDD, and the merge's cache+count would run it through Python
+        # workers
+        arrow = to_arrow_schema(schema)
+        df = self.spark.createDataFrame(pa.Table.from_arrays(
+            [pa.array([_coerce(r[i], f.dataType) for r in rows], type=a.type)
+             for i, (f, a) in enumerate(zip(schema, arrow))],
+            schema=arrow), schema)
         if t.time_column != "time" and "time" in df.columns:
             df = df.withColumnRenamed("time", t.time_column) \
                    .withColumn("time", F.col(t.time_column))
@@ -272,7 +348,7 @@ class Warehouse:
 
     def write_table(self, table: str, df: DataFrame,
                     time_col: str = "time") -> None:
-        """Full (re)write, partitioned by day bucket."""
+        """Full (re)write, partitioned by month bucket."""
         t = self.schema.tables.get(table)
         self._write(table, df, t, time_col=time_col)
 
@@ -363,22 +439,16 @@ class Warehouse:
     def _write(self, table: str, df: DataFrame, t: Optional[Table],
                time_col: str = "time") -> None:
         tmp = self.path(table) + "." + uuid.uuid4().hex[:8]
-        out = df
-        partition_by = []
         if time_col in df.columns:
             # month buckets: coarse enough to avoid small-file explosion at
-            # test scale, still prunable; production would derive this from
-            # Table.row_time_span_days
-            out = df.withColumn(BUCKET_COL,
-                                F.date_trunc("month", F.col(time_col)))
-            partition_by = [BUCKET_COL]
-        writer = out.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        if partition_by:
+            # test scale; Table.row_time_span_days is not used yet
+            _write_dir(df.withColumn(BUCKET_COL,
+                                     F.date_trunc("month", F.col(time_col))),
+                       tmp, [BUCKET_COL])
             with open(os.path.join(tmp, BUCKET_PIN), "w") as f:
                 f.write(time_col)
+        else:
+            _write_dir(df, tmp)
         self._swap_and_invalidate(table, tmp)
 
     def _swap_and_invalidate(self, table: str, tmp: str) -> None:
@@ -445,10 +515,12 @@ class Warehouse:
                 _logging.getLogger(__name__).warning(
                     "delete of %s failed (%s) — leaving it for the next "
                     "write of %r to sweep", old, e, table)
-        # volume-gate cache entries for this table are now stale — the next
-        # query must re-stat the warehouse copy, or the posture gate would
-        # keep the pre-write posture for a much larger table (a stat in
-        # flight across the swap is not kept either)
+        # the table's snapshot read and volume-gate entries are now stale:
+        # the next query must list the new files and re-stat the warehouse
+        # copy, or the posture gate would keep the pre-write posture for a
+        # much larger table (a read or stat in flight across the swap is
+        # not kept either)
+        memo.invalidate("wh_read", lambda p: p[0] == final)
         memo.invalidate("table_bytes",
                         lambda p: p[1] == self.root and p[2] == table)
 
@@ -481,7 +553,7 @@ class Warehouse:
 
         before = _nfiles()
         pinned = self.table_token(table)   # content-identical: keep it
-        df = rehome(self.spark.read.parquet(path), self.session_for(table))
+        df = rehome(self.snapshot(table), self.session_for(table))
         # the bucket column is whatever _write RECORDED at write time
         # (BUCKET_PIN sidecar) — never re-derived from the schema: a
         # table written ad-hoc via write_table(time_col='ts') whose frame
@@ -498,10 +570,9 @@ class Warehouse:
             # each file so parquet row-group min/max stats prune time
             # predicates tighter than the month bucket alone
             out = (df.repartition(F.col(BUCKET_COL))
-                   .sortWithinPartitions(tcol).drop(BUCKET_COL))
-            writer = (out.withColumn(BUCKET_COL,
-                                     F.date_trunc("month", F.col(tcol)))
-                      .write.mode("overwrite").partitionBy(BUCKET_COL))
+                   .sortWithinPartitions(tcol).drop(BUCKET_COL)
+                   .withColumn(BUCKET_COL,
+                               F.date_trunc("month", F.col(tcol))))
         elif BUCKET_COL in df.columns:
             # bucketed but provenance unknown (no sidecar — a pre-existing
             # dir): keep the existing partition values VERBATIM instead of
@@ -517,15 +588,12 @@ class Warehouse:
             out = df.repartition(F.col(BUCKET_COL))
             if sort_col in df.columns:
                 out = out.sortWithinPartitions(sort_col)
-            writer = out.write.mode("overwrite").partitionBy(BUCKET_COL)
         else:
             out = df.coalesce(1)
-            writer = out.write.mode("overwrite")
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile",
-                                   str(max_records_per_file))
         tmp = path + ".compact." + uuid.uuid4().hex[:8]
-        writer.parquet(tmp)
+        _write_dir(out, tmp,
+                   [BUCKET_COL] if BUCKET_COL in df.columns else [],
+                   max_records_per_file)
         with open(os.path.join(tmp, TOKEN_PIN), "w") as f:
             f.write(pinned)
         if tcol and BUCKET_COL in df.columns:
@@ -566,22 +634,14 @@ class Warehouse:
           from_time BETWEEN a AND b, OR (from_time <= a AND to_time >= a);
           only ``recalculated_after`` — from_time >= a;
         * ``updated_by`` — equality (rows from pre-``user`` changelogs read
-          back as 'anonymous' via the schema-merge coalesce).
+          back as 'anonymous': the column is NULL in their files).
         """
         path = os.path.join(self.root, CHANGELOG)
         if not os.path.exists(path):
-            from pyspark.sql import types as T
-
-            df = self.spark.createDataFrame([], T.StructType([
-                T.StructField("day", T.TimestampType()),
-                T.StructField("table_name", T.StringType()),
-                T.StructField("updated_at", T.TimestampType()),
-                T.StructField("updated_by", T.StringType()),
-            ]))
+            df = self.spark.createDataFrame([], CHANGELOG_SCHEMA)
         else:
-            df = self.spark.read.option("mergeSchema", "true").parquet(path)
-            if "updated_by" not in df.columns:
-                df = df.withColumn("updated_by", F.lit(None).cast("string"))
+            # the declared schema: no footer-merging job per read
+            df = self.spark.read.schema(CHANGELOG_SCHEMA).parquet(path)
         df = (df.withColumn("updated_by",
                             F.coalesce(F.col("updated_by"),
                                        F.lit("anonymous")))
