@@ -190,6 +190,50 @@ def test_recalculate_month_rollup_preserves_full_bucket(wtsdb):
     assert min(before.values()) > 2
 
 
+def test_recalculate_commits_dirty_buckets_once(wtsdb, monkeypatch):
+    """Dirty days in three month buckets are recomputed by one rollup
+    commit over their span, with the same result as a full rollup."""
+    from yupana_spark.operators.rollup import Rollup, recalculate, run_rollup
+    from yupana_spark.operators.writes import Warehouse
+
+    wh = wtsdb.warehouse
+
+    def rollup(name):
+        return Rollup(
+            name=name, from_table="lineitem", to_table=name,
+            time_trunc="month", group_by=("l_returnflag",),
+            aggregates=(
+                (E.sum_(E.Cast(E.Field("l_quantity", "DOUBLE"),
+                               "DECIMAL(18,4)")), "sum_qty"),
+                (E.count(E.Field("l_quantity", "DOUBLE")), "cnt")))
+
+    inc = rollup("lineitem_by_month_once")
+    run_rollup(wh, inc)
+    wtsdb.sql(
+        "UPSERT INTO lineitem (time, l_orderkey, l_partkey, l_suppkey, "
+        "l_linenumber, l_quantity) VALUES "
+        "(TIMESTAMP '1997-03-15', 777781, 1, 1, 1, 5.0), "
+        "(TIMESTAMP '1997-06-15', 777782, 1, 1, 1, 6.0), "
+        "(TIMESTAMP '1997-09-15', 777783, 1, 1, 1, 7.0)")
+    writes = []
+    real = Warehouse._write
+
+    def counted(self, table, *a, **k):
+        writes.append(table)
+        return real(self, table, *a, **k)
+
+    monkeypatch.setattr(Warehouse, "_write", counted)
+    recalculate(wh, inc)
+    assert writes == [inc.to_table]
+    full = rollup("lineitem_by_month_full")
+    run_rollup(wh, full)
+
+    def rows(name):
+        return sorted(map(tuple, wh.read(name).collect()), key=repr)
+
+    assert rows(inc.to_table) == rows(full.to_table)
+
+
 def test_show_queries_stage_breakdown(wtsdb):
     """SHOW QUERIES exposes per-stage timings (≙ TsdbQueryMetrics persisted
     create/filter/reduce stage metrics)."""
@@ -719,34 +763,57 @@ def test_upsert_values_arrow_batch_roundtrip(wtsdb):
 
 
 def test_changelog_without_updated_by_reads_anonymous(wtsdb):
-    """The changelog is read with its declared columns: a file written
-    before ``updated_by`` existed reads back as 'anonymous'."""
+    """The changelog is read with its declared columns: a legacy
+    Spark-written file (INT96 timestamps, no ``updated_by``) reads back
+    as 'anonymous' next to a driver-written one, and an ``updated_at``
+    filter splits the two by their instants."""
+    import glob
     import os
 
+    import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
-    from yupana_spark.operators.writes import CHANGELOG
+    from yupana_spark.operators.writes import CHANGELOG, \
+        UpdatesIntervalsFilter
 
     wh = wtsdb.warehouse
+    log = os.path.join(wh.root, CHANGELOG)
     wtsdb.spark.range(1).select(
         F.lit(dt.datetime(1997, 3, 3)).alias("day"),
         F.lit("lineitem").alias("table_name"),
-        F.current_timestamp().alias("updated_at"),
-    ).write.mode("append").parquet(os.path.join(wh.root, CHANGELOG))
+        F.lit(dt.datetime(2001, 1, 1)).alias("updated_at"),
+    ).write.mode("append").parquet(log)
+    legacy = glob.glob(os.path.join(log, "part-*.parquet"))
+    assert {pq.ParquetFile(f).schema.column(0).physical_type
+            for f in legacy} == {"INT96"}
     wtsdb.sql(
         "UPSERT INTO lineitem (time, l_orderkey, l_partkey, l_suppkey, "
         "l_linenumber, l_quantity) VALUES "
         "(TIMESTAMP '1997-04-04', 888888, 1, 1, 1, 1.0)")
-    got = {(r["day"], r["updated_by"])
-           for r in wh.updates_intervals().collect()}
-    assert got == {(dt.datetime(1997, 3, 3), "anonymous"),
-                   (dt.datetime(1997, 4, 4), wh.user)}
+    assert not [n for n in os.listdir(log) if n.endswith(".tmp")]
+
+    def got(flt=None):
+        return {(r["day"], r["updated_by"])
+                for r in wh.updates_intervals(flt).collect()}
+
+    old = (dt.datetime(1997, 3, 3), "anonymous")
+    new = (dt.datetime(1997, 4, 4), wh.user)
+    assert got() == {old, new}
+    assert got(UpdatesIntervalsFilter(
+        updated_after=dt.datetime(2000, 12, 31))) == {old, new}
+    assert got(UpdatesIntervalsFilter(
+        updated_after=dt.datetime(2001, 1, 1, 0, 0, 1))) == {new}
+    assert got(UpdatesIntervalsFilter(
+        updated_after=dt.datetime(2000, 12, 31),
+        updated_before=dt.datetime(2001, 1, 2))) == {old}
 
 
-def test_pgwire_select_on_warehouse_table_runs_one_job(wtsdb):
-    """A SELECT on a warehouse table runs exactly one Spark job: its
-    result collect.  Resolving the table's files and schema runs none,
-    on the first SELECT after an UPSERT as on an unchanged table."""
+@pytest.fixture()
+def wire(wtsdb):
+    """``(run, jobs)`` over a pgwire connection to ``wtsdb``: ``run(sql)``
+    answers a statement, ``jobs(op)`` counts the Spark jobs that a
+    statement or a callable ``op`` starts (the DAG scheduler's job id
+    counter)."""
     from yupana_spark.server import PgWireServer
     from tests.test_pgwire import PgClient
 
@@ -755,23 +822,136 @@ def test_pgwire_select_on_warehouse_table_runs_one_job(wtsdb):
     c.read_until_ready()
     sched = wtsdb.spark.sparkContext._jsc.sc().dagScheduler()
 
-    def jobs(sql):
-        n = sched.nextJobId()
+    def run(sql):
         _, rows, errors = c.query(sql)
         assert not errors
+        return rows
+
+    def jobs(op):
+        n = sched.nextJobId()
+        op() if callable(op) else run(op)
         return sched.nextJobId() - n
 
-    # events spans few month buckets: past 32 bucket directories Spark
-    # lists a table's files with a job of its own
-    sel = ("SELECT count(event_id) AS c FROM events WHERE "
-           "time >= TIMESTAMP '2023-01-01' AND time < TIMESTAMP '2025-01-01'")
     try:
-        for key in (999991, 999992):
-            c.query("UPSERT INTO events (time, event_id, user_id, "
-                    "event_type, value) VALUES "
-                    f"(TIMESTAMP '2024-01-06', {key}, 1, 'x', 1.0)")
-            assert jobs(sel) == 1          # first SELECT after the commit
-            assert jobs(sel) == 1          # unchanged table
+        yield run, jobs
     finally:
         c.close()
         srv.stop()
+
+
+def _events_upsert(key, day="2024-01-06"):
+    return ("UPSERT INTO events (time, event_id, user_id, event_type, "
+            f"value) VALUES (TIMESTAMP '{day}', {key}, 1, 'x', 1.0)")
+
+
+def test_pgwire_select_on_warehouse_table_runs_one_job(wtsdb, wire):
+    """A SELECT on a warehouse table runs exactly one Spark job: its
+    result collect.  Resolving the table's files and schema runs none,
+    on the first SELECT after an UPSERT as on an unchanged table, and
+    for a table with more bucket directories than Spark lists without a
+    job by default (32)."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    run, jobs = wire
+    sel = ("SELECT count(event_id) AS c FROM events WHERE "
+           "time >= TIMESTAMP '2023-01-01' AND time < TIMESTAMP '2025-01-01'")
+    for key in (999991, 999992):
+        run(_events_upsert(key))
+        assert jobs(sel) == 1          # first SELECT after the commit
+        assert jobs(sel) == 1          # unchanged table
+    wh = wtsdb.warehouse
+    ev = wh.read("events")
+    spread = (ev.limit(1)
+              .crossJoin(wtsdb.spark.range(40).withColumnRenamed("id", "m"))
+              .withColumn("time", F.expr(
+                  "time + make_ym_interval(0, CAST(m AS INT))"))
+              .drop("m"))
+    wh.write_table("events", ev.unionByName(spread))
+    assert len([n for n in os.listdir(wh.path("events"))
+                if n.startswith("__month=")]) >= 40
+    assert jobs(sel) == 1
+
+
+def test_write_path_job_counts(wtsdb, wire):
+    """A steady UPSERT commits with three Spark jobs (the batch's summary
+    action, the key broadcast, the table write), an incremental recalc of
+    one dirty bucket with one (the target write), and SHOW
+    UPDATES_INTERVALS runs none: the changelog is written and read on the
+    driver."""
+    from yupana_spark import types as yt
+    from yupana_spark.operators.rollup import Rollup, recalculate, \
+        run_rollup
+
+    run, jobs = wire
+    wh = wtsdb.warehouse
+    r = Rollup(name="events_by_day_jobs", from_table="events",
+               to_table="events_by_day_jobs", time_trunc="day",
+               group_by=("event_type",),
+               aggregates=((E.count(E.Field("event_id", yt.LONG)), "n"),))
+    run(_events_upsert(999981))     # the first commit seeds dictionaries
+    run_rollup(wh, r)
+    mark = dt.datetime.now() - dt.timedelta(seconds=1)
+    assert jobs(_events_upsert(999982)) == 3
+    assert jobs(lambda: recalculate(wh, r, since=mark)) == 1
+    assert jobs("SHOW UPDATES_INTERVALS") == 0
+    day = dt.datetime(2024, 1, 6)
+    n = {x["event_type"]: x["n"] for x in wh.read(r.to_table)
+         .filter(f"time = TIMESTAMP '{day}'").collect()}
+    want = {x["event_type"]: x["n"] for x in wh.read("events")
+            .filter(f"time >= TIMESTAMP '{day}' AND "
+                    f"time < TIMESTAMP '{day + dt.timedelta(days=1)}'")
+            .groupBy("event_type").count().withColumnRenamed("count", "n")
+            .collect()}
+    assert n == want
+
+
+def test_upsert_releases_cached_batch_on_failure(wtsdb, monkeypatch):
+    """A failing commit still releases the cached batch."""
+    from yupana_spark.operators.writes import Warehouse
+
+    def fail(*a, **k):
+        raise RuntimeError("write failed")
+
+    sc = wtsdb.spark.sparkContext._jsc.sc()
+    before = len(sc.getRDDStorageInfo())
+    monkeypatch.setattr(Warehouse, "_write", fail)
+    with pytest.raises(RuntimeError, match="write failed"):
+        wtsdb.warehouse.upsert_values(
+            "events", ["time", "event_id", "user_id", "event_type", "value"],
+            [(dt.datetime(2024, 1, 6), 999971, 1, "x", 1.0)])
+    assert len(sc.getRDDStorageInfo()) == before
+
+
+def test_upsert_demotes_dictionary_past_cap(wtsdb, monkeypatch):
+    """A batch whose new values push a dictionary dim past DICT_CAP
+    demotes it, and a later batch does not seed it again."""
+    import os
+
+    from yupana_spark.operators.writes import Warehouse
+
+    wh = wtsdb.warehouse
+    monkeypatch.setattr(Warehouse, "DICT_CAP", 3)
+
+    def ins(key, *flags):
+        wtsdb.sql(
+            "UPSERT INTO lineitem (time, l_orderkey, l_partkey, l_suppkey, "
+            "l_linenumber, l_returnflag, l_quantity) VALUES " + ", ".join(
+                f"(TIMESTAMP '1996-02-02', {key}, 1, 1, {i + 1}, '{f}', 1.0)"
+                for i, f in enumerate(flags)))
+
+    ins(888881, "A")                  # seeds the fixture's A, N, R
+    assert wh.load_dictionary("lineitem", "l_returnflag") == {
+        "A": 1, "N": 2, "R": 3}
+    ins(888882, "B", "C", "D", "E", "F")
+    path = wh.dict_path("lineitem", "l_returnflag")
+    assert wh.load_dictionary("lineitem", "l_returnflag") is None
+    assert os.path.exists(path + ".demoted") and not os.path.exists(path)
+    ins(888883, "G")
+    assert wh.load_dictionary("lineitem", "l_returnflag") is None
+    assert not os.path.exists(path)
+    got = wtsdb.sql(f"SELECT count(l_orderkey) AS c FROM lineitem WHERE {TB}"
+                    " AND l_orderkey >= 888881 AND l_orderkey <= 888883"
+                    ).collect()[0]["c"]
+    assert got == 7

@@ -8,9 +8,14 @@ changelog (TsdbBase.scala:415-423).
 
 Spark design: one declarative groupBy/agg job per rollup; output written to
 the warehouse like any table (month buckets).  ``recalculate`` limits the
-AGGREGATION to the rollup buckets the changelog marks dirty: only those are
-recomputed from the source, but every run still rewrites the whole target
-table (the warehouse commits whole tables).
+AGGREGATION to the span of rollup buckets the changelog marks dirty and
+commits it once: one ``run_rollup`` over [first dirty bucket's start, last
+dirty bucket's end), whatever the number of dirty buckets.  The
+incremental merge drops the target rows in that bucket range with a
+filter and unions the recomputed ones, so an incremental recalc runs one
+Spark job (the target write; the changelog is read on the driver).  Every
+run still rewrites the whole target table (the warehouse commits whole
+tables).
 """
 
 from __future__ import annotations
@@ -59,11 +64,19 @@ def run_rollup(wh: Warehouse, rollup: Rollup,
     out = src.groupBy(*gcols).agg(*aggs)
 
     if wh.exists(rollup.to_table) and (from_time or to_time):
-        # incremental: merge only the recomputed buckets
+        # incremental: replace the buckets the window can produce, i.e.
+        # target rows with time in [date_trunc(from_time), to_time) — a
+        # range filter, where an anti join on the recomputed bucket times
+        # would cost a job of its own
         existing = rehome(wh.snapshot(rollup.to_table),
                           src.sparkSession).drop(BUCKET_COL)
-        kept = existing.join(out.select("time").distinct(), ["time"],
-                             "left_anti")
+        inside = F.lit(True)
+        if from_time is not None:
+            inside &= F.col("time") >= F.date_trunc(rollup.time_trunc,
+                                                    F.lit(from_time))
+        if to_time is not None:
+            inside &= F.col("time") < F.lit(to_time)
+        kept = existing.filter(~F.coalesce(inside, F.lit(False)))
         merged = kept.unionByName(out)
         wh.write_table(rollup.to_table, merged)
     else:
@@ -119,15 +132,16 @@ def recalculate(wh: Warehouse, rollup: Rollup,
         table_name=rollup.from_table,
         updated_after=since,
         updated_by=updated_by)
-    intervals = (rehome(wh.updates_intervals(flt),
-                        wh.session_for(rollup.from_table))
-                 .select("day").distinct().collect())
-    if not intervals:
+    # the changelog is a driver-side LocalRelation: no job
+    days = {row["day"] for row in
+            wh.updates_intervals(flt).select("day").collect()}
+    if not days:
         if since is None and updated_by is None:
             return run_rollup(wh, rollup)     # no changelog: recompute all
         return wh.read(rollup.to_table)       # incremental: nothing dirty
-    buckets = sorted({_bucket_bounds(rollup.time_trunc, row["day"])
-                      for row in intervals})
-    for start, end in buckets:
-        run_rollup(wh, rollup, from_time=start, to_time=end)
-    return wh.read(rollup.to_table)
+    # one commit over the span of the dirty buckets: the bounds are
+    # bucket-aligned, so a clean bucket inside the span is recomputed to
+    # the values it already holds
+    buckets = [_bucket_bounds(rollup.time_trunc, day) for day in days]
+    return run_rollup(wh, rollup, from_time=min(b[0] for b in buckets),
+                      to_time=max(b[1] for b in buckets))

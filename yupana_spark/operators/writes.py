@@ -14,6 +14,13 @@ a new directory and swaps it in.  On a production lake this maps onto
 Delta/Iceberg MERGE; plain parquet is used here because Delta is not a
 dependency.
 
+A steady upsert runs three Spark jobs: one summary action over the
+cached, deduplicated batch (its row count, each dictionary dim's values
+capped at ``DICT_CAP + 1``, the touched days), the broadcast of its keys
+and the table write.  The dictionaries and the changelog are bounded and
+written on the driver with pyarrow; the changelog is read back the same
+way, so SHOW UPDATES_INTERVALS and a recalc's dirty-day lookup run no job.
+
 Reads are resolved once per commit: each commit pins the table's schema
 in a sidecar, and ``Warehouse.read`` lists a table's files under that
 schema once (one memo entry per table directory, dropped by the next
@@ -67,6 +74,8 @@ CHANGELOG_SCHEMA = T.StructType([
     T.StructField("updated_at", T.TimestampType()),
     T.StructField("updated_by", T.StringType()),
 ])
+_CHANGELOG_ARROW = to_arrow_schema(CHANGELOG_SCHEMA)
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
 
 
 def table_bytes(schema: Schema, sf_dir: str, wh, table: str) -> int:
@@ -155,6 +164,29 @@ def _read_dir(spark: SparkSession, path: str) -> DataFrame:
     except FileNotFoundError:
         return spark.read.parquet(path)
     return spark.read.schema(pinned).parquet(path)
+
+
+def _read_changelog(path: str) -> pa.Table:
+    """Every changelog file under ``path`` as one Arrow table under
+    ``CHANGELOG_SCHEMA``.  Hidden and ``_``-prefixed names (in-flight
+    temp files, ``_SUCCESS``) are skipped; a Spark-written file's INT96
+    timestamps are read as microseconds in UTC and a missing
+    ``updated_by`` reads as NULL."""
+    import pyarrow.parquet as pq
+
+    parts = []
+    names = sorted(os.listdir(path)) if os.path.isdir(path) else []
+    for name in names:
+        if name.startswith((".", "_")) or not name.endswith(".parquet"):
+            continue
+        part = pq.read_table(os.path.join(path, name),
+                             coerce_int96_timestamp_unit="us")
+        parts.append(pa.table(
+            [part.column(f.name).cast(f.type) if f.name in part.column_names
+             else pa.nulls(part.num_rows, f.type) for f in _CHANGELOG_ARROW],
+            schema=_CHANGELOG_ARROW))
+    return (pa.concat_tables(parts) if parts
+            else _CHANGELOG_ARROW.empty_table())
 
 
 def _item_fixer_udf(fn):
@@ -293,24 +325,46 @@ class Warehouse:
         incoming = (incoming.withColumn("__rn", F.row_number().over(w))
                     .filter(F.col("__rn") == 1).drop("__rn", "__seq"))
         incoming = incoming.cache()
-        n_in = incoming.count()
-        # null-safe key equality: dims may be NULL and plain equality would
-        # keep stale rows (SQL NULL != NULL); eqNullSafe matches HBase's
-        # byte-identical row keys
-        cur = current.alias("cur")
-        inc = incoming.select(*keys).distinct().alias("inc")
-        cond = None
-        for k in keys:
-            c = F.col(f"cur.{k}").eqNullSafe(F.col(f"inc.{k}"))
-            cond = c if cond is None else (cond & c)
-        kept = cur.join(inc, cond, "left_anti")
-        merged = kept.unionByName(incoming)
-        # ingest-time dictionary ids (Dictionary.scala insertion semantics)
-        # must be assigned from the PRE-merge state so replays are no-ops
-        self._update_dictionaries(t, current, incoming)
-        self._write(table, merged, t)
-        self._log_interval(table, incoming)
-        incoming.unpersist()
+        try:
+            # one action for every driver-side fact of the batch: its row
+            # count, each dictionary dim's values (capped so a batch over
+            # the cap still demotes) and the touched days as UTC epoch
+            # micros (independent of the Python time zone)
+            dims = [d.name for d in t.dimensions
+                    if d.kind == "dictionary" and d.name in incoming.columns
+                    and not os.path.exists(
+                        self.dict_path(t.name, d.name) + ".demoted")]
+            aggs = [F.count(F.lit(1))]
+            aggs += [F.slice(F.collect_set(F.col(d)), 1, self.DICT_CAP + 1)
+                     for d in dims]
+            if "time" in incoming.columns:
+                aggs.append(F.collect_set(F.unix_micros(
+                    F.date_trunc("day", F.col("time")))))
+            summary = incoming.agg(*aggs).collect()[0]
+            n_in = summary[0]
+            # null-safe key equality: dims may be NULL and plain equality
+            # would keep stale rows (SQL NULL != NULL); eqNullSafe matches
+            # HBase's byte-identical row keys.  The last-write-wins window
+            # already left one row per key, so the key side needs no
+            # distinct.
+            cur = current.alias("cur")
+            inc = incoming.select(*keys).alias("inc")
+            cond = None
+            for k in keys:
+                c = F.col(f"cur.{k}").eqNullSafe(F.col(f"inc.{k}"))
+                cond = c if cond is None else (cond & c)
+            kept = cur.join(inc, cond, "left_anti")
+            merged = kept.unionByName(incoming)
+            # ingest-time dictionary ids (Dictionary.scala insertion
+            # semantics) must be assigned from the PRE-merge state so
+            # replays are no-ops
+            self._update_dictionaries(
+                t, current, dict(zip(dims, summary[1:1 + len(dims)])))
+            self._write(table, merged, t)
+            if "time" in incoming.columns:
+                self._log_interval(table, summary[-1])
+        finally:
+            incoming.unpersist()
         return n_in
 
     def put_rows(self, table: str, rows: Iterable[Dict[str, Any]]) -> int:
@@ -387,7 +441,7 @@ class Warehouse:
             os.remove(path)
 
     def _update_dictionaries(self, t: Table, current: DataFrame,
-                             incoming: DataFrame) -> None:
+                             batch_values: Dict[str, Sequence[Any]]) -> None:
         """Maintain ingest-time dictionaries for dictionary-kind dims.
 
         ≙ Dictionary.scala:24-105: the reference numbers values by insertion
@@ -399,36 +453,33 @@ class Warehouse:
         sorted within the batch.  Ids are append-only: replaying a batch or
         re-ingesting known values never renumbers anything.  Driver-side
         pyarrow files — dictionaries are bounded (DICT_CAP) by definition.
+
+        ``batch_values`` maps each non-demoted dictionary dim of the batch
+        to its distinct non-NULL values, at most ``DICT_CAP + 1`` of them:
+        ``upsert``'s one summary action collects them with the row count
+        and the touched days, so no dim costs a job of its own.
         """
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for d in t.dimensions:
-            if d.kind != "dictionary" or d.name not in incoming.columns:
-                continue
-            if os.path.exists(self.dict_path(t.name, d.name) + ".demoted"):
-                continue  # permanently hash-surrogate; never re-seed
-            mapping = self.load_dictionary(t.name, d.name)
+        for name, values in batch_values.items():
+            mapping = self.load_dictionary(t.name, name)
             if mapping is None:
-                seed = (current.select(d.name).distinct()
+                seed = (current.select(name).distinct()
                         .limit(self.DICT_CAP + 1).collect())
                 if len(seed) > self.DICT_CAP:
-                    self._demote_dictionary(t.name, d.name)
+                    self._demote_dictionary(t.name, name)
                     continue
                 ordered = sorted(r[0] for r in seed if r[0] is not None)
                 mapping = {v: i + 1 for i, v in enumerate(ordered)}
-            new = (incoming.select(d.name).distinct()
-                   .limit(self.DICT_CAP + 1).collect())
-            fresh = sorted(r[0] for r in new
-                           if r[0] is not None and r[0] not in mapping)
+            fresh = sorted(v for v in values if v not in mapping)
             if len(mapping) + len(fresh) > self.DICT_CAP:
-                self._demote_dictionary(t.name, d.name)
+                self._demote_dictionary(t.name, name)
                 continue
             next_id = max(mapping.values(), default=0) + 1
             for v in fresh:
                 mapping[v] = next_id
                 next_id += 1
-            path = self.dict_path(t.name, d.name)
+            path = self.dict_path(t.name, name)
             os.makedirs(os.path.dirname(path), exist_ok=True)
             pq.write_table(pa.table({
                 "value": list(mapping.keys()),
@@ -603,17 +654,29 @@ class Warehouse:
         self._swap_and_invalidate(table, tmp)
         return {"files_before": before, "files_after": _nfiles()}
 
-    def _log_interval(self, table: str, incoming: DataFrame) -> None:
-        """Changelog: record which (table, day) windows were rewritten."""
-        if "time" not in incoming.columns:
+    def _log_interval(self, table: str, days: Sequence[int]) -> None:
+        """Changelog: record which (table, day) windows were rewritten.
+
+        ``days`` are the touched day starts as UTC epoch microseconds,
+        collected by ``upsert``'s summary action.  The rows are written on
+        the driver with pyarrow, one file per commit stamped with one UTC
+        ``updated_at``: the file is written under a hidden name and
+        renamed into place, so a reader never sees a partial file."""
+        import pyarrow.parquet as pq
+
+        if not days:
             return
-        days = (incoming.select(F.date_trunc("day", F.col("time")).alias("day"))
-                .distinct()
-                .withColumn("table_name", F.lit(table))
-                .withColumn("updated_at", F.current_timestamp())
-                .withColumn("updated_by", F.lit(self.user)))
+        now = _dt.datetime.now(_dt.timezone.utc)
+        rows = [{"day": _EPOCH + _dt.timedelta(microseconds=d),
+                 "table_name": table, "updated_at": now,
+                 "updated_by": self.user} for d in sorted(days)]
         path = os.path.join(self.root, CHANGELOG)
-        days.write.mode("append").parquet(path)
+        os.makedirs(path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(path, f".{name}.tmp")
+        pq.write_table(pa.Table.from_pylist(rows, schema=_CHANGELOG_ARROW),
+                       tmp)
+        os.rename(tmp, os.path.join(path, name))
 
     def updates_intervals(
             self, flt: Optional[UpdatesIntervalsFilter] = None) -> DataFrame:
@@ -635,13 +698,17 @@ class Warehouse:
           only ``recalculated_after`` — from_time >= a;
         * ``updated_by`` — equality (rows from pre-``user`` changelogs read
           back as 'anonymous': the column is NULL in their files).
+
+        The changelog is small (one row per touched day per commit) and is
+        read on the driver with pyarrow, files written by ``_log_interval``
+        and legacy Spark-written ones (INT96 timestamps, possibly no
+        ``updated_by``) alike.
         """
-        path = os.path.join(self.root, CHANGELOG)
-        if not os.path.exists(path):
-            df = self.spark.createDataFrame([], CHANGELOG_SCHEMA)
-        else:
-            # the declared schema: no footer-merging job per read
-            df = self.spark.read.schema(CHANGELOG_SCHEMA).parquet(path)
+        # read on the driver into a LocalRelation: the filters below fold
+        # into it, so collecting the answer runs no Spark job
+        df = self.spark.createDataFrame(
+            _read_changelog(os.path.join(self.root, CHANGELOG)),
+            CHANGELOG_SCHEMA)
         df = (df.withColumn("updated_by",
                             F.coalesce(F.col("updated_by"),
                                        F.lit("anonymous")))

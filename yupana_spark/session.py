@@ -62,6 +62,10 @@ def _apply_engine_confs(spark: SparkSession) -> bool:
         # reader rejects: read nanos as long and let Schema.load convert
         # (integer division keeps the full 64-bit precision)
         "spark.sql.legacy.parquet.nanosAsLong": "true",
+        # warehouse directories are local, so listing them on the driver
+        # is cheap: past the default 32 paths (a table's month-bucket
+        # directories) Spark lists them with a job of its own
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
     }.items():
         try:
             spark.conf.set(k, v)
