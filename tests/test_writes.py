@@ -5,6 +5,7 @@ import datetime as dt
 import pytest
 
 from yupana_spark import E, Tsdb, default_schema
+from yupana_spark.operators.writes import Warehouse
 
 
 @pytest.fixture()
@@ -192,9 +193,11 @@ def test_recalculate_month_rollup_preserves_full_bucket(wtsdb):
 
 def test_recalculate_commits_dirty_buckets_once(wtsdb, monkeypatch):
     """Dirty days in three month buckets are recomputed by one rollup
-    commit over their span, with the same result as a full rollup."""
+    commit over their bucket ranges (adjacent buckets merged, the clean
+    buckets between them left out), with the same result as a full
+    rollup."""
+    from yupana_spark.operators import rollup as rollup_mod
     from yupana_spark.operators.rollup import Rollup, recalculate, run_rollup
-    from yupana_spark.operators.writes import Warehouse
 
     wh = wtsdb.warehouse
 
@@ -213,18 +216,26 @@ def test_recalculate_commits_dirty_buckets_once(wtsdb, monkeypatch):
         "UPSERT INTO lineitem (time, l_orderkey, l_partkey, l_suppkey, "
         "l_linenumber, l_quantity) VALUES "
         "(TIMESTAMP '1997-03-15', 777781, 1, 1, 1, 5.0), "
-        "(TIMESTAMP '1997-06-15', 777782, 1, 1, 1, 6.0), "
+        "(TIMESTAMP '1997-04-15', 777782, 1, 1, 1, 6.0), "
         "(TIMESTAMP '1997-09-15', 777783, 1, 1, 1, 7.0)")
-    writes = []
+    writes, windows = [], []
     real = Warehouse._write
 
     def counted(self, table, *a, **k):
         writes.append(table)
         return real(self, table, *a, **k)
 
+    def recorded(*a, **k):
+        windows.append(k.get("windows"))
+        return run_rollup(*a, **k)
+
     monkeypatch.setattr(Warehouse, "_write", counted)
+    monkeypatch.setattr(rollup_mod, "run_rollup", recorded)
     recalculate(wh, inc)
     assert writes == [inc.to_table]
+    m = dt.datetime
+    assert windows == [[(m(1997, 3, 1), m(1997, 5, 1)),
+                        (m(1997, 9, 1), m(1997, 10, 1))]]
     full = rollup("lineitem_by_month_full")
     run_rollup(wh, full)
 
@@ -909,7 +920,6 @@ def test_write_path_job_counts(wtsdb, wire):
 
 def test_upsert_releases_cached_batch_on_failure(wtsdb, monkeypatch):
     """A failing commit still releases the cached batch."""
-    from yupana_spark.operators.writes import Warehouse
 
     def fail(*a, **k):
         raise RuntimeError("write failed")
@@ -924,15 +934,28 @@ def test_upsert_releases_cached_batch_on_failure(wtsdb, monkeypatch):
     assert len(sc.getRDDStorageInfo()) == before
 
 
-def test_upsert_demotes_dictionary_past_cap(wtsdb, monkeypatch):
-    """A batch whose new values push a dictionary dim past DICT_CAP
-    demotes it, and a later batch does not seed it again."""
+@pytest.mark.parametrize("summary_bytes", [Warehouse.SUMMARY_VALUES_BYTES, 0],
+                         ids=["summary-action", "spillable-distinct"])
+def test_upsert_demotes_dictionary_past_cap(wtsdb, monkeypatch,
+                                            summary_bytes):
+    """A batch whose new values push a dictionary dim far past DICT_CAP
+    demotes it, and a later batch does not seed it again.  Either way of
+    collecting a batch's values (in the summary action, or per dim
+    through a spillable distinct for a batch estimated larger than
+    SUMMARY_VALUES_BYTES) hands over at most DICT_CAP + 1 of them."""
     import os
-
-    from yupana_spark.operators.writes import Warehouse
 
     wh = wtsdb.warehouse
     monkeypatch.setattr(Warehouse, "DICT_CAP", 3)
+    monkeypatch.setattr(Warehouse, "SUMMARY_VALUES_BYTES", summary_bytes)
+    handed = []
+    real = Warehouse._update_dictionaries
+
+    def recorded(self, t, current, batch_values):
+        handed.append({k: len(v) for k, v in batch_values.items()})
+        return real(self, t, current, batch_values)
+
+    monkeypatch.setattr(Warehouse, "_update_dictionaries", recorded)
 
     def ins(key, *flags):
         wtsdb.sql(
@@ -944,7 +967,8 @@ def test_upsert_demotes_dictionary_past_cap(wtsdb, monkeypatch):
     ins(888881, "A")                  # seeds the fixture's A, N, R
     assert wh.load_dictionary("lineitem", "l_returnflag") == {
         "A": 1, "N": 2, "R": 3}
-    ins(888882, "B", "C", "D", "E", "F")
+    ins(888882, *(f"V{i}" for i in range(40)))
+    assert handed[-1]["l_returnflag"] == 4
     path = wh.dict_path("lineitem", "l_returnflag")
     assert wh.load_dictionary("lineitem", "l_returnflag") is None
     assert os.path.exists(path + ".demoted") and not os.path.exists(path)
@@ -954,4 +978,4 @@ def test_upsert_demotes_dictionary_past_cap(wtsdb, monkeypatch):
     got = wtsdb.sql(f"SELECT count(l_orderkey) AS c FROM lineitem WHERE {TB}"
                     " AND l_orderkey >= 888881 AND l_orderkey <= 888883"
                     ).collect()[0]["c"]
-    assert got == 7
+    assert got == 42

@@ -8,14 +8,14 @@ changelog (TsdbBase.scala:415-423).
 
 Spark design: one declarative groupBy/agg job per rollup; output written to
 the warehouse like any table (month buckets).  ``recalculate`` limits the
-AGGREGATION to the span of rollup buckets the changelog marks dirty and
-commits it once: one ``run_rollup`` over [first dirty bucket's start, last
-dirty bucket's end), whatever the number of dirty buckets.  The
-incremental merge drops the target rows in that bucket range with a
-filter and unions the recomputed ones, so an incremental recalc runs one
-Spark job (the target write; the changelog is read on the driver).  Every
-run still rewrites the whole target table (the warehouse commits whole
-tables).
+AGGREGATION to the rollup buckets the changelog marks dirty and commits
+them once: one ``run_rollup`` over their bucket ranges (adjacent buckets
+merged), whatever the number of dirty buckets, so a clean bucket between
+two dirty ones is neither read nor recomputed.  The incremental merge
+drops the target rows in those ranges with a filter and unions the
+recomputed ones, so an incremental recalc runs one Spark job (the target
+write; the changelog is read on the driver).  Every run still rewrites
+the whole target table (the warehouse commits whole tables).
 """
 
 from __future__ import annotations
@@ -31,6 +31,9 @@ from ..compiler import ExpressionCompiler, _Ctx
 from ..session import rehome
 from .writes import BUCKET_COL, Warehouse
 
+# a [start, end) time range; None leaves that side open
+TimeRange = Tuple[Optional[_dt.datetime], Optional[_dt.datetime]]
+
 
 @dataclass(frozen=True)
 class Rollup:
@@ -42,19 +45,40 @@ class Rollup:
     aggregates: Tuple[Tuple[E.AggExpr, str], ...]  # (agg expr, output name)
 
 
+def _within(col, windows, trunc: Optional[str] = None):
+    """``col`` lies in one of the [start, end) ``windows`` (None leaves a
+    side open); ``trunc`` widens each start to the start of its bucket."""
+    cond = F.lit(False)
+    for start, end in windows:
+        c = F.lit(True)
+        if start is not None:
+            lo = F.lit(start)
+            c &= col >= (F.date_trunc(trunc, lo) if trunc else lo)
+        if end is not None:
+            c &= col < F.lit(end)
+        cond |= c
+    return cond
+
+
 def run_rollup(wh: Warehouse, rollup: Rollup,
                from_time: Optional[_dt.datetime] = None,
-               to_time: Optional[_dt.datetime] = None) -> DataFrame:
+               to_time: Optional[_dt.datetime] = None, *,
+               windows: Optional[Sequence[TimeRange]] = None) -> DataFrame:
     """Execute one rollup window and upsert the result into the target table.
+
+    ``windows``, disjoint [start, end) ranges, replaces ``from_time`` and
+    ``to_time``: one commit recomputes every range and keeps the target
+    rows outside them.
 
     The aggregation relies on HashAggregateExec partial/final (the
     reference's fold/combine/postCombine, TsdbBase.scala:241-267).
     """
+    if windows is None:
+        windows = ([] if from_time is None and to_time is None
+                   else [(from_time, to_time)])
     src = wh.read(rollup.from_table)   # on the source table's posture
-    if from_time is not None:
-        src = src.filter(F.col("time") >= F.lit(from_time))
-    if to_time is not None:
-        src = src.filter(F.col("time") < F.lit(to_time))
+    if windows:
+        src = src.filter(_within(F.col("time"), windows))
 
     ec = ExpressionCompiler(wh.schema.tables.get(rollup.from_table))
     ctx = _Ctx()
@@ -63,19 +87,14 @@ def run_rollup(wh: Warehouse, rollup: Rollup,
     aggs = [ec.col(a, ctx).alias(nm) for a, nm in rollup.aggregates]
     out = src.groupBy(*gcols).agg(*aggs)
 
-    if wh.exists(rollup.to_table) and (from_time or to_time):
-        # incremental: replace the buckets the window can produce, i.e.
-        # target rows with time in [date_trunc(from_time), to_time) — a
-        # range filter, where an anti join on the recomputed bucket times
-        # would cost a job of its own
+    if wh.exists(rollup.to_table) and windows:
+        # incremental: replace the buckets the windows can produce, i.e.
+        # target rows with time in [date_trunc(start), end) of a window —
+        # a range filter, where an anti join on the recomputed bucket
+        # times would cost a job of its own
         existing = rehome(wh.snapshot(rollup.to_table),
                           src.sparkSession).drop(BUCKET_COL)
-        inside = F.lit(True)
-        if from_time is not None:
-            inside &= F.col("time") >= F.date_trunc(rollup.time_trunc,
-                                                    F.lit(from_time))
-        if to_time is not None:
-            inside &= F.col("time") < F.lit(to_time)
+        inside = _within(F.col("time"), windows, rollup.time_trunc)
         kept = existing.filter(~F.coalesce(inside, F.lit(False)))
         merged = kept.unionByName(out)
         wh.write_table(rollup.to_table, merged)
@@ -139,9 +158,13 @@ def recalculate(wh: Warehouse, rollup: Rollup,
         if since is None and updated_by is None:
             return run_rollup(wh, rollup)     # no changelog: recompute all
         return wh.read(rollup.to_table)       # incremental: nothing dirty
-    # one commit over the span of the dirty buckets: the bounds are
-    # bucket-aligned, so a clean bucket inside the span is recomputed to
-    # the values it already holds
-    buckets = [_bucket_bounds(rollup.time_trunc, day) for day in days]
-    return run_rollup(wh, rollup, from_time=min(b[0] for b in buckets),
-                      to_time=max(b[1] for b in buckets))
+    # one commit over the dirty buckets, adjacent ones merged into one
+    # range: clean buckets between two dirty ones stay untouched
+    windows: list = []
+    for start, end in sorted({_bucket_bounds(rollup.time_trunc, day)
+                              for day in days}):
+        if windows and windows[-1][1] == start:
+            windows[-1] = (windows[-1][0], end)
+        else:
+            windows.append((start, end))
+    return run_rollup(wh, rollup, windows=windows)

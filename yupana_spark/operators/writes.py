@@ -17,7 +17,9 @@ dependency.
 A steady upsert runs three Spark jobs: one summary action over the
 cached, deduplicated batch (its row count, each dictionary dim's values
 capped at ``DICT_CAP + 1``, the touched days), the broadcast of its keys
-and the table write.  The dictionaries and the changelog are bounded and
+and the table write.  A batch estimated above ``SUMMARY_VALUES_BYTES``
+collects its dictionary values per dim instead, through a spillable
+distinct.  The dictionaries and the changelog are bounded and
 written on the driver with pyarrow; the changelog is read back the same
 way, so SHOW UPDATES_INTERVALS and a recalc's dirty-day lookup run no job.
 
@@ -164,6 +166,12 @@ def _read_dir(spark: SparkSession, path: str) -> DataFrame:
     except FileNotFoundError:
         return spark.read.parquet(path)
     return spark.read.schema(pinned).parquet(path)
+
+
+def _estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` (no job; the estimate a
+    broadcast decision uses, unknown sizes read as Long.MaxValue)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _read_changelog(path: str) -> pa.Table:
@@ -329,19 +337,30 @@ class Warehouse:
             # one action for every driver-side fact of the batch: its row
             # count, each dictionary dim's values (capped so a batch over
             # the cap still demotes) and the touched days as UTC epoch
-            # micros (independent of the Python time zone)
+            # micros (independent of the Python time zone).  collect_set
+            # builds a dim's whole value set in one task without spilling,
+            # so only a batch estimated small enough gathers its values
+            # there; a larger one collects each dim's values through a
+            # spillable distinct capped by a limit
             dims = [d.name for d in t.dimensions
                     if d.kind == "dictionary" and d.name in incoming.columns
                     and not os.path.exists(
                         self.dict_path(t.name, d.name) + ".demoted")]
+            in_summary = dims if _estimated_bytes(incoming) <= \
+                self.SUMMARY_VALUES_BYTES else []
             aggs = [F.count(F.lit(1))]
             aggs += [F.slice(F.collect_set(F.col(d)), 1, self.DICT_CAP + 1)
-                     for d in dims]
+                     for d in in_summary]
             if "time" in incoming.columns:
                 aggs.append(F.collect_set(F.unix_micros(
                     F.date_trunc("day", F.col("time")))))
             summary = incoming.agg(*aggs).collect()[0]
             n_in = summary[0]
+            values = dict(zip(in_summary, summary[1:1 + len(in_summary)]))
+            for d in dims[len(in_summary):]:
+                values[d] = [r[0] for r in incoming.select(d)
+                             .where(F.col(d).isNotNull()).distinct()
+                             .limit(self.DICT_CAP + 1).collect()]
             # null-safe key equality: dims may be NULL and plain equality
             # would keep stale rows (SQL NULL != NULL); eqNullSafe matches
             # HBase's byte-identical row keys.  The last-write-wins window
@@ -358,8 +377,7 @@ class Warehouse:
             # ingest-time dictionary ids (Dictionary.scala insertion
             # semantics) must be assigned from the PRE-merge state so
             # replays are no-ops
-            self._update_dictionaries(
-                t, current, dict(zip(dims, summary[1:1 + len(dims)])))
+            self._update_dictionaries(t, current, values)
             self._write(table, merged, t)
             if "time" in incoming.columns:
                 self._log_interval(table, summary[-1])
@@ -408,6 +426,9 @@ class Warehouse:
 
     # -- persisted dictionaries (Dictionary.scala:24-105) --------------------
     DICT_CAP = 100_000  # beyond this a dim is not dictionary-shaped
+    # largest estimated batch size whose dictionary values the upsert's
+    # summary action gathers (a steady 200-row UPSERT is ~10 KB)
+    SUMMARY_VALUES_BYTES = 4 << 20
     # stale .old/.compact siblings younger than this are presumed to be
     # another writer's in-flight work and left alone by the sweep
     SWEEP_AGE_S = 3600.0
@@ -456,6 +477,7 @@ class Warehouse:
 
         ``batch_values`` maps each non-demoted dictionary dim of the batch
         to its distinct non-NULL values, at most ``DICT_CAP + 1`` of them:
+        for a batch of at most ``SUMMARY_VALUES_BYTES`` (estimated),
         ``upsert``'s one summary action collects them with the row count
         and the touched days, so no dim costs a job of its own.
         """
