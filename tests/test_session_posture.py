@@ -157,3 +157,13 @@ def test_admin_set_reaches_next_statement(tsdb):
     finally:
         tsdb.sql(f"SET {thr} = {prev}")
     assert "BroadcastHashJoin" in link_join()
+
+
+def test_engine_session_skips_call_site_capture(spark):
+    """Sessions built by ``get_spark`` turn PySpark's per-call call-site
+    capture off (several py4j round trips per Column or functions call)."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()

@@ -70,56 +70,70 @@ def test_infer_format_rejects_unknown(spark):
 
 def test_parallel_read_splits_single_row_group(spark, tmp_path):
     """Fact-sized single-row-group files are re-ingested once per session
-    into time-sorted multi-file parquet (schema._parallel_read); small
-    files and already-split files are returned as-is; writes invalidate."""
+    into time-sorted multi-file parquet (schema._parallel_read), each
+    slice under ``__tmin=…/__tmax=…`` partition directories bracketing
+    its time range; small files and already-split files are returned
+    as-is; writes invalidate."""
+    import datetime as dt
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     import os
 
     from yupana_spark import memo
-    from yupana_spark.schema import cached_parquet, invalidate_parquet_cache
+    from yupana_spark.schema import (SLICE_HI, SLICE_LO, cached_parquet,
+                                     invalidate_parquet_cache)
 
-    def read_dirs(df):
-        return {os.path.dirname(f.replace("file://", ""))
+    def read_root(df):
+        return {f.replace("file://", "").split(f"/{SLICE_LO}=")[0]
                 for f in df.inputFiles()}
 
     n = 60_000
     src = str(tmp_path / "fact.parquet")
     pq.write_table(pa.table({
-        "ts": pa.array(range(n, 0, -1), type=pa.int64()),  # reverse order
+        "ts": pa.array(range(n, 0, -1), type=pa.timestamp("us")),  # reverse
         "v": pa.array(range(n), type=pa.int64()),
     }), src)
     assert pq.ParquetFile(src).num_row_groups == 1
 
     df = cached_parquet(spark, src, time_col="ts")
-    (out_dir,) = read_dirs(df)
+    (out_dir,) = read_root(df)
     assert out_dir != str(tmp_path), "fact-sized file must be re-ingested"
-    parts = sorted(f for f in os.listdir(out_dir) if f.endswith(".parquet"))
+    parts = sorted((f, d) for d, _, fs in os.walk(out_dir) for f in fs
+                   if f.endswith(".parquet"))
     assert len(parts) >= 4  # split into multiple files
-    # every file's min >= previous file's max: globally time-sorted layout
+    # every file's min >= previous file's max: globally time-sorted
+    # layout; its partition directories bracket its own min and max
+    epoch = dt.datetime(1970, 1, 1)
     stats = []
-    for f in parts:
-        md = pq.ParquetFile(os.path.join(out_dir, f)).metadata
+    for f, d in parts:
+        md = pq.ParquetFile(os.path.join(d, f)).metadata
         col = md.row_group(0).column(0).statistics
         stats.append((col.min, col.max))
+        rng = dict(p.split("=") for p in d.split("/") if "=" in p)
+        assert int(rng[SLICE_LO]) == (col.min - epoch) // dt.timedelta(
+            microseconds=1)
+        assert int(rng[SLICE_HI]) == (col.max - epoch) // dt.timedelta(
+            microseconds=1)
     for (lo_a, hi_a), (lo_b, hi_b) in zip(stats, stats[1:]):
         assert hi_a <= lo_b
     # same row set, nothing lost or duplicated
-    agg = df.groupBy().sum("ts", "v").collect()[0]
+    agg = df.selectExpr("sum(unix_micros(CAST(ts AS TIMESTAMP)))",
+                        "sum(v)").collect()[0]
     assert agg[0] == n * (n + 1) // 2 and agg[1] == n * (n - 1) // 2
     assert df.count() == n
 
     # small file: untouched (no rewrite entry)
     small = str(tmp_path / "dim.parquet")
     pq.write_table(pa.table({"k": pa.array(range(10))}), small)
-    assert read_dirs(cached_parquet(spark, small)) == {str(tmp_path)}
+    assert read_root(cached_parquet(spark, small)) == {str(small)}
 
     # invalidation drops the memoized read and with it the rewrite: the
     # next read re-ingests into a fresh directory
     invalidate_parquet_cache(src)
     assert memo.peek("parquet", (src,)) is None
-    assert read_dirs(cached_parquet(spark, src, time_col="ts")) != {out_dir}
+    assert read_root(cached_parquet(spark, src, time_col="ts")) != {out_dir}
 
 
 def test_ingest_gzip_jsonl(spark, wh, tmp_path):

@@ -979,3 +979,67 @@ def test_upsert_demotes_dictionary_past_cap(wtsdb, monkeypatch,
                     " AND l_orderkey >= 888881 AND l_orderkey <= 888883"
                     ).collect()[0]["c"]
     assert got == 42
+
+
+def test_table_bytes_counts_bucket_directories(wtsdb):
+    """A warehouse table's volume is the bytes of every file under its
+    directory, its month-bucket subdirectories included."""
+    import pathlib
+
+    from yupana_spark import memo
+    from yupana_spark.operators.writes import table_bytes
+
+    wtsdb.sql(_events_upsert(999961))
+    wh = wtsdb.warehouse
+    root = pathlib.Path(wh.path("events"))
+    on_disk = sum(p.stat().st_size for p in root.rglob("*") if p.is_file())
+    top = sum(p.stat().st_size for p in root.iterdir() if p.is_file())
+    assert any(p.name.startswith("__month=") for p in root.iterdir())
+    memo.invalidate("table_bytes")
+    got = table_bytes(wtsdb.schema, wtsdb.sf_dir, wh, "events")
+    assert got == on_disk and got > top
+
+
+def test_changelog_files_read_once(wtsdb, monkeypatch):
+    """``updates_intervals`` reads each changelog file once per process
+    and returns what a full read returns; a vanished file makes the next
+    call read everything again."""
+    import os
+
+    from yupana_spark.operators import writes
+    from yupana_spark.operators.writes import CHANGELOG
+
+    reads = []
+    real = writes._read_changelog_file
+
+    def counted(path):
+        reads.append(os.path.basename(path))
+        return real(path)
+
+    monkeypatch.setattr(writes, "_read_changelog_file", counted)
+    wh = wtsdb.warehouse
+    log = os.path.join(wh.root, CHANGELOG)
+
+    def rows():
+        return sorted(tuple(r) for r in wh.updates_intervals().collect())
+
+    def arrow_rows(table):
+        return sorted(tuple(r.values()) for r in table.to_pylist())
+
+    def full():
+        return sorted(row for f in os.listdir(log) if f.endswith(".parquet")
+                      for row in arrow_rows(real(os.path.join(log, f))))
+
+    for i, day in enumerate(("2024-01-06", "2024-01-07", "2024-01-08")):
+        wtsdb.sql(_events_upsert(999951 + i, day))
+        first = rows()
+    files = sorted(f for f in os.listdir(log) if f.endswith(".parquet"))
+    assert len(files) == 3
+    assert rows() == rows() == first
+    assert sorted(reads) == files            # each file read once
+    assert arrow_rows(writes._read_changelog(log)) == full()
+    assert len(first) == 3
+    os.remove(os.path.join(log, files[0]))
+    reads.clear()
+    assert len(rows()) == len(first) - 1
+    assert sorted(reads) == files[1:]        # read everything again

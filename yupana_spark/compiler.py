@@ -18,6 +18,22 @@ this module only translates semantics:
 
 Everything compiles to built-in pyspark.sql.functions (JVM-side, inside
 whole-stage codegen); the only Python UDF is ``tokens`` (the RU stemmer).
+
+Statement constants stay out of the generated code.  Spark writes a
+primitive literal (timestamp, long, int, double) into the Java source of
+its whole-stage classes, so every fresh constant would compile new classes
+and run them in the JVM interpreter.  A WHERE comparison between a column
+and such a constant therefore reads the constant from one per-statement
+parameter row (``_where``): an ``inline`` over a one-element array of
+structs, which Spark passes to the generated code by reference.  Two
+statements of one shape then share their classes through Spark's JVM-wide
+codegen cache.  Each field is Spark's own cast of the literal to the type
+the comparison coerces it to, so the values are bit-identical; NULLs,
+IN-lists, strings, decimals and comparisons where Spark would cast the
+column side stay literals.  A constant read from a row is no longer a
+pushed data filter, so the time range reaches the scan as a partition
+filter instead (``Schema.load``, ``Warehouse.read``), evaluated when the
+file index is pruned.
 """
 
 from __future__ import annotations
@@ -58,6 +74,51 @@ class _Ctx:
     group_map: Dict[str, str] = field(default_factory=dict)  # expr key -> col
     agg_map: Dict[str, str] = field(default_factory=dict)
     window_spec: Any = None
+    # WHERE context: the parameter-row fields its comparisons bind
+    params: Optional[List[Column]] = None
+
+
+_COMPARISONS = ("=", "<>", "<", ">", "<=", ">=")
+_COLUMNS = (E.Field, E.TimeField, E.LinkField)
+# types whose literals Spark writes into generated code; their ladder rank
+# for the widening a comparison applies to its constant side
+_PRIMITIVE_RANK = {yt.BYTE: 1, yt.SHORT: 2, yt.INT: 3, yt.LONG: 4,
+                   yt.DOUBLE: 5, yt.TIMESTAMP: 0}
+
+
+def _bound_type(col_t: str, const_t: str) -> Optional[str]:
+    """The type a comparison of a ``col_t`` column with a ``const_t``
+    constant casts the constant to, when that is the column's own type and
+    one Spark writes into generated code; else None (the constant stays a
+    literal)."""
+    rank = _PRIMITIVE_RANK.get(col_t)
+    if rank is None:
+        return None
+    if const_t == col_t:
+        return col_t
+    if col_t == yt.DOUBLE:
+        # Spark compares double with any integral or decimal as double
+        return col_t if (const_t in yt.INTEGRAL
+                         or yt.base(const_t) == yt.DECIMAL) else None
+    if col_t in yt.INTEGRAL and const_t in yt.INTEGRAL:
+        return col_t if _PRIMITIVE_RANK[const_t] < rank else None
+    return None
+
+
+def _where(df: DataFrame, ec: "ExpressionCompiler", cond: Expr) -> DataFrame:
+    """``df`` filtered by ``cond``, its column-constant comparisons reading
+    their constants from one parameter row attached to every row.
+
+    The row is an ``inline`` over a literal array of one struct: Spark
+    folds the array to one literal and passes it to generated code by
+    reference, and the generator adds no join, exchange or job.  The
+    parameter columns need no drop: the statement's projection prunes
+    them."""
+    ctx = _Ctx(params=[])
+    c = ec.col(cond, ctx)
+    if ctx.params:
+        df = df.select("*", F.inline(F.array(F.struct(*ctx.params))))
+    return df.filter(c)
 
 
 def _lit(v: Any, dtype: str) -> Column:
@@ -203,8 +264,27 @@ class ExpressionCompiler:
             return F.lag(self.col(e.expr, ctx), 1).over(ctx.window_spec)
         raise InvalidQueryError(f"cannot compile {type(e).__name__}")
 
+    def _param(self, e: E.BinaryOp, ctx: _Ctx):
+        """(left, right) with the constant side of a column-constant
+        comparison bound to a new parameter-row field, or None."""
+        if ctx.params is None or e.op not in _COMPARISONS:
+            return None
+        for col, const in ((e.left, e.right), (e.right, e.left)):
+            if (isinstance(col, _COLUMNS) and isinstance(const, E.Const)
+                    and const.value is not None):
+                t = _bound_type(col.dtype, const.dtype)
+                if t is None:
+                    return None
+                name = f"__p{len(ctx.params)}"
+                ctx.params.append(_lit(const.value, const.dtype)
+                                  .cast(yt.spark_type(t)).alias(name))
+                c, p = self.col(col, ctx), F.col(name)
+                return (c, p) if col is e.left else (p, c)
+        return None
+
     def _binary(self, e: E.BinaryOp, ctx: _Ctx) -> Column:
-        l, r = self.col(e.left, ctx), self.col(e.right, ctx)
+        l, r = self._param(e, ctx) or (self.col(e.left, ctx),
+                                       self.col(e.right, ctx))
         lt, rt = e.left.dtype, e.right.dtype
         op = e.op
         if op == "=":
@@ -516,7 +596,7 @@ class Tsdb:
     def _load(self, table: str, time_bounds=None) -> DataFrame:
         wh = self._wh_maybe
         if wh is not None and wh.exists(table):
-            return wh.read(table)
+            return wh.read(table, time_bounds=time_bounds)
         return self.schema.load(self.spark, self.sf_dir, table,
                                 time_bounds=time_bounds)
 
@@ -607,7 +687,7 @@ class Tsdb:
 
         ctx = _Ctx()
         if q.filter is not None:
-            df = df.filter(ec.col(q.filter, ctx))
+            df = _where(df, ec, q.filter)
 
         has_agg = any(f.expr.contains_agg() for f in q.fields) or (
             q.having is not None and q.having.contains_agg()
@@ -896,11 +976,10 @@ class Tsdb:
             if link.match_mode == "related":
                 # receipts (related_key) that contain a matching item,
                 # bounded by the query's own time filter
-                fact = self._load(q.table)
-                ec = ExpressionCompiler(table)
+                fact = self._load(q.table, _extract_time_bounds(q.filter))
                 time_only = _time_conjuncts(q.filter)
                 if time_only is not None:
-                    fact = fact.filter(ec.col(time_only, _Ctx()))
+                    fact = _where(fact, ExpressionCompiler(table), time_only)
                 if keys is not None:
                     matched = fact.filter(
                         member_pred(fact[link.dimension], keys, False))

@@ -27,8 +27,11 @@ Reads are resolved once per commit: each commit pins the table's schema
 in a sidecar, and ``Warehouse.read`` lists a table's files under that
 schema once (one memo entry per table directory, dropped by the next
 commit), so reads between two commits share one listing and none runs a
-schema-inference job.  A frame still running when the next commit swaps
-the directory fails on the files it listed.
+schema-inference job.  A statement's time range keeps only the month
+buckets it overlaps (``Warehouse.read(table, time_bounds)``): a
+partition filter, evaluated when the file index is pruned.  A frame
+still running when the next commit swaps the directory fails on the
+files it listed.
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ import json
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 from typing import Any, Dict, Iterable, Optional, Sequence
 
@@ -99,8 +103,9 @@ def _stat_bytes(schema: Schema, sf_dir: str, wh, table: str) -> int:
             t = schema.table(table)
             path = os.path.join(sf_dir, t.path or f"{table}.parquet")
         if os.path.isdir(path):
-            return sum(e.stat().st_size for e in os.scandir(path)
-                       if e.is_file())
+            # a warehouse table's files sit in its bucket directories
+            return sum(os.path.getsize(os.path.join(d, f))
+                       for d, _, files in os.walk(path) for f in files)
         return os.path.getsize(path)
     except OSError:
         return 1 << 62
@@ -168,33 +173,68 @@ def _read_dir(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(pinned).parquet(path)
 
 
+def _bucket_overlap(time_bounds):
+    """Month buckets that overlap the bounds (inclusively: a superset, the
+    statement's own filter is exact).  The lower bound truncates in Spark,
+    in the session time zone the buckets were cut in."""
+    lo, hi = time_bounds
+    conds = []
+    if lo is not None:
+        conds.append(F.col(BUCKET_COL) >= F.date_trunc("month", F.lit(lo[0])))
+    if hi is not None:
+        conds.append(F.col(BUCKET_COL) <= F.lit(hi[0]))
+    return conds[0] if len(conds) == 1 else conds[0] & conds[1]
+
+
 def _estimated_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate of ``df`` (no job; the estimate a
     broadcast decision uses, unknown sizes read as Long.MaxValue)."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def _read_changelog(path: str) -> pa.Table:
-    """Every changelog file under ``path`` as one Arrow table under
-    ``CHANGELOG_SCHEMA``.  Hidden and ``_``-prefixed names (in-flight
-    temp files, ``_SUCCESS``) are skipped; a Spark-written file's INT96
-    timestamps are read as microseconds in UTC and a missing
+def _read_changelog_file(path: str) -> pa.Table:
+    """One changelog file under ``CHANGELOG_SCHEMA``: a Spark-written
+    file's INT96 timestamps are read as microseconds in UTC and a missing
     ``updated_by`` reads as NULL."""
     import pyarrow.parquet as pq
 
-    parts = []
-    names = sorted(os.listdir(path)) if os.path.isdir(path) else []
-    for name in names:
-        if name.startswith((".", "_")) or not name.endswith(".parquet"):
-            continue
-        part = pq.read_table(os.path.join(path, name),
-                             coerce_int96_timestamp_unit="us")
-        parts.append(pa.table(
-            [part.column(f.name).cast(f.type) if f.name in part.column_names
-             else pa.nulls(part.num_rows, f.type) for f in _CHANGELOG_ARROW],
-            schema=_CHANGELOG_ARROW))
-    return (pa.concat_tables(parts) if parts
-            else _CHANGELOG_ARROW.empty_table())
+    part = pq.read_table(path, coerce_int96_timestamp_unit="us")
+    return pa.table(
+        [part.column(f.name).cast(f.type) if f.name in part.column_names
+         else pa.nulls(part.num_rows, f.type) for f in _CHANGELOG_ARROW],
+        schema=_CHANGELOG_ARROW)
+
+
+class _ChangelogRead:
+    """The changelog files of one directory read so far, and their rows."""
+
+    def __init__(self):
+        self.lock = threading.Lock()
+        self.names: frozenset = frozenset()
+        self.rows = _CHANGELOG_ARROW.empty_table()
+
+
+def _read_changelog(path: str) -> pa.Table:
+    """Every changelog file under ``path`` as one Arrow table under
+    ``CHANGELOG_SCHEMA``.  Hidden and ``_``-prefixed names (in-flight
+    temp files, ``_SUCCESS``) are skipped.  Each file is read once per
+    process: a memo entry per directory keeps the rows read so far, and
+    a call reads only the names it has not seen; a file that vanished
+    (the directory was rewritten) makes it read everything again."""
+    seen = memo.get("changelog", (path,), _ChangelogRead)
+    with seen.lock:
+        names = frozenset(
+            n for n in (os.listdir(path) if os.path.isdir(path) else ())
+            if not n.startswith((".", "_")) and n.endswith(".parquet"))
+        if not seen.names <= names:
+            seen.names, seen.rows = frozenset(), _CHANGELOG_ARROW.empty_table()
+        fresh = sorted(names - seen.names)
+        if fresh:
+            seen.rows = pa.concat_tables(
+                [seen.rows] + [_read_changelog_file(os.path.join(path, n))
+                               for n in fresh]).combine_chunks()
+            seen.names = names
+        return seen.rows
 
 
 def _item_fixer_udf(fn):
@@ -288,14 +328,20 @@ class Warehouse:
         return memo.get("wh_read", (path,),
                         lambda: _read_dir(self.spark, path))
 
-    def read(self, table: str) -> DataFrame:
+    def read(self, table: str, time_bounds=None) -> DataFrame:
         """Warehouse copy if the table was written, else the sf_dir fixture,
-        rooted in the table's posture session."""
+        rooted in the table's posture session.  ``time_bounds`` (as for
+        ``Schema.load``) keeps the month buckets that overlap them: a
+        partition filter, evaluated when the file index is pruned."""
         if self.exists(table):
             df = self.snapshot(table)
-            df = df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
+            if BUCKET_COL in df.columns:
+                if time_bounds is not None:
+                    df = df.filter(_bucket_overlap(time_bounds))
+                df = df.drop(BUCKET_COL)
         else:
-            df = self.schema.load(self.spark, self.sf_dir, table)
+            df = self.schema.load(self.spark, self.sf_dir, table,
+                                  time_bounds=time_bounds)
         return rehome(df, self.session_for(table))
 
     # -- core upsert -----------------------------------------------------------
@@ -640,8 +686,9 @@ class Warehouse:
         if BUCKET_COL in df.columns and tcol and tcol in df.columns:
             # one shuffle partition per bucket -> one file per partition
             # dir (AQE coalesces the empty ones); rows time-sorted inside
-            # each file so parquet row-group min/max stats prune time
-            # predicates tighter than the month bucket alone
+            # each file so parquet row-group min/max stats prune literal
+            # time filters (a recalc's bucket ranges) tighter than the
+            # month bucket alone
             out = (df.repartition(F.col(BUCKET_COL))
                    .sortWithinPartitions(tcol).drop(BUCKET_COL)
                    .withColumn(BUCKET_COL,

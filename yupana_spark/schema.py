@@ -17,9 +17,10 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Callable, Dict, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from . import memo, types as yt
 from .session import ensure_engine_confs
@@ -47,6 +48,30 @@ _SPLIT_MAX_BYTES = 256 << 20   # fixture-shape gate — never triggers at scale
 # by ~16 tasks (8k rows/file gave 18 and 32 tasks respectively; both sides
 # of the trade landed within noise of their optimum at 32k)
 _SPLIT_ROWS_PER_FILE = 32_000
+#: partition columns of a time-sorted slice: its smallest and largest time
+#: as UTC epoch microseconds (floored and ceiled), so a time range prunes
+#: slices in the file index instead of by pushed parquet statistics
+SLICE_LO, SLICE_HI = "__tmin", "__tmax"
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _slice_dir(col) -> str:
+    """``__tmin=<us>/__tmax=<us>`` of a timestamp column's slice."""
+    import pyarrow.compute as pc
+
+    mm = pc.min_max(col)
+    lo, hi = mm["min"], mm["max"]
+    if not lo.is_valid:     # all NULL: no time range matches it
+        return os.path.join(f"{SLICE_LO}={_NULL_PARTITION}",
+                            f"{SLICE_HI}={_NULL_PARTITION}")
+    lo, hi = lo.value, hi.value
+    unit = col.type.unit
+    if unit == "ns":
+        lo, hi = lo // 1000, -(-hi // 1000)
+    else:
+        scale = {"s": 10**6, "ms": 10**3, "us": 1}[unit]
+        lo, hi = lo * scale, hi * scale
+    return os.path.join(f"{SLICE_LO}={lo}", f"{SLICE_HI}={hi}")
 
 
 def _parallel_read(spark: SparkSession, path: str,
@@ -63,15 +88,18 @@ def _parallel_read(spark: SparkSession, path: str,
     files).  Mirror that at session scope: fact-sized single-row-group
     files are re-ingested ONCE into a temp dir, range-partitioned on the
     time column, and all queries scan the copy — pushdown and column
-    pruning are untouched (plain parquet scan), and the per-file min/max
-    time stats now PRUNE files under the mandatory time condition, which is
-    exactly the at-scale layout.  Small dims and multi-row-group inputs are
+    pruning are untouched (plain parquet scan).  Each slice of a timestamp
+    time column lands under ``__tmin=…/__tmax=…`` partition directories
+    recording its time range, so ``Schema.load`` prunes slices under the
+    mandatory time condition with a partition filter, which is exactly
+    the at-scale layout.  Small dims and multi-row-group inputs are
     returned as-is; the source files are never written.  Runs as
     the build of the path's ``cached_parquet`` entry, so concurrent first
     touches (pgwire serves connections from threads) pay one rewrite.
     """
     df = spark.read.parquet(path)
     try:
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         if (not os.path.isfile(path)
@@ -95,13 +123,18 @@ def _parallel_read(spark: SparkSession, path: str,
         # the one single-threaded scan we are eliminating (plus a range-
         # sampling second pass)
         tbl = pq.read_table(path)
+        sliced = (time_col in tbl.column_names
+                  and pa.types.is_timestamp(tbl.schema.field(time_col).type))
         if time_col and time_col in tbl.column_names:
             tbl = tbl.sort_by([(time_col, "ascending")])
         per_file = -(-rows // nfiles)
         for i in range(nfiles):
             chunk = tbl.slice(i * per_file, per_file)
             if chunk.num_rows:
-                pq.write_table(chunk, os.path.join(out, f"part-{i:05d}.parquet"))
+                d = (os.path.join(out, _slice_dir(chunk.column(time_col)))
+                     if sliced else out)
+                os.makedirs(d, exist_ok=True)
+                pq.write_table(chunk, os.path.join(d, f"part-{i:05d}.parquet"))
         return spark.read.parquet(out)
     except Exception:  # noqa: BLE001 — layout fixing must never fail a read
         return df
@@ -235,15 +268,20 @@ class Schema:
 
         ``time_bounds`` — optional ((lo, lo_strict), (hi, hi_inclusive))
         from the query's mandatory time condition (compiler
-        _extract_time_bounds).  For nanos-as-long sources the converted
-        ``time`` column hides the raw column from pushdown, so the bounds are
-        re-expressed over the raw int64 BEFORE the conversion projection —
-        that filter reaches the parquet row groups (at 100 TB this is the
-        difference between pruning and a full scan).  The conversion is
-        EXACT, not just a superset: the queryable ``time`` column is
-        ``raw div 1000`` micros, so ``time OP bound`` maps one-to-one onto a
-        raw-nanos comparison at microsecond precision (inclusive/strict
-        operators shift the bound by one micro).
+        _extract_time_bounds).  A time-sliced copy (``_parallel_read``)
+        keeps only the slices whose ``__tmin``/``__tmax`` range overlaps
+        the bounds: a partition filter, evaluated in the file index, so
+        the statement's generated code does not depend on the bounds.  A
+        source with no slice partitions gets the bounds as a literal
+        filter on its time column, which reaches the parquet row groups
+        (at 100 TB this is the difference between pruning and a full
+        scan).  For nanos-as-long sources the converted ``time`` column
+        hides the raw column from pushdown, so the bounds are re-expressed
+        over the raw int64 BEFORE the conversion projection.  The
+        conversion is EXACT, not just a superset: the queryable ``time``
+        column is ``raw div 1000`` micros, so ``time OP bound`` maps
+        one-to-one onto a raw-nanos comparison at microsecond precision
+        (inclusive/strict operators shift the bound by one micro).
         """
         t = self.table(name)
         path = os.path.join(sf_dir, t.path or f"{name}.parquet")
@@ -255,27 +293,16 @@ class Schema:
         df = cached_parquet(spark, path, time_col=t.time_column)
         from pyspark.sql import types as T
 
-        tcol_type = df.schema[t.time_column].dataType
-        if isinstance(tcol_type, T.LongType):
+        # the memoized frame caches its schema: no round trip per statement
+        nanos = isinstance(df.schema[t.time_column].dataType, T.LongType)
+        if SLICE_LO in df.columns:
             if time_bounds is not None:
-                import calendar
-
-                def _us(d):
-                    return calendar.timegm(d.timetuple()) * 10**6 + d.microsecond
-
-                lo, hi = time_bounds
-                if lo is not None:
-                    v, strict = lo
-                    # time = raw div 1000 (micros).  time >= v  <=>
-                    # raw >= v_us*1000;  time > v  <=>  raw >= (v_us+1)*1000
-                    ns = (_us(v) + (1 if strict else 0)) * 1000
-                    df = df.filter(F.col(t.time_column) >= F.lit(ns))
-                if hi is not None:
-                    v, inclusive = hi
-                    # time < v  <=>  raw < v_us*1000;  time <= v  <=>
-                    # raw < (v_us+1)*1000
-                    ns = (_us(v) + (1 if inclusive else 0)) * 1000
-                    df = df.filter(F.col(t.time_column) < F.lit(ns))
+                df = df.filter(_slice_overlap(time_bounds))
+            df = df.drop(SLICE_LO, SLICE_HI)
+        elif time_bounds is not None:
+            df = df.filter(_time_bound(F.col(t.time_column), time_bounds,
+                                       nanos))
+        if nanos:
             df = df.withColumn(
                 t.time_column,
                 F.expr(f"timestamp_micros({t.time_column} div 1000)"),
@@ -283,3 +310,45 @@ class Schema:
         if t.time_column != "time":
             df = df.withColumn("time", F.col(t.time_column))
         return df
+
+
+def _slice_overlap(time_bounds) -> Column:
+    """Slices whose [__tmin, __tmax] overlaps the bounds (inclusively: a
+    superset, the statement's own filter is exact).  The bounds convert
+    in Spark, as the statement's time literals do."""
+    lo, hi = time_bounds
+    conds = []
+    if lo is not None:
+        conds.append(F.col(SLICE_HI) >= F.unix_micros(F.lit(lo[0])))
+    if hi is not None:
+        conds.append(F.col(SLICE_LO) <= F.unix_micros(F.lit(hi[0])))
+    return reduce(lambda a, b: a & b, conds)
+
+
+def _time_bound(col: Column, time_bounds, nanos: bool) -> Column:
+    """``col`` within the bounds exactly, the bounds as literals."""
+    import calendar
+
+    def _us(d):
+        return calendar.timegm(d.timetuple()) * 10**6 + d.microsecond
+
+    lo, hi = time_bounds
+    conds = []
+    if lo is not None:
+        v, strict = lo
+        if nanos:
+            # time = raw div 1000 (micros).  time >= v  <=>
+            # raw >= v_us*1000;  time > v  <=>  raw >= (v_us+1)*1000
+            conds.append(col >= F.lit((_us(v) + (1 if strict else 0)) * 1000))
+        else:
+            conds.append(col > F.lit(v) if strict else col >= F.lit(v))
+    if hi is not None:
+        v, inclusive = hi
+        if nanos:
+            # time < v  <=>  raw < v_us*1000;  time <= v  <=>
+            # raw < (v_us+1)*1000
+            conds.append(col < F.lit((_us(v) + (1 if inclusive else 0))
+                                     * 1000))
+        else:
+            conds.append(col <= F.lit(v) if inclusive else col < F.lit(v))
+    return reduce(lambda a, b: a & b, conds)

@@ -165,6 +165,10 @@ def get_spark(app: str = "yupana-spark", cpus: int | None = None) -> SparkSessio
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark wraps every Column and functions call in a call-site
+        # capture of several py4j round trips; a static conf, so it only
+        # reaches sessions built here
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
     # the engine dialect and base posture hold from the start, not only
