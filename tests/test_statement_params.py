@@ -171,19 +171,32 @@ def test_column_side_coerced_comparison_keeps_literal(ftsdb):
     from pyspark.sql import functions as F
 
     df = ftsdb.sql(
-        "SELECT event_id FROM events WHERE time >= TIMESTAMP '2024-01-01' "
-        "AND time < TIMESTAMP '2024-03-01' AND user_id < 49.5")
-    got = sorted(r["event_id"] for r in df.collect())
-    want = sorted(r["event_id"] for r in
-                  ftsdb.spark.read.parquet(f"{SF}/events.parquet")
-                  .filter((F.col("ts") >= F.lit(dt.datetime(2024, 1, 1)))
-                          & (F.col("ts") < F.lit(dt.datetime(2024, 3, 1)))
-                          & (F.col("user_id") <= 49))
-                  .select("event_id").collect())
+        "SELECT l_orderkey, l_linenumber FROM lineitem WHERE "
+        "time >= TIMESTAMP '1996-01-01' AND time < TIMESTAMP '1996-03-01' "
+        "AND l_suppkey < 49.5")
+    got = sorted(tuple(r) for r in df.collect())
+    want = sorted(tuple(r) for r in
+                  ftsdb.spark.read.parquet(f"{SF}/lineitem.parquet")
+                  .filter((F.col("l_shipdate") >= "1996-01-01")
+                          & (F.col("l_shipdate") < "1996-03-01")
+                          & (F.col("l_suppkey") <= 49))
+                  .select("l_orderkey", "l_linenumber").collect())
     assert got == want and got
     # only the two time bounds are parameter-row fields
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "__p1" in plan and "__p2" not in plan
+
+
+def test_unsliced_source_binds_no_parameter_row(ftsdb):
+    """A source whose time range cannot reach the scan as a partition
+    filter (a fixture too small to slice) keeps today's literal filter,
+    pushed to the scan, and binds no parameter row."""
+    assert not ftsdb.schema.time_sliced(ftsdb.spark, SF, "events")
+    df = ftsdb.sql(
+        "SELECT event_id FROM events WHERE time >= TIMESTAMP '2024-01-01' "
+        "AND time < TIMESTAMP '2024-01-02' AND value > 10.5")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "__p0" not in plan and "GreaterThanOrEqual(ts" in plan
 
 
 def test_bound_type_follows_spark_coercion():

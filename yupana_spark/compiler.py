@@ -33,7 +33,9 @@ IN-lists, strings, decimals and comparisons where Spark would cast the
 column side stay literals.  A constant read from a row is no longer a
 pushed data filter, so the time range reaches the scan as a partition
 filter instead (``Schema.load``, ``Warehouse.read``), evaluated when the
-file index is pruned.
+file index is pruned.  A source without such partitions keeps today's
+pushed literal time bound, and with it code that depends on the
+constants, so its statements bind no parameter row at all.
 """
 
 from __future__ import annotations
@@ -105,16 +107,18 @@ def _bound_type(col_t: str, const_t: str) -> Optional[str]:
     return None
 
 
-def _where(df: DataFrame, ec: "ExpressionCompiler", cond: Expr) -> DataFrame:
-    """``df`` filtered by ``cond``, its column-constant comparisons reading
-    their constants from one parameter row attached to every row.
+def _where(df: DataFrame, ec: "ExpressionCompiler", cond: Expr,
+           bind: bool) -> DataFrame:
+    """``df`` filtered by ``cond``; with ``bind``, its column-constant
+    comparisons read their constants from one parameter row attached to
+    every row.
 
     The row is an ``inline`` over a literal array of one struct: Spark
     folds the array to one literal and passes it to generated code by
     reference, and the generator adds no join, exchange or job.  The
     parameter columns need no drop: the statement's projection prunes
     them."""
-    ctx = _Ctx(params=[])
+    ctx = _Ctx(params=[] if bind else None)
     c = ec.col(cond, ctx)
     if ctx.params:
         df = df.select("*", F.inline(F.array(F.struct(*ctx.params))))
@@ -593,12 +597,21 @@ class Tsdb:
             return self.warehouse
         return None
 
-    def _load(self, table: str, time_bounds=None) -> DataFrame:
+    def _load(self, table: str, time_bounds=None):
+        """The table's frame, and whether a time range reaches its scan as
+        a partition filter.  Only then do a statement's WHERE constants
+        go to the parameter row: on any other source the time literals
+        stay in the pushed filter, and so in the generated code, where a
+        parameter row would only add work."""
+        from .operators.writes import BUCKET_COL
+
         wh = self._wh_maybe
         if wh is not None and wh.exists(table):
-            return wh.read(table, time_bounds=time_bounds)
-        return self.schema.load(self.spark, self.sf_dir, table,
-                                time_bounds=time_bounds)
+            return (wh.read(table, time_bounds=time_bounds),
+                    BUCKET_COL in wh.snapshot(table).columns)
+        return (self.schema.load(self.spark, self.sf_dir, table,
+                                 time_bounds=time_bounds),
+                self.schema.time_sliced(self.spark, self.sf_dir, table))
 
     # -- binding (TsdbBase.fillPlaceholders:293-309) -------------------------
     def _bind(self, e: Expr, params: Optional[Sequence[Any]]) -> Expr:
@@ -681,13 +694,13 @@ class Tsdb:
         ec = ExpressionCompiler(table, tokenizer=self.schema.tokenizer,
                                 dict_ids=self._resolve_dictionaries(q, table))
 
-        df = self._load(q.table, time_bounds=_extract_time_bounds(q.filter))
+        df, bind = self._load(q.table, _extract_time_bounds(q.filter))
         df, q = self._rewrite_predicate_links(df, q, table)
         df = self._join_links(df, q, table)
 
         ctx = _Ctx()
         if q.filter is not None:
-            df = _where(df, ec, q.filter)
+            df = _where(df, ec, q.filter, bind)
 
         has_agg = any(f.expr.contains_agg() for f in q.fields) or (
             q.having is not None and q.having.contains_agg()
@@ -852,7 +865,7 @@ class Tsdb:
         return out
 
     def _sorted_ids(self, table: str, dim: str) -> Optional[Dict[str, int]]:
-        vals = (self._load(table).select(dim).distinct()
+        vals = (self._load(table)[0].select(dim).distinct()
                 .limit(self._DICT_CAP + 1).collect())
         if len(vals) > self._DICT_CAP:
             return None
@@ -976,10 +989,12 @@ class Tsdb:
             if link.match_mode == "related":
                 # receipts (related_key) that contain a matching item,
                 # bounded by the query's own time filter
-                fact = self._load(q.table, _extract_time_bounds(q.filter))
+                fact, bind = self._load(q.table,
+                                        _extract_time_bounds(q.filter))
                 time_only = _time_conjuncts(q.filter)
                 if time_only is not None:
-                    fact = _where(fact, ExpressionCompiler(table), time_only)
+                    fact = _where(fact, ExpressionCompiler(table), time_only,
+                                  bind)
                 if keys is not None:
                     matched = fact.filter(
                         member_pred(fact[link.dimension], keys, False))

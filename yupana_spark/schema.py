@@ -259,6 +259,24 @@ class Schema:
             raise KeyError(f"unknown table {name}")
         return self.tables[name]
 
+    def _source(self, spark: SparkSession, sf_dir: str,
+                t: Table) -> DataFrame:
+        # some sources write TIMESTAMP(NANOS) which Spark's vectorized reader
+        # rejects: the engine confs read nanos as long and load converts
+        # (integer division keeps the full 64-bit precision — going through
+        # double would corrupt it)
+        ensure_engine_confs(spark)
+        return cached_parquet(spark,
+                              os.path.join(sf_dir, t.path or f"{t.name}.parquet"),
+                              time_col=t.time_column)
+
+    def time_sliced(self, spark: SparkSession, sf_dir: str,
+                    name: str) -> bool:
+        """Whether ``load`` prunes the table's time-sliced copy by
+        partition filters (the memoized frame caches its schema: no round
+        trip per statement)."""
+        return SLICE_LO in self._source(spark, sf_dir, self.table(name)).columns
+
     def load(self, spark: SparkSession, sf_dir: str, name: str,
              time_bounds=None) -> DataFrame:
         """Read the table and expose its time column as ``time``.
@@ -271,38 +289,48 @@ class Schema:
         _extract_time_bounds).  A time-sliced copy (``_parallel_read``)
         keeps only the slices whose ``__tmin``/``__tmax`` range overlaps
         the bounds: a partition filter, evaluated in the file index, so
-        the statement's generated code does not depend on the bounds.  A
-        source with no slice partitions gets the bounds as a literal
-        filter on its time column, which reaches the parquet row groups
-        (at 100 TB this is the difference between pruning and a full
-        scan).  For nanos-as-long sources the converted ``time`` column
-        hides the raw column from pushdown, so the bounds are re-expressed
-        over the raw int64 BEFORE the conversion projection.  The
-        conversion is EXACT, not just a superset: the queryable ``time``
-        column is ``raw div 1000`` micros, so ``time OP bound`` maps
-        one-to-one onto a raw-nanos comparison at microsecond precision
-        (inclusive/strict operators shift the bound by one micro).
+        the statement's generated code does not depend on the bounds.  On
+        any other source the statement's own time filter is pushed to the
+        parquet row groups (at 100 TB this is the difference between
+        pruning and a full scan); for nanos-as-long sources the converted
+        ``time`` column hides the raw column from pushdown, so the bounds
+        are re-expressed over the raw int64 BEFORE the conversion
+        projection.  The conversion is EXACT, not just a superset: the
+        queryable ``time`` column is ``raw div 1000`` micros, so ``time OP
+        bound`` maps one-to-one onto a raw-nanos comparison at microsecond
+        precision (inclusive/strict operators shift the bound by one
+        micro).
         """
         t = self.table(name)
-        path = os.path.join(sf_dir, t.path or f"{name}.parquet")
-        # some sources write TIMESTAMP(NANOS) which Spark's vectorized reader
-        # rejects: the engine confs read nanos as long and this converts
-        # (integer division keeps the full 64-bit precision — going through
-        # double would corrupt it)
-        ensure_engine_confs(spark)
-        df = cached_parquet(spark, path, time_col=t.time_column)
+        df = self._source(spark, sf_dir, t)
         from pyspark.sql import types as T
 
-        # the memoized frame caches its schema: no round trip per statement
-        nanos = isinstance(df.schema[t.time_column].dataType, T.LongType)
-        if SLICE_LO in df.columns:
+        tcol_type = df.schema[t.time_column].dataType
+        sliced = SLICE_LO in df.columns
+        if sliced:
             if time_bounds is not None:
                 df = df.filter(_slice_overlap(time_bounds))
             df = df.drop(SLICE_LO, SLICE_HI)
-        elif time_bounds is not None:
-            df = df.filter(_time_bound(F.col(t.time_column), time_bounds,
-                                       nanos))
-        if nanos:
+        if isinstance(tcol_type, T.LongType):
+            if time_bounds is not None and not sliced:
+                import calendar
+
+                def _us(d):
+                    return calendar.timegm(d.timetuple()) * 10**6 + d.microsecond
+
+                lo, hi = time_bounds
+                if lo is not None:
+                    v, strict = lo
+                    # time = raw div 1000 (micros).  time >= v  <=>
+                    # raw >= v_us*1000;  time > v  <=>  raw >= (v_us+1)*1000
+                    ns = (_us(v) + (1 if strict else 0)) * 1000
+                    df = df.filter(F.col(t.time_column) >= F.lit(ns))
+                if hi is not None:
+                    v, inclusive = hi
+                    # time < v  <=>  raw < v_us*1000;  time <= v  <=>
+                    # raw < (v_us+1)*1000
+                    ns = (_us(v) + (1 if inclusive else 0)) * 1000
+                    df = df.filter(F.col(t.time_column) < F.lit(ns))
             df = df.withColumn(
                 t.time_column,
                 F.expr(f"timestamp_micros({t.time_column} div 1000)"),
@@ -322,33 +350,4 @@ def _slice_overlap(time_bounds) -> Column:
         conds.append(F.col(SLICE_HI) >= F.unix_micros(F.lit(lo[0])))
     if hi is not None:
         conds.append(F.col(SLICE_LO) <= F.unix_micros(F.lit(hi[0])))
-    return reduce(lambda a, b: a & b, conds)
-
-
-def _time_bound(col: Column, time_bounds, nanos: bool) -> Column:
-    """``col`` within the bounds exactly, the bounds as literals."""
-    import calendar
-
-    def _us(d):
-        return calendar.timegm(d.timetuple()) * 10**6 + d.microsecond
-
-    lo, hi = time_bounds
-    conds = []
-    if lo is not None:
-        v, strict = lo
-        if nanos:
-            # time = raw div 1000 (micros).  time >= v  <=>
-            # raw >= v_us*1000;  time > v  <=>  raw >= (v_us+1)*1000
-            conds.append(col >= F.lit((_us(v) + (1 if strict else 0)) * 1000))
-        else:
-            conds.append(col > F.lit(v) if strict else col >= F.lit(v))
-    if hi is not None:
-        v, inclusive = hi
-        if nanos:
-            # time < v  <=>  raw < v_us*1000;  time <= v  <=>
-            # raw < (v_us+1)*1000
-            conds.append(col < F.lit((_us(v) + (1 if inclusive else 0))
-                                     * 1000))
-        else:
-            conds.append(col <= F.lit(v) if inclusive else col < F.lit(v))
     return reduce(lambda a, b: a & b, conds)
