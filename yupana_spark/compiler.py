@@ -82,10 +82,8 @@ class _Ctx:
 
 _COMPARISONS = ("=", "<>", "<", ">", "<=", ">=")
 _COLUMNS = (E.Field, E.TimeField, E.LinkField)
-# types whose literals Spark writes into generated code; their ladder rank
-# for the widening a comparison applies to its constant side
-_PRIMITIVE_RANK = {yt.BYTE: 1, yt.SHORT: 2, yt.INT: 3, yt.LONG: 4,
-                   yt.DOUBLE: 5, yt.TIMESTAMP: 0}
+#: column types whose constants Spark writes into generated code
+_PRIMITIVE = yt.INTEGRAL + (yt.DOUBLE, yt.TIMESTAMP)
 
 
 def _bound_type(col_t: str, const_t: str) -> Optional[str]:
@@ -93,8 +91,7 @@ def _bound_type(col_t: str, const_t: str) -> Optional[str]:
     constant casts the constant to, when that is the column's own type and
     one Spark writes into generated code; else None (the constant stays a
     literal)."""
-    rank = _PRIMITIVE_RANK.get(col_t)
-    if rank is None:
+    if col_t not in _PRIMITIVE:
         return None
     if const_t == col_t:
         return col_t
@@ -103,7 +100,10 @@ def _bound_type(col_t: str, const_t: str) -> Optional[str]:
         return col_t if (const_t in yt.INTEGRAL
                          or yt.base(const_t) == yt.DECIMAL) else None
     if col_t in yt.INTEGRAL and const_t in yt.INTEGRAL:
-        return col_t if _PRIMITIVE_RANK[const_t] < rank else None
+        # a narrower integral widens to the column's type (INTEGRAL is
+        # ordered narrow to wide)
+        return col_t if (yt.INTEGRAL.index(const_t)
+                         < yt.INTEGRAL.index(col_t)) else None
     return None
 
 
