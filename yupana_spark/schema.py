@@ -266,16 +266,16 @@ class Schema:
         # (integer division keeps the full 64-bit precision — going through
         # double would corrupt it)
         ensure_engine_confs(spark)
-        return cached_parquet(spark,
-                              os.path.join(sf_dir, t.path or f"{t.name}.parquet"),
-                              time_col=t.time_column)
+        path = os.path.join(sf_dir, t.path or f"{t.name}.parquet")
+        return cached_parquet(spark, path, time_col=t.time_column)
 
     def time_sliced(self, spark: SparkSession, sf_dir: str,
                     name: str) -> bool:
         """Whether ``load`` prunes the table's time-sliced copy by
         partition filters (the memoized frame caches its schema: no round
         trip per statement)."""
-        return SLICE_LO in self._source(spark, sf_dir, self.table(name)).columns
+        return SLICE_LO in self._source(spark, sf_dir,
+                                        self.table(name)).columns
 
     def load(self, spark: SparkSession, sf_dir: str, name: str,
              time_bounds=None) -> DataFrame:
