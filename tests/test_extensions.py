@@ -109,9 +109,10 @@ def test_standard_rollups(spark, tmp_path):
 def test_explain_surface(spark):
     """The time range reaches the scan: over a time-sliced fact table it
     is a partition filter on the slices' recorded time ranges."""
+    from tests.conftest import SF_ORACLE
     from yupana_spark import Tsdb, default_schema
 
-    tsdb = Tsdb(spark, default_schema(), "/root/testdata/sf0.01")
+    tsdb = Tsdb(spark, default_schema(), SF_ORACLE)
     plan = tsdb.explain(
         "SELECT l_returnflag, sum(l_quantity) s FROM lineitem "
         "WHERE time >= TIMESTAMP '1995-01-01' AND time < TIMESTAMP '1996-01-01' "

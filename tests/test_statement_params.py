@@ -7,9 +7,10 @@ import os
 
 import pytest
 
+from tests.conftest import SF_ORACLE as SF, SF_SMALL
 from yupana_spark import Tsdb, default_schema
 
-SF = "/root/testdata/sf0.01"    # lineitem is fact-sized here: time-sliced
+# lineitem is fact-sized at SF: time-sliced
 
 
 @pytest.fixture(scope="module")
@@ -21,7 +22,7 @@ def ftsdb(spark):
 def whtsdb(spark, tmp_path_factory):
     """A warehouse whose ``events`` copy has at least three month
     buckets."""
-    t = Tsdb(spark, default_schema(), "/root/testdata/sf0.001",
+    t = Tsdb(spark, default_schema(), SF_SMALL,
              warehouse_root=str(tmp_path_factory.mktemp("wh")))
     t.sql("UPSERT INTO events (time, event_id, user_id, event_type, value) "
           "VALUES (TIMESTAMP '2024-02-10', 990001, 3, 'p', 30.5), "
