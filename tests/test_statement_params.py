@@ -149,6 +149,18 @@ def test_fixture_copy_reads_only_overlapping_slices(ftsdb):
               .filter(f"l_shipdate >= '{lo}' AND l_shipdate < '{hi}'")
               .count())
     assert df.collect()[0]["c"] == direct
+    # a lower-only and an upper-only bound prune on their side alone: a
+    # lower bound at the second slice's start drops the first slice, an
+    # upper bound at the first slice's end keeps it alone
+    first, second = sorted(every)[:2]
+    us = dt.timedelta(microseconds=1)
+    start, end = epoch + second[0] * us, epoch + first[1] * us
+    for bounds, keep in ((((start, False), None), lambda r: r[1] >= second[0]),
+                         ((None, (end, False)), lambda r: r[0] <= first[1])):
+        half = ranges(ftsdb.schema.load(ftsdb.spark, SF, "lineitem",
+                                        time_bounds=bounds))
+        want = {r for r in every if keep(r)}
+        assert half == want and len(want) < len(every)
 
 
 def test_warehouse_table_reads_only_overlapping_buckets(whtsdb):
@@ -164,6 +176,15 @@ def test_warehouse_table_reads_only_overlapping_buckets(whtsdb):
     read = {f.split("/")[-2] for f in _read_files(df)}
     assert read == {m for m in months if m.startswith("__month=2024-03")}
     assert [r["event_id"] for r in df.collect()] == [990002]
+    # a lower-only and an upper-only bound prune on their side alone
+    lo, hi = dt.datetime(2024, 3, 5), dt.datetime(2024, 3, 20)
+    month = len("__month=")
+    for bounds, keep in ((((lo, False), None), lambda m: m >= "2024-03"),
+                         ((None, (hi, False)), lambda m: m <= "2024-03")):
+        read = {f.split("/")[-2]
+                for f in _read_files(wh.read("events", time_bounds=bounds))}
+        want = {m for m in months if keep(m[month:month + 7])}
+        assert read == want and len(want) < len(months)
 
 
 def test_column_side_coerced_comparison_keeps_literal(ftsdb):

@@ -291,6 +291,22 @@ def test_metrics_survive_new_tsdb(spark, tmp_path):
                        for r in t3.sql("SHOW QUERIES").collect()}
 
 
+def test_metrics_registry_keeps_newest_finished():
+    """A long-lived server's registry stays bounded: it keeps the newest
+    ``FINISHED_KEPT`` finished entries and every running one."""
+    from yupana_spark.operators.metrics import MetricsRegistry
+
+    reg = MetricsRegistry()
+    running = reg.start("SELECT 'still running'")
+    qids = [reg.start(f"UPSERT {i}") for i in range(reg.FINISHED_KEPT + 50)]
+    for q in qids:
+        reg.finish(q)
+    finished = [m.query_id for m in reg.snapshot() if m.state != "RUNNING"]
+    assert len(finished) <= reg.FINISHED_KEPT
+    assert set(finished) == set(qids[50:])
+    assert reg.get(running).state == "RUNNING"
+
+
 def test_dictionary_ids_ingest_parity(spark, tmp_path):
     """Ingest-time dictionary ids (Dictionary.scala:24-105 insertion
     semantics): the first upsert seeds sorted-value ids for the pre-existing
@@ -529,40 +545,9 @@ def test_compact_max_records_per_file_resplit(wtsdb):
     assert st["files_after"] >= (n + 24) // 25
 
 
-def test_compact_keeps_adhoc_bucket_column(wtsdb):
-    """A table bucketed ad-hoc via write_table(time_col='ts') whose frame
-    ALSO contains a 'time' column must keep its ts-derived buckets across
-    compact(): the bucketing column is read from the write-time BUCKET_PIN
-    sidecar, never re-guessed from the schema (advice r9)."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    wh = wtsdb.warehouse
-    spark = wtsdb.spark
-    df = spark.range(0, 40).select(
-        F.col("id"),
-        F.lit(dt.datetime(1997, 3, 5)).alias("ts"),      # bucket source
-        F.lit(dt.datetime(1995, 7, 1)).alias("time"))    # decoy column
-    wh.write_table("scratch", df, time_col="ts")
-
-    def _parts():
-        return sorted(d for d in os.listdir(wh.path("scratch"))
-                      if d.startswith("__month="))
-
-    before = _parts()
-    assert before and "1997-03" in before[0], before
-    for _ in range(2):                       # pin survives a re-compact too
-        wh.compact("scratch")
-        assert _parts() == before
-    got = sorted(r["id"] for r in wh.read("scratch").collect())
-    assert got == list(range(40))
-
-
 def test_swap_sweeps_leaked_old_dirs(wtsdb, monkeypatch):
     """A failed .old delete must not leak forever: the next write of the
-    table sweeps stale .old.* (and crashed .compact.*) siblings
-    (advice r9)."""
+    table sweeps stale .old.* (and a killed writer's .tmp.*) siblings."""
     import glob
 
     import yupana_spark.operators.writes as W
@@ -582,8 +567,8 @@ def test_swap_sweeps_leaked_old_dirs(wtsdb, monkeypatch):
     leaked = glob.glob(wh.path("orders") + ".old.*")
     assert leaked
     monkeypatch.setattr(W.shutil, "rmtree", real)
-    # also simulate a crashed compact's tmp dir
-    os_stale = wh.path("orders") + ".compact.deadbeef"
+    # also simulate a killed writer's tmp dir
+    os_stale = wh.path("orders") + ".tmp.deadbeef"
     import os
 
     os.makedirs(os_stale, exist_ok=True)
@@ -591,13 +576,40 @@ def test_swap_sweeps_leaked_old_dirs(wtsdb, monkeypatch):
     # .old is always safe (a completed rename's target — never written
     # into), so it sweeps immediately...
     assert not glob.glob(wh.path("orders") + ".old.*")
-    # ...but a YOUNG .compact tmp may be another writer's in-flight job
-    assert glob.glob(wh.path("orders") + ".compact.*")
+    # ...but a YOUNG .tmp dir may be another writer's in-flight job
+    assert glob.glob(wh.path("orders") + ".tmp.*")
     # past the activity horizon the next write sweeps it too
     wh.SWEEP_AGE_S = -1.0
     wh.write_table("orders", src)
-    assert not glob.glob(wh.path("orders") + ".compact.*")
+    assert not glob.glob(wh.path("orders") + ".tmp.*")
     assert wh.read("orders").count() == 50
+
+
+def test_failed_write_leaves_no_sibling(wtsdb, monkeypatch):
+    """A commit that fails while writing its directory removes it: no
+    ``<table>.*`` sibling is left, and the previous snapshot still
+    reads."""
+    import glob
+
+    import yupana_spark.operators.writes as W
+
+    wh = wtsdb.warehouse
+    src = wtsdb.schema.load(wtsdb.spark, wtsdb.sf_dir, "orders").limit(30)
+    wh.write_table("orders", src)
+    before = sorted(map(tuple, wh.read("orders").collect()))
+    real = W._write_dir
+
+    def failing(out, tmp, *a, **k):
+        real(out, tmp, *a, **k)          # files on disk, then a failure
+        raise OSError("simulated disk full")
+
+    monkeypatch.setattr(W, "_write_dir", failing)
+    for commit in (lambda: wh.write_table("orders", src.limit(5)),
+                   lambda: wh.compact("orders")):
+        with pytest.raises(OSError, match="simulated"):
+            commit()
+        assert not glob.glob(wh.path("orders") + ".*")
+        assert sorted(map(tuple, wh.read("orders").collect())) == before
 
 
 # -- snapshot reads: one resolution of a table's files and schema per commit
@@ -633,10 +645,6 @@ def test_schema_pin_equals_inferred_schema(wtsdb):
     check("flat")
     wh.compact("flat")
     check("flat")
-    ts = spark.range(3).select(
-        "id", F.lit(dt.datetime(1997, 3, 5)).alias("ts"))
-    wh.write_table("by_ts", ts, time_col="ts")
-    check("by_ts")
 
 
 def test_snapshot_read_sees_every_commit(wtsdb, spark):

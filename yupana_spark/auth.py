@@ -58,8 +58,6 @@ _ROLE_PERMS: Dict[str, Dict[str, frozenset]] = {
               "queries": frozenset({"read", "write"})},
 }
 
-ROLES = tuple(_ROLE_PERMS)
-
 
 def role_by_name(name: str) -> Optional[str]:
     """Case-insensitive role lookup (TsdbRole.roleByName)."""

@@ -598,17 +598,15 @@ class Tsdb:
         return None
 
     def _load(self, table: str, time_bounds=None):
-        """The table's frame, and whether a time range reaches its scan as
-        a partition filter.  Only then do a statement's WHERE constants
-        go to the parameter row: on any other source the time literals
-        stay in the pushed filter, and so in the generated code, where a
-        parameter row would only add work."""
-        from .operators.writes import BUCKET_COL
-
+        """The table's frame, and whether its WHERE constants go to the
+        parameter row: on a warehouse copy (a copy with ``time`` has
+        month buckets, so its time range reaches the scan as a partition
+        filter) and on a time-sliced fixture.  On any other source the
+        time literals stay in the pushed filter, and so in the generated
+        code, where a parameter row would only add work."""
         wh = self._wh_maybe
         if wh is not None and wh.exists(table):
-            return (wh.read(table, time_bounds=time_bounds),
-                    BUCKET_COL in wh.snapshot(table).columns)
+            return wh.read(table, time_bounds=time_bounds), True
         return (self.schema.load(self.spark, self.sf_dir, table,
                                  time_bounds=time_bounds),
                 self.schema.time_sliced(self.spark, self.sf_dir, table))

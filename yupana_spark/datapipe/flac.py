@@ -137,15 +137,6 @@ class _BitReader:
         return self.pos - self.n // 8
 
 
-_FIXED_COEFS = [
-    [],
-    [1],
-    [2, -1],
-    [3, -3, 1],
-    [4, -6, 4, -1],
-]
-
-
 def _utf8_coded(n: int) -> bytes:
     """FLAC's UTF-8-style frame-number coding (RFC 9639 §9.1.5)."""
     if n < 0x80:

@@ -90,7 +90,7 @@ def build_inverted_index(wh, link: ExternalLink) -> str:
                           F.explode(toks).alias("token"))
              .distinct())
     name = link.name + INDEX_TABLE_SUFFIX
-    wh.write_table(name, index, time_col="")  # no time column
+    wh.write_table(name, index)
     return name
 
 

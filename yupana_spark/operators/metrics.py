@@ -2,7 +2,8 @@
 
 Reference: yupana-core/.../utils/metric/*.scala + model/TsdbQueryMetrics.scala
 (persisted per-stage metrics), QueryEngineRouter.scala:64-118 (dispatch).
-Spark: an in-memory registry for live queries + a parquet-backed
+Spark: an in-memory registry for live queries (and the newest
+``MetricsRegistry.FINISHED_KEPT`` finished ones) + a parquet-backed
 ``MetricsStore`` under the warehouse root so finished metrics survive engine
 restarts (the reference persists TsdbQueryMetrics rows to its KV store the
 same way); ``cancelJobGroup`` for KILL.
@@ -14,6 +15,7 @@ import os
 import threading
 import time
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional
 
@@ -33,9 +35,14 @@ class QueryMetric:
 
 
 class MetricsRegistry:
+    # finished entries kept in memory (the newest ones; each holds its
+    # whole statement text): SHOW QUERIES reads older ones from the store
+    FINISHED_KEPT = 1000
+
     def __init__(self):
         self._lock = threading.Lock()
         self._queries: Dict[str, QueryMetric] = {}
+        self._finished: OrderedDict = OrderedDict()   # qid, in finish order
 
     def start(self, query_text: str) -> str:
         qid = uuid.uuid4().hex[:16]
@@ -56,6 +63,10 @@ class MetricsRegistry:
             if m is not None:
                 m.state = state
                 m.duration = time.time() - m.start_ts
+                self._finished[qid] = None
+                self._finished.move_to_end(qid)
+                while len(self._finished) > self.FINISHED_KEPT:
+                    self._queries.pop(self._finished.popitem(False)[0], None)
 
     def kill(self, spark, qid: str) -> bool:
         """KILL QUERY WHERE query_id = ... -> cancelJobGroup."""
@@ -78,6 +89,7 @@ class MetricsRegistry:
             ]
             for v in victims:
                 del self._queries[v.query_id]
+                self._finished.pop(v.query_id, None)
         return [v.query_id for v in victims]
 
     def get(self, qid: str) -> Optional[QueryMetric]:

@@ -7,7 +7,9 @@ yupana-spark/.../CustomRollup.scala:16-60; recalc windows come from the
 changelog (TsdbBase.scala:415-423).
 
 Spark design: one declarative groupBy/agg job per rollup; output written to
-the warehouse like any table (month buckets).  ``recalculate`` limits the
+the warehouse like any table, through ``Warehouse.write_table``, and read
+back through ``Warehouse.read``: the warehouse's bucket layout is not
+known here.  ``recalculate`` limits the
 AGGREGATION to the rollup buckets the changelog marks dirty and commits
 them once: one ``run_rollup`` over their bucket ranges (adjacent buckets
 merged), whatever the number of dirty buckets, so a clean bucket between
@@ -29,7 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 from .. import expressions as E
 from ..compiler import ExpressionCompiler, _Ctx
 from ..session import rehome
-from .writes import BUCKET_COL, Warehouse
+from .writes import Warehouse
 
 # a [start, end) time range; None leaves that side open
 TimeRange = Tuple[Optional[_dt.datetime], Optional[_dt.datetime]]
@@ -60,22 +62,17 @@ def _within(col, windows, trunc: Optional[str] = None):
     return cond
 
 
-def run_rollup(wh: Warehouse, rollup: Rollup,
-               from_time: Optional[_dt.datetime] = None,
-               to_time: Optional[_dt.datetime] = None, *,
-               windows: Optional[Sequence[TimeRange]] = None) -> DataFrame:
-    """Execute one rollup window and upsert the result into the target table.
+def run_rollup(wh: Warehouse, rollup: Rollup, *,
+               windows: Sequence[TimeRange] = ()) -> DataFrame:
+    """Execute one rollup and write the result into the target table.
 
-    ``windows``, disjoint [start, end) ranges, replaces ``from_time`` and
-    ``to_time``: one commit recomputes every range and keeps the target
-    rows outside them.
+    ``windows``, disjoint [start, end) ranges, limits the run to them: one
+    commit recomputes every range and keeps the target rows outside them.
+    With none, the whole target is recomputed.
 
     The aggregation relies on HashAggregateExec partial/final (the
     reference's fold/combine/postCombine, TsdbBase.scala:241-267).
     """
-    if windows is None:
-        windows = ([] if from_time is None and to_time is None
-                   else [(from_time, to_time)])
     src = wh.read(rollup.from_table)   # on the source table's posture
     if windows:
         src = src.filter(_within(F.col("time"), windows))
@@ -92,8 +89,7 @@ def run_rollup(wh: Warehouse, rollup: Rollup,
         # target rows with time in [date_trunc(start), end) of a window —
         # a range filter, where an anti join on the recomputed bucket
         # times would cost a job of its own
-        existing = rehome(wh.snapshot(rollup.to_table),
-                          src.sparkSession).drop(BUCKET_COL)
+        existing = rehome(wh.read(rollup.to_table), src.sparkSession)
         inside = _within(F.col("time"), windows, rollup.time_trunc)
         kept = existing.filter(~F.coalesce(inside, F.lit(False)))
         merged = kept.unionByName(out)

@@ -5,14 +5,19 @@ Reference: TsdbBase.scala:362-413 (``put(dataPoints)`` upserts cells keyed by
 (``UPSERT INTO t (cols) VALUES ...``), ChangelogDao (update-intervals
 bookkeeping, TsdbBase.scala:415-423).
 
-Spark design: a Warehouse directory holds one parquet dataset per table,
-partitioned by a month-bucket column (``__month``; the schema's
-``rowTimeSpan`` is not used yet).  Upsert = key-based merge (existing rows
+Spark design: a Warehouse directory holds one parquet dataset per table.
+One bucket rule: a table with a ``time`` column is partitioned by
+``__month``, the month of ``time`` (the schema's ``rowTimeSpan`` is not
+used yet); this module is the only one that knows the column, and
+``Warehouse.read`` drops it.  Upsert = key-based merge (existing rows
 whose primary key collides with incoming rows are replaced) implemented as
-``left_anti`` + ``unionByName``; every commit rewrites the WHOLE table into
-a new directory and swaps it in.  On a production lake this maps onto
-Delta/Iceberg MERGE; plain parquet is used here because Delta is not a
-dependency.
+``left_anti`` + ``unionByName``.  One commit path: ``upsert``,
+``write_table``, ``compact`` and the rollups' writes all go through
+``Warehouse._write``, which rewrites the WHOLE table into a
+``<table>.tmp.<hex>`` sibling and swaps it in (a failed write removes the
+sibling; the next commit sweeps ``.old`` dirs and stale ``.tmp`` ones).
+On a production lake this maps onto Delta/Iceberg MERGE; plain parquet is
+used here because Delta is not a dependency.
 
 A steady upsert runs three Spark jobs: one summary action over the
 cached, deduplicated batch (its row count, each dictionary dim's values
@@ -61,14 +66,6 @@ CHANGELOG = "_changelog"
 # sidecar carrying a content-identical rewrite's pre-compact artifact
 # token (compact() writes it; any content-changing write swaps it away)
 TOKEN_PIN = "__token_pin"
-# sidecar recording WHICH column the table's __month buckets derive from
-# (written by every partitioned _write): compact() re-derives buckets
-# from the recorded column only — without provenance it keeps the
-# existing partition values verbatim, so an ad-hoc write_table(
-# time_col='ts') table whose frame also contains the schema-declared
-# time column can never get its buckets silently re-derived from the
-# wrong column (advice r9)
-BUCKET_PIN = "__bucket_pin"
 # sidecar holding the schema a read of the directory would infer (every
 # commit writes it): reads take it instead of running an inference job
 SCHEMA_PIN = "__schema_pin"
@@ -175,15 +172,18 @@ def _read_dir(spark: SparkSession, path: str) -> DataFrame:
 
 def _bucket_overlap(time_bounds):
     """Month buckets that overlap the bounds (inclusively: a superset, the
-    statement's own filter is exact).  The lower bound truncates in Spark,
-    in the session time zone the buckets were cut in."""
+    statement's own filter is exact), as one SQL predicate.  A bound
+    converts to epoch micros as ``F.lit`` would; the lower one truncates
+    in Spark, in the session time zone the buckets were cut in."""
     lo, hi = time_bounds
     conds = []
     if lo is not None:
-        conds.append(F.col(BUCKET_COL) >= F.date_trunc("month", F.lit(lo[0])))
+        conds.append(f"{BUCKET_COL} >= date_trunc('month', timestamp_micros("
+                     f"{T.TimestampType().toInternal(lo[0])}))")
     if hi is not None:
-        conds.append(F.col(BUCKET_COL) <= F.lit(hi[0]))
-    return conds[0] if len(conds) == 1 else conds[0] & conds[1]
+        conds.append(f"{BUCKET_COL} <= timestamp_micros("
+                     f"{T.TimestampType().toInternal(hi[0])})")
+    return F.expr(" AND ".join(conds))
 
 
 def _estimated_bytes(df: DataFrame) -> int:
@@ -424,7 +424,7 @@ class Warehouse:
             # semantics) must be assigned from the PRE-merge state so
             # replays are no-ops
             self._update_dictionaries(t, current, values)
-            self._write(table, merged, t)
+            self._write(table, merged)
             if "time" in incoming.columns:
                 self._log_interval(table, summary[-1])
         finally:
@@ -464,19 +464,17 @@ class Warehouse:
                    .withColumn("time", F.col(t.time_column))
         return self.upsert(table, df)
 
-    def write_table(self, table: str, df: DataFrame,
-                    time_col: str = "time") -> None:
-        """Full (re)write, partitioned by month bucket."""
-        t = self.schema.tables.get(table)
-        self._write(table, df, t, time_col=time_col)
+    def write_table(self, table: str, df: DataFrame) -> None:
+        """Full (re)write of ``table`` (month buckets of ``time``)."""
+        self._write(table, df)
 
     # -- persisted dictionaries (Dictionary.scala:24-105) --------------------
     DICT_CAP = 100_000  # beyond this a dim is not dictionary-shaped
     # largest estimated batch size whose dictionary values the upsert's
     # summary action gathers (a steady 200-row UPSERT is ~10 KB)
     SUMMARY_VALUES_BYTES = 4 << 20
-    # stale .old/.compact siblings younger than this are presumed to be
-    # another writer's in-flight work and left alone by the sweep
+    # stale .tmp siblings younger than this are presumed to be another
+    # writer's in-flight work and left alone by the sweep
     SWEEP_AGE_S = 3600.0
 
     def dict_path(self, table: str, dim: str) -> str:
@@ -555,19 +553,30 @@ class Warehouse:
             }), path)
 
     # -- internals ---------------------------------------------------------------
-    def _write(self, table: str, df: DataFrame, t: Optional[Table],
-               time_col: str = "time") -> None:
-        tmp = self.path(table) + "." + uuid.uuid4().hex[:8]
-        if time_col in df.columns:
+    def _write(self, table: str, df: DataFrame, max_records_per_file: int = 0,
+               token: Optional[str] = None) -> None:
+        """The one commit: write ``df`` to a ``<table>.tmp.<hex>`` sibling
+        and swap it in as ``table``.  A frame with ``time`` is bucketed by
+        month of ``time`` (a ``__month`` it already has is kept, so a
+        re-layout does not re-cut buckets); ``token`` pins the artifact
+        token of a content-identical rewrite.  A write that fails before
+        the swap removes its sibling."""
+        tmp = f"{self.path(table)}.tmp.{uuid.uuid4().hex[:8]}"
+        if "time" in df.columns and BUCKET_COL not in df.columns:
             # month buckets: coarse enough to avoid small-file explosion at
             # test scale; Table.row_time_span_days is not used yet
-            _write_dir(df.withColumn(BUCKET_COL,
-                                     F.date_trunc("month", F.col(time_col))),
-                       tmp, [BUCKET_COL])
-            with open(os.path.join(tmp, BUCKET_PIN), "w") as f:
-                f.write(time_col)
-        else:
-            _write_dir(df, tmp)
+            df = df.withColumn(BUCKET_COL,
+                               F.date_trunc("month", F.col("time")))
+        try:
+            _write_dir(df, tmp,
+                       [BUCKET_COL] if BUCKET_COL in df.columns else [],
+                       max_records_per_file)
+            if token is not None:
+                with open(os.path.join(tmp, TOKEN_PIN), "w") as f:
+                    f.write(token)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         self._swap_and_invalidate(table, tmp)
 
     def _swap_and_invalidate(self, table: str, tmp: str) -> None:
@@ -586,17 +595,17 @@ class Warehouse:
 
         final = self.path(table)
         # opportunistic sweep: a failed delete below leaks the `.old` dir
-        # (and a crashed compact leaks its `.compact` tmp) — without this
-        # repeated compact/upsert cycles would accumulate full table
-        # copies inside the warehouse forever (advice r9).
+        # (and a killed writer leaks its `.tmp` dir) — without this
+        # repeated commits would accumulate full table copies inside the
+        # warehouse forever.
         # * `.old.*` dirs are ALWAYS safe to sweep: they are the target
         #   of a completed rename and nothing ever writes into one.
-        # * `.compact.*` may be another writer's IN-FLIGHT job, and the
+        # * `.tmp.*` may be another writer's IN-FLIGHT job, and the
         #   top-level mtime freezes at job start (Spark tasks write under
         #   _temporary/) — so the age guard uses the NEWEST mtime in the
-        #   tree (review r10: task/attempt churn keeps updating deep
-        #   entries while the job lives; a crashed job's tree goes quiet
-        #   and ages past the horizon).
+        #   tree (task/attempt churn keeps updating deep entries while the
+        #   job lives; a crashed job's tree goes quiet and ages past the
+        #   horizon).
         import time as _time
 
         horizon = _time.time() - self.SWEEP_AGE_S
@@ -617,9 +626,8 @@ class Warehouse:
             return newest
 
         for stale in _glob.glob(final + ".old.*"):
-            if stale != tmp:
-                shutil.rmtree(stale, ignore_errors=True)
-        for stale in _glob.glob(final + ".compact.*"):
+            shutil.rmtree(stale, ignore_errors=True)
+        for stale in _glob.glob(final + ".tmp.*"):
             if stale != tmp and _last_activity(stale) <= horizon:
                 shutil.rmtree(stale, ignore_errors=True)
         old = None
@@ -673,54 +681,17 @@ class Warehouse:
         before = _nfiles()
         pinned = self.table_token(table)   # content-identical: keep it
         df = rehome(self.snapshot(table), self.session_for(table))
-        # the bucket column is whatever _write RECORDED at write time
-        # (BUCKET_PIN sidecar) — never re-derived from the schema: a
-        # table written ad-hoc via write_table(time_col='ts') whose frame
-        # also contains the schema-declared time column must keep its ts
-        # buckets (advice r9)
-        tcol = None
-        pin_path = os.path.join(path, BUCKET_PIN)
-        if os.path.exists(pin_path):
-            with open(pin_path) as f:
-                tcol = f.read().strip()
-        if BUCKET_COL in df.columns and tcol and tcol in df.columns:
+        if BUCKET_COL in df.columns:
             # one shuffle partition per bucket -> one file per partition
             # dir (AQE coalesces the empty ones); rows time-sorted inside
             # each file so parquet row-group min/max stats prune literal
             # time filters (a recalc's bucket ranges) tighter than the
-            # month bucket alone
+            # month bucket alone.  The bucket values are kept as they are
             out = (df.repartition(F.col(BUCKET_COL))
-                   .sortWithinPartitions(tcol).drop(BUCKET_COL)
-                   .withColumn(BUCKET_COL,
-                               F.date_trunc("month", F.col(tcol))))
-        elif BUCKET_COL in df.columns:
-            # bucketed but provenance unknown (no sidecar — a pre-existing
-            # dir): keep the existing partition values VERBATIM instead of
-            # guessing a derivation column — but still time-sort inside
-            # each file when the schema declares a present time column
-            # (sorting cannot change bucket values, only row-group min/max
-            # pruning; review r10 — the pre-pin fallback used to re-derive
-            # AND sort, re-deriving was the bug, sorting was not)
-            t = self.schema.tables.get(table)
-            sort_col = t.time_column if t is not None else "time"
-            if sort_col not in df.columns and "time" in df.columns:
-                sort_col = "time"
-            out = df.repartition(F.col(BUCKET_COL))
-            if sort_col in df.columns:
-                out = out.sortWithinPartitions(sort_col)
+                   .sortWithinPartitions("time"))
         else:
             out = df.coalesce(1)
-        tmp = path + ".compact." + uuid.uuid4().hex[:8]
-        _write_dir(out, tmp,
-                   [BUCKET_COL] if BUCKET_COL in df.columns else [],
-                   max_records_per_file)
-        with open(os.path.join(tmp, TOKEN_PIN), "w") as f:
-            f.write(pinned)
-        if tcol and BUCKET_COL in df.columns:
-            # provenance survives the re-layout for the NEXT compact
-            with open(os.path.join(tmp, BUCKET_PIN), "w") as f:
-                f.write(tcol)
-        self._swap_and_invalidate(table, tmp)
+        self._write(table, out, max_records_per_file, token=pinned)
         return {"files_before": before, "files_after": _nfiles()}
 
     def _log_interval(self, table: str, days: Sequence[int]) -> None:

@@ -17,10 +17,10 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
-from functools import reduce
 from typing import Callable, Dict, Optional, Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import (Column, DataFrame, SparkSession, functions as F,
+                         types as T)
 
 from . import memo, types as yt
 from .session import ensure_engine_confs
@@ -303,8 +303,6 @@ class Schema:
         """
         t = self.table(name)
         df = self._source(spark, sf_dir, t)
-        from pyspark.sql import types as T
-
         tcol_type = df.schema[t.time_column].dataType
         sliced = SLICE_LO in df.columns
         if sliced:
@@ -342,12 +340,12 @@ class Schema:
 
 def _slice_overlap(time_bounds) -> Column:
     """Slices whose [__tmin, __tmax] overlaps the bounds (inclusively: a
-    superset, the statement's own filter is exact).  The bounds convert
-    in Spark, as the statement's time literals do."""
+    superset, the statement's own filter is exact), as one SQL
+    predicate.  A bound converts to epoch micros as ``F.lit`` would."""
     lo, hi = time_bounds
     conds = []
     if lo is not None:
-        conds.append(F.col(SLICE_HI) >= F.unix_micros(F.lit(lo[0])))
+        conds.append(f"{SLICE_HI} >= {T.TimestampType().toInternal(lo[0])}")
     if hi is not None:
-        conds.append(F.col(SLICE_LO) <= F.unix_micros(F.lit(hi[0])))
-    return reduce(lambda a, b: a & b, conds)
+        conds.append(f"{SLICE_LO} <= {T.TimestampType().toInternal(hi[0])}")
+    return F.expr(" AND ".join(conds))

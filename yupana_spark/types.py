@@ -52,7 +52,6 @@ def element_type(t: str) -> str:
 
 INTEGRAL = (BYTE, SHORT, INT, LONG)
 NUMERIC = INTEGRAL + (DOUBLE, DECIMAL)
-ORDERED = NUMERIC + (STRING, TIMESTAMP, CURRENCY, BYTE)
 
 _LADDER = {BYTE: 1, SHORT: 2, INT: 3, LONG: 4, DECIMAL: 5}
 
@@ -82,28 +81,6 @@ def spark_type(t: str) -> T.DataType:
         PERIOD: T.DayTimeIntervalType(),
         NULL: T.NullType(),
     }[t]
-
-
-def from_spark_type(st: T.DataType) -> str:
-    if isinstance(st, T.ArrayType):
-        return array_of(from_spark_type(st.elementType))
-    if isinstance(st, T.DecimalType):
-        # convention from FIXTURES.md: Decimal(18,2) columns are CURRENCY
-        return CURRENCY if (st.precision, st.scale) == (18, 2) else DECIMAL
-    return {
-        T.ByteType(): BYTE,
-        T.ShortType(): SHORT,
-        T.IntegerType(): INT,
-        T.LongType(): LONG,
-        T.DoubleType(): DOUBLE,
-        T.FloatType(): DOUBLE,
-        T.StringType(): STRING,
-        T.TimestampType(): TIMESTAMP,
-        T.BooleanType(): BOOLEAN,
-        T.BinaryType(): BLOB,
-        T.NullType(): NULL,
-        T.DateType(): TIMESTAMP,
-    }.get(st, STRING)
 
 
 def base(t: str) -> str:
